@@ -15,6 +15,9 @@ Semantics preserved from the reference:
   the mean (queries.sql:68-75).
 - cohort_month is a DATE (DuckDB date_trunc('month', DATE) → DATE):
   F.trunc, not F.date_trunc which returns TIMESTAMP.
+- Rounded ratios go through ``round_duckdb`` (DuckDB's scale-then-round),
+  not ``F.round``, which rounds the shortest decimal text and differs
+  from DuckDB on inexact half-way ties such as 57/800.
 
 Scale: every query is one shuffle (groupBy its key) or a window over
 a partitioned key; sums over whole-euro DOUBLE amounts are exact in
@@ -25,6 +28,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from duckdb_data_eng_proj_spark.functions import round_duckdb
+
 
 def _approved_1() -> F.Column:
     return F.when(F.col("status") == "approved", 1).otherwise(0)
@@ -60,13 +66,13 @@ def q1_portfolio_overview(portfolio: DataFrame) -> DataFrame:
         .agg(
             F.count("*").alias("total_applications"),
             F.sum(_approved_1()).cast("int").alias("approved_applications"),
-            F.round(
+            round_duckdb(
                 F.lit(1.0) * F.sum(_approved_1()) / F.nullif(F.count("*"), F.lit(0)), 4
             ).alias("approval_rate"),
             F.round(F.sum(F.coalesce(approved_amt, F.lit(0.0))), 2).alias(
                 "total_approved_loan_volume"
             ),
-            F.round(F.avg(approved_amt), 2).alias("avg_approved_loan_size"),
+            round_duckdb(F.avg(approved_amt), 2).alias("avg_approved_loan_size"),
         )
         .orderBy("cohort_month", "installation_type")
     )
@@ -114,7 +120,7 @@ def q3_delinquency_by_installer(portfolio: DataFrame) -> DataFrame:
         .agg(
             F.count("*").alias("total_loans"),
             F.sum(delinquent_1).alias("delinquent_loans"),
-            F.round(
+            round_duckdb(
                 F.lit(1.0) * F.sum(delinquent_1) / F.nullif(F.count("*"), F.lit(0)), 4
             ).alias("delinquency_rate"),
         )
@@ -133,7 +139,7 @@ def q4_cohort_dpd_rates(portfolio: DataFrame) -> DataFrame:
 
     def rate(days: int) -> F.Column:
         hit = F.when(F.col("days_past_due") >= days, 1).otherwise(0)
-        return F.round(
+        return round_duckdb(
             F.lit(1.0) * F.sum(hit) / F.nullif(F.count("*"), F.lit(0)), 4
         ).alias(f"dpd_{days}_rate")
 
@@ -165,7 +171,7 @@ def q5_monthly_volume_share(portfolio: DataFrame) -> DataFrame:
         .agg(F.round(F.sum("approved_amt"), 2).alias("approved_loan_volume"))
     )
     w = Window.partitionBy("cohort_month")
-    share = F.round(
+    share = round_duckdb(
         F.col("approved_loan_volume")
         / F.nullif(F.sum("approved_loan_volume").over(w), F.lit(0.0)),
         4,

@@ -10,9 +10,11 @@ Reference behavior being reproduced (cited per stage):
 Architecture is NOT a translation: each stage is a pure
 DataFrame-in/DataFrame-out function, composed lazily so Catalyst sees
 the whole plan (predicate pushdown through every stage; the tiny dupe
-tables broadcast into their flag joins). The two stages consumed by
-multiple downstream readers are cached, mirroring the reference's
-table materialization boundaries without forcing extra I/O.
+tables broadcast into their flag joins). The four stages the reference
+writes as tables and later stages read — the two cleaned tables, the
+portfolio and the quality report — are cached, so each is computed
+once per run (the export and q0–q5 read the cached portfolio and
+report) without forcing extra I/O.
 
 Scale notes (100 TB design point):
 - Dupe tables come from a group/having on the key — the output is
@@ -20,9 +22,9 @@ Scale notes (100 TB design point):
   broadcast-hash, never shuffles of the big side.
 - The apps⟕LMS fan-out join shuffles on application_id; AQE skew
   handling covers hot keys (one customer with thousands of updates).
-- The quality report is a global aggregate: partial (map-side)
-  aggregation reduces each partition to one row of counters before a
-  single 1-row exchange; the problematic-id list is the only
+- The quality report is one global aggregate per input table: partial
+  (map-side) aggregation reduces each partition to one row of counters
+  before a single 1-row exchange; the problematic-id set is the only
   collect-like structure and is bounded by the number of *bad* rows.
 
 Determinism (SURVEY.md G5): ``run_ts`` / ``as_of_date`` inject the
@@ -417,71 +419,54 @@ def build_loan_portfolio(
 # ---------------------------------------------------------------------------
 
 
+def _flag_counts(df: DataFrame, names: list[str], prefix: str, count: str) -> DataFrame:
+    """One global aggregate over a cleaned table: its row count, one sum
+    per flag, the set of ids flagged by any check and whether a flagged
+    row has a NULL id (``__<prefix>_ids`` / ``__<prefix>_null``)."""
+    flagged = F.lit(False)
+    for n in names:
+        flagged = flagged | F.coalesce(F.col(f"flag_{n}"), F.lit(False))
+    app_id = F.col("application_id")
+    return df.agg(
+        F.count("*").alias(count),
+        *[F.sum(F.col(f"flag_{n}").cast("int")).alias(f"{prefix}_{n}") for n in names],
+        F.collect_set(F.when(flagged, app_id)).alias(f"__{prefix}_ids"),
+        F.max(flagged & app_id.isNull()).alias(f"__{prefix}_null"),
+    )
+
+
 def build_quality_report(
     cleaned_apps: DataFrame,
     lms_cleaned: DataFrame,
     quarantined: DataFrame,
     run_ts: dt.datetime | None = None,
 ) -> DataFrame:
-    def flag_sum(name: str, alias: str) -> F.Column:
-        return F.sum(F.col(f"flag_{name}").cast("int")).alias(alias)
-
-    app_counts = cleaned_apps.agg(
-        F.count("*").alias("applications_processed"),
-        *[flag_sum(n, f"app_{n}") for n in APP_FLAG_NAMES],
+    """One global aggregate per input table, cross-joined as 1-row
+    frames. The id list is DuckDB's ``array_agg`` over the sorted union
+    of flagged ids: NULL kept once at the end (collect_set drops it, so
+    it is re-appended from the NULL bits), and the list itself NULL
+    when no row is flagged."""
+    report = (
+        _flag_counts(cleaned_apps, APP_FLAG_NAMES, "app", "applications_processed")
+        .crossJoin(_flag_counts(lms_cleaned, LMS_FLAG_NAMES, "lms", "lms_processed"))
+        .crossJoin(quarantined.agg(F.count("*").alias("quarantined_applications")))
     )
-    lms_counts = lms_cleaned.agg(
-        F.count("*").alias("lms_processed"),
-        *[flag_sum(n, f"lms_{n}") for n in LMS_FLAG_NAMES],
-    )
-    quarantine_counts = quarantined.agg(F.count("*").alias("quarantined_applications"))
-
-    def any_flag(names: list[str]) -> F.Column:
-        cond = F.lit(False)
-        for n in names:
-            cond = cond | F.coalesce(F.col(f"flag_{n}"), F.lit(False))
-        return cond
-
+    ids = F.array_sort(F.array_union(F.col("__app_ids"), F.col("__lms_ids")))
+    has_null = F.col("__app_null") | F.col("__lms_null")
     problem_ids = (
-        cleaned_apps.filter(any_flag(APP_FLAG_NAMES))
-        .select("application_id")
-        .distinct()
-        .union(
-            lms_cleaned.filter(any_flag(LMS_FLAG_NAMES))
-            .select("application_id")
-            .distinct()
-        )
-        .distinct()
-    )
-    # DuckDB's array_agg keeps NULL elements (the golden list ends with
-    # NULL); Spark's collect_list drops them — re-append explicitly.
-    ids_agg = problem_ids.agg(
-        F.array_sort(F.collect_list("application_id")).alias("__ids"),
-        F.coalesce(
-            F.max(F.when(F.col("application_id").isNull(), True).otherwise(False)),
-            F.lit(False),
-        ).alias("__has_null"),
-    ).select(
-        F.when(
-            F.col("__has_null"),
-            F.concat(F.col("__ids"), F.array(F.lit(None).cast("string"))),
-        )
-        .otherwise(F.col("__ids"))
+        F.when(has_null, F.concat(ids, F.array(F.lit(None).cast("string"))))
+        .when(F.size(ids) > 0, ids)
         .alias("problematic_application_ids")
     )
-
-    report = (
-        app_counts.crossJoin(lms_counts)
-        .crossJoin(quarantine_counts)
-        .crossJoin(ids_agg)
+    return report.select(
+        "applications_processed",
+        "quarantined_applications",
+        "lms_processed",
+        *[f"app_{n}" for n in APP_FLAG_NAMES],
+        *[f"lms_{n}" for n in LMS_FLAG_NAMES],
+        problem_ids,
+        _processed_at(run_ts).alias("processed_at"),
     )
-    ordered = (
-        ["applications_processed", "quarantined_applications", "lms_processed"]
-        + [f"app_{n}" for n in APP_FLAG_NAMES]
-        + [f"lms_{n}" for n in LMS_FLAG_NAMES]
-        + ["problematic_application_ids"]
-    )
-    return report.select(*ordered, _processed_at(run_ts).alias("processed_at"))
 
 
 # ---------------------------------------------------------------------------
@@ -513,9 +498,11 @@ def run_pipeline(
     as_of_date: dt.date | None = None,
     cache: bool = True,
 ) -> PipelineResult:
-    """Compose the five stages lazily; cache the two multi-consumer
-    stages (cleaned_applications, lms_cleaned) like the reference's
-    materialized tables."""
+    """Compose the five stages lazily. With ``cache`` (the default),
+    the four stages that later stages, the export and q0–q5 read —
+    cleaned_applications, lms_cleaned, loan_portfolio and
+    data_quality_report — are cached, the reference's materialized
+    tables: each is computed once per run instead of once per reader."""
     raw_apps = load_raw_applications(spark, apps_csv)
     raw_lms = load_raw_lms(spark, lms_csv)
 
@@ -536,6 +523,9 @@ def run_pipeline(
     )
     portfolio = build_loan_portfolio(cleaned_apps, lms_cleaned, as_of_date)
     report = build_quality_report(cleaned_apps, lms_cleaned, bad, run_ts)
+    if cache:
+        portfolio = portfolio.cache()
+        report = report.cache()
 
     return PipelineResult(
         raw_applications=raw_apps,

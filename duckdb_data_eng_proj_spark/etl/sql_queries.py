@@ -12,6 +12,10 @@ marked inline:
   (queries.sql:13-14).
 - ``1.0 * x`` promotes to DOUBLE in DuckDB but DECIMAL in Spark SQL
   → the double literal is written ``1.0D`` (queries.sql:51,139,172…).
+- ``ROUND(ratio, d)`` rounds the double's shortest decimal text in
+  Spark but ``ratio * 10^d`` in DuckDB → ratios are written
+  ``ROUND(ratio * 10^d, 0) / 10^d``, the SQL spelling of
+  ``functions.round_duckdb``.
 - Everything else (NOT IN null-aware subquery, CASE aggregation,
   NULLIF, window) parses and evaluates identically.
 
@@ -46,11 +50,11 @@ SELECT cohort_month, installation_type,
   CAST(SUM(CASE WHEN status = 'approved' THEN 1 ELSE 0 END) AS INTEGER)
     AS approved_applications,
   ROUND(1.0D * SUM(CASE WHEN status = 'approved' THEN 1 ELSE 0 END)
-    / NULLIF(COUNT(*), 0), 4) AS approval_rate,
+    / NULLIF(COUNT(*), 0) * 10000, 0) / 10000 AS approval_rate,
   ROUND(SUM(CASE WHEN status = 'approved' THEN loan_amount_eur ELSE 0 END), 2)
     AS total_approved_loan_volume,
-  ROUND(AVG(CASE WHEN status = 'approved' THEN loan_amount_eur END), 2)
-    AS avg_approved_loan_size
+  ROUND(AVG(CASE WHEN status = 'approved' THEN loan_amount_eur END) * 100, 0)
+    / 100 AS avg_approved_loan_size
 FROM base
 GROUP BY cohort_month, installation_type
 ORDER BY cohort_month, installation_type
@@ -79,7 +83,7 @@ WITH disbursed_loans AS (
 SELECT installer_partner_id, COUNT(*) AS total_loans,
   SUM(CASE WHEN days_past_due > 30 THEN 1 ELSE 0 END) AS delinquent_loans,
   ROUND(1.0D * SUM(CASE WHEN days_past_due > 30 THEN 1 ELSE 0 END)
-    / NULLIF(COUNT(*), 0), 4) AS delinquency_rate
+    / NULLIF(COUNT(*), 0) * 10000, 0) / 10000 AS delinquency_rate
 FROM disbursed_loans
 GROUP BY installer_partner_id
 ORDER BY delinquency_rate DESC, total_loans DESC
@@ -94,11 +98,11 @@ WITH disbursed_loans AS (
 )
 SELECT cohort_month, COUNT(*) AS total_loans,
   ROUND(1.0D * SUM(CASE WHEN days_past_due >= 30 THEN 1 ELSE 0 END)
-    / NULLIF(COUNT(*), 0), 4) AS dpd_30_rate,
+    / NULLIF(COUNT(*), 0) * 10000, 0) / 10000 AS dpd_30_rate,
   ROUND(1.0D * SUM(CASE WHEN days_past_due >= 60 THEN 1 ELSE 0 END)
-    / NULLIF(COUNT(*), 0), 4) AS dpd_60_rate,
+    / NULLIF(COUNT(*), 0) * 10000, 0) / 10000 AS dpd_60_rate,
   ROUND(1.0D * SUM(CASE WHEN days_past_due >= 90 THEN 1 ELSE 0 END)
-    / NULLIF(COUNT(*), 0), 4) AS dpd_90_rate
+    / NULLIF(COUNT(*), 0) * 10000, 0) / 10000 AS dpd_90_rate
 FROM disbursed_loans
 GROUP BY cohort_month
 ORDER BY cohort_month DESC
@@ -117,8 +121,8 @@ WITH monthly_volume AS (
 )
 SELECT cohort_month, installation_type, approved_loan_volume,
   ROUND(approved_loan_volume / NULLIF(
-    SUM(approved_loan_volume) OVER (PARTITION BY cohort_month), 0), 4)
-    AS monthly_volume_share
+    SUM(approved_loan_volume) OVER (PARTITION BY cohort_month), 0) * 10000, 0)
+    / 10000 AS monthly_volume_share
 FROM monthly_volume
 ORDER BY cohort_month, installation_type
 """

@@ -7,5 +7,6 @@ from duckdb_data_eng_proj_spark.functions.clock import (  # noqa: F401
 from duckdb_data_eng_proj_spark.functions.scalars import (  # noqa: F401
     month_boundary_diff,
     null_or_blank,
+    round_duckdb,
     try_int_duckdb,
 )

@@ -23,6 +23,20 @@ def try_int_duckdb(c: Column) -> Column:
     return F.round(c.try_cast("double"), 0).try_cast("int")
 
 
+def round_duckdb(c: Column, d: int) -> Column:
+    """DuckDB ``round(x, d)`` on a DOUBLE: scale by 10^d, round half
+    away from zero on that binary product, scale back.
+
+    ``F.round(x, d)`` instead rounds half-up from the double's shortest
+    decimal text, so an inexact tie splits the engines: 57/800 is
+    0.07125 as text (Spark → 0.0713) but 712.4999… as 57/800·10^4
+    (DuckDB → 0.0712). Rounding the scaled value to 0 decimals is the
+    same on both engines: below 2^52 a double whose shortest text ends
+    in .5 is exactly k + 0.5 (tests/test_round_fuzz.py)."""
+    scale = 10**d
+    return F.round(c * scale, 0) / scale
+
+
 def exact_units(c: Column, scale: int = 100) -> Column:
     """Exact integer units (cents for scale=100) of a fixed-point
     double, as BIGINT: ``cast(c*scale + signum*0.5 as long)``.

@@ -104,7 +104,7 @@ _LCS_POS_SQL = (
         "candidate-pruned trigram-position table that feeds the "
         "(broadcast-join) match relation. At 100 TB "
         "every stage is candidate-bounded: inverted-index join, "
-        "broadcast match fan-out, one (pair, diag)-keyed window "
+        "broadcast match fan-out, one (doc_a, doc_b)-keyed window "
         "shuffle. Output: pairs sharing a run of "
         f">= {_LCS_MIN} tokens, ranked longest-first."
     ),

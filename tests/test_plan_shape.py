@@ -1016,3 +1016,73 @@ def test_perceptron_mistake_join_never_broadcast(spark):
     assert joins_under_broadcast(df) == [], (
         "a Join executes inside a BroadcastExchange subtree"
     )
+
+
+def _cached_scans(df, tables: dict) -> list[tuple[object, set[str]]]:
+    """(node, names of the cached ``tables`` its subtree scans) for every
+    node of ``df``'s executed plan; asserts every leaf is an
+    InMemoryTableScan."""
+    from duckdb_data_eng_proj_spark.plans import walk_physical
+
+    cache = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    builders = {}
+    for name, t in tables.items():
+        cached = cache.lookupCachedData(t._jdf)
+        assert cached.isDefined(), f"{name} is not cached"
+        builders[name] = cached.get().cachedRepresentation().cacheBuilder()
+
+    def scanned(node) -> set[str]:
+        names: set[str] = set()
+        for n in walk_physical(node):
+            if n.nodeName() == "InMemoryTableScan":
+                builder = n.relation().cacheBuilder()
+                names |= {name for name, b in builders.items() if b == builder}
+            else:
+                assert n.children().size() or "AdaptiveSparkPlan" in n.nodeName(), (
+                    f"leaf {n.nodeName()} is not a cached-table scan"
+                )
+        return names
+
+    return [(n, scanned(n)) for n in walk_physical(df._jdf.queryExecution().executedPlan())]
+
+
+def test_etl_readers_scan_the_materialized_stages(spark, tmp_path):
+    """run_pipeline materializes the portfolio and the quality report:
+    q1–q5 and the export frames read them through InMemoryTableScan and
+    never re-run the apps ⟕ LMS join, and q0 never re-aggregates the
+    cleaned tables to rebuild the report's id list."""
+    from duckdb_data_eng_proj_spark.etl.analytics import ANALYTICS
+    from duckdb_data_eng_proj_spark.etl.export import _render_array_columns
+    from tests.test_quality_report_laws import app_row, lms_row, pipeline_on
+
+    p = pipeline_on(
+        spark,
+        tmp_path,
+        [app_row("APP001"), app_row("APP002", credit_score="900"), app_row("")],
+        [lms_row("L001", "APP001"), lms_row("L002", "APP002")],
+    )
+    tables = {
+        "cleaned_applications": p.cleaned_applications,
+        "lms_cleaned": p.lms_cleaned,
+        "loan_portfolio": p.loan_portfolio,
+        "data_quality_report": p.data_quality_report,
+    }
+    readers = {
+        q: (ANALYTICS[q](p.loan_portfolio), {"loan_portfolio"})
+        for q in ("q1", "q2", "q3", "q4", "q5")
+    }
+    readers.update({
+        f"export.{name}": (_render_array_columns(tables[name]), {name})
+        for name in ("cleaned_applications", "loan_portfolio", "data_quality_report")
+    })
+    for label, (df, want) in readers.items():
+        nodes = _cached_scans(df, tables)
+        assert set().union(*(s for _, s in nodes)) == want, label
+        joins = [n.nodeName() for n, _ in nodes if "Join" in n.nodeName()]
+        assert not joins, (label, joins)
+
+    q0 = ANALYTICS["q0"](p.loan_portfolio, p.data_quality_report)
+    nodes = _cached_scans(q0, tables)
+    assert set().union(*(s for _, s in nodes)) == {"loan_portfolio", "data_quality_report"}
+    aggregates = [s for n, s in nodes if "Aggregate" in n.nodeName()]
+    assert aggregates and all(s == {"data_quality_report"} for s in aggregates), aggregates
