@@ -189,6 +189,12 @@ def _near_dup_pairs(
     else:  # pragma: no cover - no current caller; exact double form
         union_ = F.size(F.col("bg_a")) + F.size(F.col("bg_b")) - inter
         qual = (inter.cast("double") / union_) >= F.lit(threshold)
+    # Skew caveat: the Jaccard filter runs after this join, so every
+    # unverified candidate pair carries its bg_b array through the
+    # doc_a-keyed exchange. A hub document (one that shares a bucket
+    # with many others) sends all its candidates to one partition, and
+    # that pair stream can outweigh what dropping bg from the band
+    # table's probe side saves.
     verified = pairs0.join(bga, "doc_a").filter(qual)
     if keep_sizes:
         union_ = F.size(F.col("bg_a")) + F.size(F.col("bg_b")) - inter

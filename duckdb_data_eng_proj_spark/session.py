@@ -9,7 +9,8 @@ Scale posture (100 TB design point, tested on local[N]):
 - AQE on: runtime partition coalescing, skew-join splitting, and
   dynamic join-strategy demotion replace hand-tuned physical plans.
 - ``spark.sql.shuffle.partitions`` defaults to 2×cores locally; on a
-  real cluster this is overridden (AQE coalesces down anyway).
+  real cluster this is overridden (AQE coalesces down anyway). The
+  latency profile (AQE off) uses min(16, 2×cores); see ``shuffle_width``.
 - UTC session timezone so timestamp semantics are stable regardless of
   host zone (the reference pins Europe/Berlin only for the
   ``processed_at`` audit column — that stays an explicit expression,
@@ -38,6 +39,18 @@ def scan_split_bytes(input_bytes: int, cpus: int) -> int:
     return max(512 * 1024, min(128 * 1024 * 1024, target))
 
 
+def shuffle_width(cpus: int, latency_profile: bool) -> int:
+    """Default ``spark.sql.shuffle.partitions`` for ``cpus`` task slots.
+
+    Both profiles run two tasks per slot, so a shuffle stage runs in
+    at most two waves. The latency profile has AQE off, so nothing
+    coalesces its width at runtime; it caps at 16 because at sub-GB
+    inputs more tasks only add per-task scheduling cost.
+    """
+    width = 2 * cpus
+    return min(16, width) if latency_profile else width
+
+
 def get_spark(
     app_name: str = "duckdb-data-eng-proj-spark",
     cpus: int | str | None = None,
@@ -49,6 +62,8 @@ def get_spark(
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS then 32 (driver contract).
     ``input_bytes`` (optional) auto-sizes the parquet scan split.
+    ``shuffle_partitions`` defaults to ``shuffle_width``: 2×cores, or
+    min(16, 2×cores) under the latency profile.
     ``latency_profile`` tunes for small-input interactive latency:
     AQE's per-query-stage materialization costs ~100 ms/query and only
     pays off when runtime stats change the plan — for sub-GB inputs it
@@ -59,7 +74,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     cpus = int(cpus)
     if shuffle_partitions is None:
-        shuffle_partitions = 16 if latency_profile else max(cpus, 2 * cpus)
+        shuffle_partitions = shuffle_width(cpus, latency_profile)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -16,6 +16,7 @@ import math
 import pytest
 
 from duckdb_data_eng_proj_spark.queries import REGISTRY
+from perfbench.workloads import LSH_DEDUP_OPS
 from tests.conftest import SF_DIR
 
 
@@ -44,8 +45,7 @@ def _normalize_rows(rows, colnames):
     return sorted(tuple(_norm(r[i]) for i in order) for r in rows)
 
 
-@pytest.mark.parametrize("qid", sorted(REGISTRY))
-def test_query_matches_oracle(qid, spark, oracle_con):
+def _assert_matches_oracle(qid, spark, oracle_con):
     spec = REGISTRY[qid]
     df = spec.fn(spark, SF_DIR)
     spark_rows = df.collect()
@@ -71,3 +71,32 @@ def test_query_matches_oracle(qid, spark, oracle_con):
     if s_norm != d_norm:
         diffs = [(a, b) for a, b in zip(s_norm, d_norm) if a != b][:5]
         raise AssertionError(f"{qid}: value mismatch, first diffs: {diffs}")
+
+
+@pytest.mark.parametrize("qid", sorted(REGISTRY))
+def test_query_matches_oracle(qid, spark, oracle_con):
+    _assert_matches_oracle(qid, spark, oracle_con)
+
+
+@pytest.fixture(params=[4, 16], ids=lambda n: f"width{n}")
+def latency_profile(spark, request):
+    """The shared session switched to the latency profile's SQL settings
+    (AQE off, a fixed shuffle width) for one test, then restored. The
+    profile's other settings are context-level and cannot change on a
+    live session; they do not change results."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    saved = {k: spark.conf.get(k) for k in keys}
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set("spark.sql.shuffle.partitions", str(request.param))
+        yield spark
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+@pytest.mark.parametrize("qid", LSH_DEDUP_OPS)
+def test_lsh_dedup_op_matches_oracle_under_latency_profile(qid, latency_profile, oracle_con):
+    """The benchmark runs these ops under the latency profile; the test
+    above only checks the default (AQE) profile."""
+    _assert_matches_oracle(qid, latency_profile, oracle_con)
