@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100
+from duckdb_data_eng_proj_spark.operators.lsh import BUCKET_COLS, band_table, first_match
 from duckdb_data_eng_proj_spark.queries.registry import register
 from duckdb_data_eng_proj_spark.queries.training import (
     _LANG_PRED_SQL,
@@ -70,7 +71,8 @@ def _state_sized_shuffle(spark: SparkSession, state_rows: int, rows_per_part: in
 # gap to the threshold is >= 1/(k*u), ~1e10x the double rounding
 # error, so the two predicates select identical pair sets. The oracle
 # keeps its double form; only the Spark-side selection expression is
-# rewritten.
+# rewritten. _near_dup_pairs accepts only these thresholds (KeyError
+# otherwise): a new one needs its own verified integer form.
 _JACC_INT_MULT = {0.05: 21, 0.10: 11}
 
 
@@ -93,7 +95,8 @@ def _near_dup_pairs(
     checkpointed band table carrying each doc's shingle set and all
     band buckets feeds both sides of the (band, bucket) self-join;
     each matching pair is emitted exactly once by the FIRST-MATCH-BAND
-    predicate (suppress at band b when any band j < b also agrees).
+    predicate (lsh.first_match: suppress at band b when any band j < b
+    also agrees).
     The PROBE side is a bg-narrow projection of the checkpoint, so the
     widest column moves n_bands× on one side only (VERDICT r20 item 1
     flagged the both-sides inflation; guide §2.3); bg_a is re-attached
@@ -110,38 +113,9 @@ def _near_dup_pairs(
     payload still stored n_bands× — ADVICE r20 notes the single-copy
     alternative if checkpoint memory ever binds, A/B'd this round as
     a local wash)."""
-    from duckdb_data_eng_proj_spark.operators.textops import (
-        lsh_band_buckets,
-        minhash_from_pairs,
-        minhash_pairs,
-    )
-    from duckdb_data_eng_proj_spark.queries.training import (
-        _N_HASHES,
-        _ROWS_PER_BAND,
-    )
-
-    bg = _bigram_sets_df(spark, sf_dir)
-    ps = bg.select("doc_id", "bg", minhash_pairs(F.col("bg")).alias("ps"))
-    sig = ps.select("doc_id", "bg", *minhash_from_pairs(F.col("ps"), _N_HASHES))
-    bks = lsh_band_buckets(
-        [f"h{j}" for j in range(_N_HASHES)], _ROWS_PER_BAND
-    )
-    n_bands = len(bks)
-    sigb = sig.select(
-        "doc_id", "bg", *[b.alias(f"b{i}") for i, b in enumerate(bks)]
-    )
-    bands = (
-        sigb.select(
-            "doc_id",
-            "bg",
-            *[f"b{i}" for i in range(n_bands)],
-            F.posexplode(
-                F.array(*[F.col(f"b{i}") for i in range(n_bands)])
-            ).alias("band", "bucket"),
-        )
-        .filter(F.col("bucket").isNotNull())
-        .localCheckpoint()
-    )
+    bands = band_table(
+        _bigram_sets_df(spark, sf_dir), carry=("bg",), bucket_vector=True
+    ).localCheckpoint()
     # r21 (VERDICT r20 item 1, guide §2.3 "shuffle fewer bytes"): the
     # PROBE side of the self-join is a bg-NARROW projection of the same
     # checkpoint — the widest column (the shingle array) no longer
@@ -157,22 +131,7 @@ def _near_dup_pairs(
     # equality at both thresholds and both output forms (exceptAll
     # both ways empty, 30200/829 pairs).
     x, y = bands.drop("bg").alias("x"), bands.alias("y")
-    cond = (
-        (F.col("x.band") == F.col("y.band"))
-        & (F.col("x.bucket") == F.col("y.bucket"))
-        & (F.col("x.doc_id") < F.col("y.doc_id"))
-    )
-    # First-match-band dedup: a pair agreeing in several bands is
-    # emitted only at its smallest agreeing band. Buckets are all-null
-    # or all-non-null per doc (every h_i is null iff the shingle set
-    # is empty, and a null bucket never enters the band table), so the
-    # null-safe negation can never suppress a legitimate pair.
-    for j in range(n_bands - 1):
-        cond &= ~(
-            (F.lit(j) < F.col("x.band"))
-            & F.col(f"x.b{j}").eqNullSafe(F.col(f"y.b{j}"))
-        )
-    pairs0 = x.join(y, cond).select(
+    pairs0 = x.join(y, first_match("bucket", BUCKET_COLS)).select(
         F.col("x.doc_id").alias("doc_a"),
         F.col("y.doc_id").alias("doc_b"),
         F.col("y.bg").alias("bg_b"),
@@ -181,14 +140,9 @@ def _near_dup_pairs(
         F.col("doc_id").alias("doc_a"), F.col("bg").alias("bg_a")
     )
     inter = F.size(F.array_intersect(F.col("bg_a"), F.col("bg_b")))
-    mult = _JACC_INT_MULT.get(threshold)
-    if mult is not None:
-        qual = (F.lit(mult) * inter) >= (
-            F.size(F.col("bg_a")) + F.size(F.col("bg_b"))
-        )
-    else:  # pragma: no cover - no current caller; exact double form
-        union_ = F.size(F.col("bg_a")) + F.size(F.col("bg_b")) - inter
-        qual = (inter.cast("double") / union_) >= F.lit(threshold)
+    qual = (F.lit(_JACC_INT_MULT[threshold]) * inter) >= (
+        F.size(F.col("bg_a")) + F.size(F.col("bg_b"))
+    )
     # Skew caveat: the Jaccard filter runs after this join, so every
     # unverified candidate pair carries its bg_b array through the
     # doc_a-keyed exchange. A hub document (one that shares a bucket

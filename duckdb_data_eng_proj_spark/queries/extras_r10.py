@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from duckdb_data_eng_proj_spark.operators.lsh import bucket_pairs
 from duckdb_data_eng_proj_spark.operators.textops import tokens
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import _LSH_PRELUDE
@@ -415,17 +416,8 @@ def _pr_iter_sql(prev: str, out: str) -> str:
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_data_eng_proj_spark.queries.training import _lsh_bands_df
 
-    bands = _lsh_bands_df(spark, sf_dir)
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("src"), F.col("y.doc_id").alias("dst"))
-        .distinct()
+    cand = bucket_pairs(_lsh_bands_df(spark, sf_dir)).select(
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     edges = (
         cand.unionAll(cand.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -922,19 +914,7 @@ def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_data_eng_proj_spark.queries.training import _lsh_bands_df
 
-    bands = _lsh_bands_df(spark, sf_dir)
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    cand = bucket_pairs(_lsh_bands_df(spark, sf_dir)).localCheckpoint()
     edges = (
         cand.unionAll(
             cand.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
+from duckdb_data_eng_proj_spark.operators.lsh import bucket_pairs
 from duckdb_data_eng_proj_spark.operators.vectors import (
     dot,
     pack_centroids,
@@ -321,19 +322,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("old_id").cast("long").alias("pc"))
         .localCheckpoint(eager=True)
     )
-    x, y = nw.alias("x"), nw.alias("y")
-    cb = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cb = bucket_pairs(nw)
     vb = (
         cb.join(a, cb["doc_a"] == a["_ida"])
         .join(bset, cb["doc_b"] == bset["_idb"])

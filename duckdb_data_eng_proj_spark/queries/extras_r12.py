@@ -46,10 +46,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
+from duckdb_data_eng_proj_spark.operators.lsh import (
+    HASH_COLS,
+    N_HASHES,
+    first_match,
+    signatures,
+)
 from duckdb_data_eng_proj_spark.operators.textops import (
     lsh_band_buckets,
-    minhash_from_pairs,
-    minhash_pairs,
     tokens,
     word_ngrams,
 )
@@ -65,7 +69,6 @@ from duckdb_data_eng_proj_spark.queries.extras_r11 import (
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import (
     _LSH_PRELUDE,
-    _N_HASHES,
     _TOKS_CTE,
     _bigram_sets_df,
     _dot_sql,
@@ -590,7 +593,7 @@ _TUNE_ALLB_SQL = ", ".join(
     for i in range(nb)
 )
 _TUNE_B1_SQL = ", ".join(
-    f"{{'band': {j}, 'h': h{j}}}" for j in range(_N_HASHES)
+    f"{{'band': {j}, 'h': h{j}}}" for j in range(N_HASHES)
 )
 _TUNE_CURVE_SQL = ", ".join(
     f"CAST(floor({_tune_p_sql(nb, rpb)} * 1000000.0) AS BIGINT) AS c{nb}x{rpb}"
@@ -685,26 +688,19 @@ _TUNE_ROWS_SQL = ", ".join(
     tags=("dedup",),
 )
 def dedup_lsh_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bg = _bigram_sets_df(spark, sf_dir)
-    ps = bg.select(
-        "doc_id", "bg", minhash_pairs(F.col("bg")).alias("ps")
-    )
     # NO checkpoint here, by measured negative A/B (round-15 review
     # suggested the ext_dedup_near front-half pattern because the allb
     # occupancy branch re-runs the md5 minima chain; measured at
     # sf0.1: 8.15 s checkpointed vs 7.6-8.1 s without — materializing
     # the bg shingle payload costs what the saved recompute buys, the
     # dedup_minhash_incremental no-pin class).
-    sig = ps.select(
-        "doc_id", "bg", *minhash_from_pairs(F.col("ps"), _N_HASHES)
-    )
-    sig_cols = [f"h{j}" for j in range(_N_HASHES)]
+    sig = signatures(_bigram_sets_df(spark, sf_dir), carry=("bg",))
 
     # Arm 1: candidate-load from bucket occupancy, all configs in one
     # explode → one (bands, band, bucket) combine-heavy aggregate.
     entries = []
     for nb, rpb in _TUNE_GRID:
-        for i, bucket in enumerate(lsh_band_buckets(sig_cols, rpb)):
+        for i, bucket in enumerate(lsh_band_buckets(HASH_COLS, rpb)):
             entries.append(
                 F.struct(
                     F.lit(nb).alias("bands"),
@@ -735,12 +731,11 @@ def dedup_lsh_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (spilled the disk). Instead: carry each doc's shingle set and
     # ALL 8 hashes through the band explode (corpus-LINEAR weight),
     # self-join on (band, h), and emit each pair exactly once via the
-    # classic FIRST-MATCH-BAND predicate (suppress at band b unless
-    # no band j < b also agrees — null-safe: an all-null signature
-    # never reaches any band). The matched pair rows then PIPELINE
-    # straight through the Jaccard projection into the one-row
-    # S-curve aggregate: same pair set as the DISTINCT form (each
-    # matching pair once), zero pair-row exchanges.
+    # classic FIRST-MATCH-BAND predicate (lsh.first_match: suppress at
+    # band b unless no band j < b also agrees). The matched pair rows
+    # then PIPELINE straight through the Jaccard projection into the
+    # one-row S-curve aggregate: same pair set as the DISTINCT form
+    # (each matching pair once), zero pair-row exchanges.
     # Explicit-width repartition on the join key: the self-join is
     # OUTPUT-explosive (its pair volume is the quantity being
     # measured), but AQE sizes shuffle widths on INPUT bytes — under
@@ -754,8 +749,8 @@ def dedup_lsh_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig.select(
             "doc_id",
             "bg",
-            *sig_cols,
-            F.posexplode(F.array(*[F.col(c) for c in sig_cols])).alias(
+            *HASH_COLS,
+            F.posexplode(F.array(*[F.col(c) for c in HASH_COLS])).alias(
                 "band", "h"
             ),
         )
@@ -768,16 +763,6 @@ def dedup_lsh_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is exactly what the planner exists to measure, so the plan must
     # not assume it is broadcast-small).
     x, y = b1.alias("x"), b1.hint("merge").alias("y")
-    first_match = (
-        (F.col("x.band") == F.col("y.band"))
-        & (F.col("x.h") == F.col("y.h"))
-        & (F.col("x.doc_id") < F.col("y.doc_id"))
-    )
-    for j in range(_N_HASHES - 1):
-        first_match &= ~(
-            (F.lit(j) < F.col("x.band"))
-            & F.col(f"x.h{j}").eqNullSafe(F.col(f"y.h{j}"))
-        )
     inter = F.size(F.array_intersect(F.col("x.bg"), F.col("y.bg")))
     un = F.size(F.col("x.bg")) + F.size(F.col("y.bg")) - inter
     # The `ev` qualifying filter (5·inter >= un) lives IN the join
@@ -793,7 +778,7 @@ def dedup_lsh_tune(spark: SparkSession, sf_dir: str) -> DataFrame:
     jacc_last = (F.lit(6) * inter) >= (
         F.size(F.col("x.bg")) + F.size(F.col("y.bg"))
     )
-    ev = x.join(y, first_match & jacc_last).select(
+    ev = x.join(y, first_match("h", HASH_COLS) & jacc_last).select(
         (inter.cast("double") / un).alias("s")
     )
     cu = ev.select(

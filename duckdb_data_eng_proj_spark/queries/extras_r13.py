@@ -64,21 +64,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
-from duckdb_data_eng_proj_spark.operators.textops import (
-    distinct_ngrams,
-    lsh_band_buckets,
-    minhash_from_pairs,
-    minhash_pairs,
-    tokens,
+from duckdb_data_eng_proj_spark.operators.lsh import (
+    band_table,
+    bucket_pairs,
+    shingle_sets,
 )
+from duckdb_data_eng_proj_spark.operators.textops import tokens
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import (
     _ASSIGN_CTES,
     _dot_sql,
     _ivf_parts,
     _LSH_PRELUDE,
-    _N_HASHES,
-    _ROWS_PER_BAND,
     _TOKS_CTE,
 )
 from duckdb_data_eng_proj_spark.queries.extras_r11 import (
@@ -493,31 +490,6 @@ def txt_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ext_stream_dedup_admit
 
 
-def _bands_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, band, bucket) for a documents DF — _lsh_bands_df's
-    body parameterized by the input (duplicated rather than refactored
-    so the shared helper's source, folded into every verified dedup
-    op's core hash, stays untouched; training.py:128 is the source of
-    truth for the pipeline shape)."""
-    toks = docs.select("doc_id", tokens(F.col("text")).alias("tk"))
-    bg = toks.select("doc_id", distinct_ngrams(F.col("tk"), 2).alias("bg"))
-    ps = bg.select("doc_id", minhash_pairs(F.col("bg")).alias("ps"))
-    sig = ps.select("doc_id", *minhash_from_pairs(F.col("ps"), _N_HASHES))
-    sig_cols = [f"h{j}" for j in range(_N_HASHES)]
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(
-            F.array(*lsh_band_buckets(sig_cols, _ROWS_PER_BAND))
-        ).alias("band", "bucket"),
-    )
-    return bands.filter(F.col("bucket").isNotNull())
-
-
-def _bigrams_of(docs: DataFrame) -> DataFrame:
-    toks = docs.select("doc_id", tokens(F.col("text")).alias("tk"))
-    return toks.select("doc_id", distinct_ngrams(F.col("tk"), 2).alias("bg"))
-
-
 def _admit_build_index(
     spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame]:
@@ -533,11 +505,11 @@ def _admit_build_index(
     if docs is None:
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 3 != 0)
-    idx_bands = _bands_of(ensure_parallelism(corpus)).localCheckpoint(
-        eager=True
-    )
+    idx_bands = band_table(
+        shingle_sets(ensure_parallelism(corpus))
+    ).localCheckpoint(eager=True)
     idx_bg = (
-        _bigrams_of(ensure_parallelism(corpus))
+        shingle_sets(ensure_parallelism(corpus))
         .select(F.col("doc_id").alias("_idb"), F.col("bg").alias("bg_b"))
         .localCheckpoint(eager=True)
     )
@@ -635,8 +607,8 @@ def ext_stream_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def admit_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch = batch_df.localCheckpoint(eager=True)
-        nb = _bands_of(batch).localCheckpoint(eager=True)
-        bga = _bigrams_of(batch).select(
+        nb = band_table(shingle_sets(batch)).localCheckpoint(eager=True)
+        bga = shingle_sets(batch).select(
             F.col("doc_id").alias("_ida"), F.col("bg").alias("bg_a")
         ).localCheckpoint(eager=True)
         n, i = nb.alias("n"), idx_bands.alias("i")
@@ -659,20 +631,7 @@ def ext_stream_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("new_id")
             .agg(F.min("old_id").cast("long").alias("pc"))
         )
-        x, y = nb.alias("x"), nb.alias("y")
-        cb = (
-            x.join(
-                y,
-                (F.col("x.band") == F.col("y.band"))
-                & (F.col("x.bucket") == F.col("y.bucket"))
-                & (F.col("x.doc_id") < F.col("y.doc_id")),
-            )
-            .select(
-                F.col("x.doc_id").alias("doc_a"),
-                F.col("y.doc_id").alias("doc_b"),
-            )
-            .distinct()
-        )
+        cb = bucket_pairs(nb)
         bgb = bga.select(
             F.col("_ida").alias("_idb2"), F.col("bg_a").alias("bg_b")
         )

@@ -114,11 +114,11 @@ def txt_longest_common_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the broadcast match join) — without the barrier each reference
     # re-runs the band self-join (and, pre-r21, the whole MinHash
     # front half: measured 8.5 s -> ~3 s at sf0.1).
-    # r21: candidate generation moved to the shared first-match-band
-    # helper (training._lsh_cand_pairs) — MinHash chain hashed ONCE
+    # r21: candidate generation moved to training._lsh_cand_pairs
+    # (lsh.band_table + lsh.first_match) — MinHash chain hashed ONCE
     # into a checkpointed band table instead of once per self-join
     # side, DISTINCT exchange gone; exact same pair set (pinned by
-    # tests/test_r21_opt_laws.py + oracle hash match).
+    # tests/test_lsh.py + oracle hash match).
     # EAGER: cand feeds a broadcast exchange and the doc prune; a
     # lazy checkpoint would be raced into concurrent recomputes
     # of the band self-join (measured r11: 15.7 s lazy vs ~5.5 s

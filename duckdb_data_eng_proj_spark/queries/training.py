@@ -32,17 +32,22 @@ from duckdb_data_eng_proj_spark.operators.textops import (
     EN_STOPWORDS,
     LANG_MARKERS,
     MINHASH_P,
-    distinct_ngrams,
     hex_nibble,
-    lsh_band_buckets,
-    minhash_from_pairs,
-    minhash_pairs,
     TOK_SQL,
     tokens,
     word_ngrams,
 )
 from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
+from duckdb_data_eng_proj_spark.operators.lsh import (
+    BUCKET_COLS,
+    N_HASHES,
+    ROWS_PER_BAND,
+    band_table,
+    bucket_pairs,
+    first_match,
+    shingle_sets,
+)
 from duckdb_data_eng_proj_spark.operators.vectors import (
     dot,
     pack_centroids,
@@ -111,9 +116,6 @@ _BG = (
 )
 _BG_CTE = f"bg AS (SELECT doc_id, {_BG} AS bg FROM toks)"
 
-_N_HASHES = 8
-_ROWS_PER_BAND = 2
-
 
 # Kirsch-Mitzenmacher double hashing (operators/textops.py): one md5
 # per shingle → (a, b|1) 60-bit ints → hash j = min (a + j·b) mod P.
@@ -145,7 +147,7 @@ def _minhash_sql(j: int) -> str:
 
 
 _SIG_CTE = "sig AS (SELECT doc_id, " + ", ".join(
-    f"{_minhash_sql(j)} AS h{j}" for j in range(_N_HASHES)
+    f"{_minhash_sql(j)} AS h{j}" for j in range(N_HASHES)
 ) + " FROM pairs)"
 
 _BANDS_CTE = (
@@ -154,7 +156,7 @@ _BANDS_CTE = (
     + ", ".join(
         f"{{'band': {b}, 'bucket': md5(CAST(h{2 * b} AS VARCHAR) || '|' || "
         f"CAST(h{2 * b + 1} AS VARCHAR))}}"
-        for b in range(_N_HASHES // _ROWS_PER_BAND)
+        for b in range(N_HASHES // ROWS_PER_BAND)
     )
     + "]) AS u FROM sig))"
 )
@@ -195,36 +197,16 @@ _EMB_CTE = (
 
 
 def _lsh_bands_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, band, bucket) rows — the shared MinHash-LSH front half.
-
-    Projection chain: shingles → materialized (a,b) pair column (md5
-    once per shingle — see minhash_pairs) → 8 array-min projections →
-    band buckets. The input is repartitioned up to core count first:
-    hashing dominates, and a sub-MB documents file would otherwise run
-    the whole stage on two cores."""
-    d = ensure_parallelism(t(spark, sf_dir, "documents"))
-    # Materialize the token array behind a projection barrier before
-    # the n-gram transform: inlined, the tokenize sub-expression is
-    # re-evaluated inside the shingle lambda per position (~6× the
-    # stage cost at sf0.1 — measured on ext_decontaminate r4).
-    toks = d.select("doc_id", tokens(F.col("text")).alias("tk"))
-    bg = toks.select("doc_id", distinct_ngrams(F.col("tk"), 2).alias("bg"))
-    ps = bg.select("doc_id", minhash_pairs(F.col("bg")).alias("ps"))
-    sig = ps.select("doc_id", *minhash_from_pairs(F.col("ps"), _N_HASHES))
-    sig_cols = [f"h{j}" for j in range(_N_HASHES)]
-    bands = sig.select(
-        "doc_id",
-        F.posexplode(F.array(*lsh_band_buckets(sig_cols, _ROWS_PER_BAND))).alias(
-            "band", "bucket"
-        ),
-    )
-    return bands.filter(F.col("bucket").isNotNull())
+    """(doc_id, band, bucket) rows — the shared MinHash-LSH front half
+    (operators/lsh.band_table) over the documents table."""
+    return band_table(_bigram_sets_df(spark, sf_dir))
 
 
 def _bigram_sets_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = ensure_parallelism(t(spark, sf_dir, "documents"))
-    toks = d.select("doc_id", tokens(F.col("text")).alias("tk"))
-    return toks.select("doc_id", distinct_ngrams(F.col("tk"), 2).alias("bg"))
+    """(doc_id, bg) shingle sets. The input is repartitioned up to core
+    count first: hashing dominates, and a sub-MB documents file would
+    otherwise run the whole stage on two cores."""
+    return shingle_sets(ensure_parallelism(t(spark, sf_dir, "documents")))
 
 
 def _lsh_cand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -239,56 +221,23 @@ def _lsh_cand_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets those verifying callers need): ONE eagerly checkpointed band
     table carrying each doc's full bucket vector feeds both sides of
     the (band, bucket) self-join, and the FIRST-MATCH-BAND predicate
-    (suppress at band b when any band j < b also agrees) replaces
-    DISTINCT — each pair appears at its smallest agreeing band only.
+    (lsh.first_match) replaces DISTINCT — each pair appears at its
+    smallest agreeing band only.
     vs the previous bands-self-join-then-DISTINCT form this computes
     the MinHash hashing chain ONCE (it used to run once per join side:
     one side sits under a BroadcastExchange, so ReuseExchange never
     dedups it) and drops the DISTINCT exchange. Exact multiset
     equality with the DISTINCT form measured at sf0.1 (72228 pairs,
     exceptAll both ways empty) and pinned by
-    tests/test_r21_opt_laws.py; per-call cost 0.91 s -> 0.73 s.
-    Buckets are all-null or all-non-null per doc (every h_j is null
-    iff the shingle set is empty, and null buckets never enter the
-    band table), so the null-safe negation can never suppress a
-    legitimate pair. Returns the LAZY pair stream over the
+    tests/test_r21_opt_laws.py and tests/test_lsh.py; per-call cost
+    0.91 s -> 0.73 s. Returns the LAZY pair stream over the
     checkpointed band table; callers checkpoint the result when it
     feeds more than one consumer."""
-    from duckdb_data_eng_proj_spark.operators.textops import (
-        lsh_band_buckets,
-        minhash_from_pairs,
-        minhash_pairs,
-    )
-
-    bg = _bigram_sets_df(spark, sf_dir)
-    ps = bg.select("doc_id", minhash_pairs(F.col("bg")).alias("ps"))
-    sig = ps.select("doc_id", *minhash_from_pairs(F.col("ps"), _N_HASHES))
-    bks = lsh_band_buckets([f"h{j}" for j in range(_N_HASHES)], _ROWS_PER_BAND)
-    n_bands = len(bks)
-    sigb = sig.select("doc_id", *[b.alias(f"b{i}") for i, b in enumerate(bks)])
-    bands = (
-        sigb.select(
-            "doc_id",
-            *[f"b{i}" for i in range(n_bands)],
-            F.posexplode(
-                F.array(*[F.col(f"b{i}") for i in range(n_bands)])
-            ).alias("band", "bucket"),
-        )
-        .filter(F.col("bucket").isNotNull())
-        .localCheckpoint()
-    )
+    bands = band_table(
+        _bigram_sets_df(spark, sf_dir), bucket_vector=True
+    ).localCheckpoint()
     x, y = bands.alias("x"), bands.alias("y")
-    cond = (
-        (F.col("x.band") == F.col("y.band"))
-        & (F.col("x.bucket") == F.col("y.bucket"))
-        & (F.col("x.doc_id") < F.col("y.doc_id"))
-    )
-    for j in range(n_bands - 1):
-        cond &= ~(
-            (F.lit(j) < F.col("x.band"))
-            & F.col(f"x.b{j}").eqNullSafe(F.col(f"y.b{j}"))
-        )
-    return x.join(y, cond).select(
+    return x.join(y, first_match("bucket", BUCKET_COLS)).select(
         F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
     )
 
@@ -389,7 +338,7 @@ def txt_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the token array behind a projection barrier: inlined
     # into the four hit columns, the interpreted HOF re-tokenizes every
     # row 4x (no CSE across expressions — the measured 6x pattern the
-    # _lsh_bands_df comment documents).
+    # lsh.shingle_sets comment documents).
     toks = d.select("doc_id", tokens(F.col("text")).alias("tk"))
     tk = F.col("tk")
     hits = toks.select(
@@ -579,18 +528,7 @@ def ext_dedup_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same checkpoint-the-front-half pattern as dedup_simhash_pairs /
     # dedup_fuzzy_edit: bands feed both self-join sides, sets feed
     # both verification sides, on different partition keys each time.
-    bands = _lsh_bands_df(spark, sf_dir).localCheckpoint()
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(_lsh_bands_df(spark, sf_dir).localCheckpoint())
     sets = _bigram_sets_df(spark, sf_dir).localCheckpoint()
     a = sets.select(F.col("doc_id").alias("doc_a"), F.col("bg").alias("bg_a"))
     b = sets.select(F.col("doc_id").alias("doc_b"), F.col("bg").alias("bg_b"))
@@ -1807,18 +1745,7 @@ def ext_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def dedup_fuzzy_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    bands = _lsh_bands_df(spark, sf_dir).localCheckpoint()
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band") == F.col("y.band"))
-            & (F.col("x.bucket") == F.col("y.bucket"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(_lsh_bands_df(spark, sf_dir).localCheckpoint())
     d = t(spark, sf_dir, "documents")
     a = d.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     b = d.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))

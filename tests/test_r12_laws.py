@@ -251,11 +251,9 @@ def _replay_minhash_sigs(spark):
     banding, occupancy, pair generation, the S-curve)."""
     import hashlib
 
+    from duckdb_data_eng_proj_spark.operators.lsh import N_HASHES
     from duckdb_data_eng_proj_spark.operators.textops import MINHASH_P
-    from duckdb_data_eng_proj_spark.queries.training import (
-        _N_HASHES,
-        _bigram_sets_df,
-    )
+    from duckdb_data_eng_proj_spark.queries.training import _bigram_sets_df
 
     sets, sigs = {}, {}
     for r in _bigram_sets_df(spark, SF_DIR).collect():
@@ -269,7 +267,7 @@ def _replay_minhash_sigs(spark):
             pairs.append((int(h[:15], 16), int(h[16:31], 16) | 1))
         sigs[r.doc_id] = [
             min((a + j * b) % MINHASH_P for a, b in pairs)
-            for j in range(_N_HASHES)
+            for j in range(N_HASHES)
         ]
     return sets, sigs
 

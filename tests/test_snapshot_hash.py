@@ -46,33 +46,41 @@ def test_helper_module_edit_flips_dependent_hash_only(monkeypatch):
     # edits no longer invalidate the whole 232-id registry.
     import os
 
-    dep_spec = REGISTRY["dedup_fuzzy_edit"]   # training.py imports textops
-    indep_spec = REGISTRY["tpch_q1"]          # tpch.py does not
+    dep_spec = REGISTRY["dedup_fuzzy_edit"]   # training.py imports textops, lsh
+    indep_spec = REGISTRY["tpch_q1"]          # tpch.py imports neither
     textops = os.path.join(entry._PKG_DIR, "operators", "textops.py")
+    lsh = os.path.join(entry._PKG_DIR, "operators", "lsh.py")
     dep_closure = entry._deps_closure(
         os.path.abspath(entry.sys.modules[dep_spec.fn.__module__].__file__))
     indep_closure = entry._deps_closure(
         os.path.abspath(entry.sys.modules[indep_spec.fn.__module__].__file__))
     assert textops in dep_closure
     assert textops not in indep_closure
+    assert lsh not in indep_closure
+    # Every MinHash consumer module sees the LSH primitive, so an edit
+    # to it re-enqueues all of them.
+    for mod in ("training", "corpus", "extras_r12", "extras_r13"):
+        path = os.path.join(entry._PKG_DIR, "queries", f"{mod}.py")
+        assert lsh in entry._deps_closure(path), mod
 
-    h_dep_1 = entry._impl_hash(dep_spec)
-    h_indep_1 = entry._impl_hash(indep_spec)
-    real_digest = entry._file_digest
+    for helper in (textops, lsh):
+        h_dep_1 = entry._impl_hash(dep_spec)
+        h_indep_1 = entry._impl_hash(indep_spec)
+        real_digest = entry._file_digest
 
-    def fake_digest(path):
-        if path == textops:
-            return "edited-helper-digest"
-        return real_digest(path)
+        def fake_digest(path, helper=helper):
+            if path == helper:
+                return "edited-helper-digest"
+            return real_digest(path)
 
-    monkeypatch.setattr(entry, "_file_digest", fake_digest)
-    entry._deps_digest.cache_clear()
-    h_dep_2 = entry._impl_hash(dep_spec)
-    h_indep_2 = entry._impl_hash(indep_spec)
-    monkeypatch.undo()
-    entry._deps_digest.cache_clear()  # restore clean cache state
-    assert h_dep_1 != h_dep_2
-    assert h_indep_1 == h_indep_2
+        monkeypatch.setattr(entry, "_file_digest", fake_digest)
+        entry._deps_digest.cache_clear()
+        h_dep_2 = entry._impl_hash(dep_spec)
+        h_indep_2 = entry._impl_hash(indep_spec)
+        monkeypatch.undo()
+        entry._deps_digest.cache_clear()  # restore clean cache state
+        assert h_dep_1 != h_dep_2, helper
+        assert h_indep_1 == h_indep_2, helper
 
 
 def test_cross_query_module_import_is_a_dependency():
