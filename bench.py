@@ -7,17 +7,21 @@ Prints ONE JSON line:
 
 Execution is forced with a noop sink (full computation, no collect/IO
 skew in the measurement). Each query is timed best-of-3 on a warm
-session — the reference comparison (BASELINE.md) is warm-connection
-DuckDB, so JVM startup is excluded from per-query numbers.
+session, build-inclusive (``best_of``): fn() with any Spark job it
+fires, Catalyst planning and execution — everything a caller waits
+for. The reference comparison (BASELINE.md) is warm-connection DuckDB,
+timed parse-inclusive, so JVM startup is excluded from per-query
+numbers.
 
 The payload is self-validating against box load (VERDICT r7 item 2):
-it records the pre-run 1-min loadavg and a 2-second vmstat CPU-idle
-sample, and stamps ``"loaded": true`` when idle < 90% or loadavg/core
-> 0.25 — so a run taken on a busy box carries its own disclaimer
-instead of needing a side-channel A/B investigation. Before the timed
-laps the harness WAITS for the box to drain (VERDICT r8 item 3):
-bounded poll up to $SPARK_GRAFT_IDLE_WAIT_S seconds (default 600),
-then runs and stamps whatever is true ("idle_wait_s" records the wait).
+it records the pre-run 1-min loadavg and a half-second CPU-idle
+sample (``perfbench.run.box_load``), and stamps ``"loaded": true``
+when idle < 90% or loadavg/core > 0.25 — so a run taken on a busy box
+carries its own disclaimer instead of needing a side-channel A/B
+investigation. Before the timed laps the harness WAITS for the box to
+drain (VERDICT r8 item 3): bounded poll up to $SPARK_GRAFT_IDLE_WAIT_S
+seconds (default 600), then runs and stamps whatever is true
+("idle_wait_s" records the wait).
 """
 
 from __future__ import annotations
@@ -25,18 +29,20 @@ from __future__ import annotations
 import json
 import os
 import re
-import subprocess
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from duckdb_data_eng_proj_spark.queries import REGISTRY  # noqa: E402
+from pyspark.sql import SparkSession  # noqa: E402
+
 from duckdb_data_eng_proj_spark.session import get_spark  # noqa: E402
+from perfbench.run import box_load  # noqa: E402
+from perfbench.workloads import Op, Operators  # noqa: E402
 
 # Headline set: one per operator family, weighted toward the plans that
 # matter at scale (wide joins, windows, sessionization, dedup, text).
-BENCH_QUERIES = [
+BENCH_QUERIES = (
     "win_partition_sum",   # flagship: scan→agg→window
     "join_left_fanout",    # 1:N fan-out join
     "agg_conditional",     # conditional aggregation
@@ -125,99 +131,54 @@ BENCH_QUERIES = [
     "sim_ann_ivf_rebalance",  # IVF split/merge topology plan (r18)
     # r19 addition
     "sim_ann_ivf_recall_curve",  # recall@k vs nprobe sweep, one pass (r19)
-]
-
-# Iterative / index-building ops run Spark ACTIONS inside fn() (one
-# fused localCheckpoint per round) — timing only the returned plan
-# would miss the real work, so for these the whole fn()+force pair is
-# timed. (sim_ann_ivf_search left this set in round 3: its probe
-# table is now a broadcast subplan, not a driver collect — fn() is
-# pure plan construction like every other entry.)
-TIMED_BUILD = {
-    "dedup_cluster_cc",
-    "dedup_containment",
-    "graph_clustering_coefficient",  # localCheckpoints the oriented edge set
-    "graph_label_communities",  # localCheckpoints labels each LPA round
-    "ml_gbdt_round",  # eagerly localCheckpoints the (q, cls) fact count
-    "txt_longest_common_substring",  # checkpoints candidates + positions
-    "graph_jaccard_neighbors",  # checkpoints the candidate edge table
-    "graph_bfs_seed_distance",  # checkpoints edges + levels each BFS round
-    # r13 broadcast-subtree fixes: these now EAGERLY checkpoint the
-    # to-be-broadcast value inside fn() (audit_broadcast_subtrees), so
-    # plan-only timing would hide that work in the untimed build.
-    "ext_decontaminate",   # checkpoints the contaminated-id hit list
-    "ml_naive_bayes",      # checkpoints the model table
-    "agg_sketch_hll",      # checkpoints the 64-row register table
-    "dedup_minhash_incremental",  # checkpoints the vc/vb verdicts
-    "agg_assoc_pairs",     # checkpoints the frequent-item table
-    "ml_perceptron_round",  # checkpoints the mistake set
-    "txt_bpe_apply",       # checkpoints vocab + per-round merge state
-    "sim_ann_ivf_repair",  # checkpoints stale/flag/repaired centroid tables
-    "ext_curriculum_mix",  # checkpoints avail/grid/floor-alloc tables
-    "txt_bpe_train",       # checkpoints vocab + per-round merge state
-    "txt_bpe_encode_docs",  # checkpoints the trained-vocab merge chain
-    "graph_mst_boruvka",   # checkpoints edges/labels per Borůvka round
-    # r17 scan fusion: eagerly checkpoints the (q, cls) fact count
-    "ml_decision_stump",
-    # r18: each eagerly checkpoints its broadcast value inside fn()
-    "txt_rerank_proximity",  # the candidate shortlist
-    "ext_contamination_report",  # the eval (set, gram) table
-    "sim_ann_ivf_rebalance",  # centroids, actions, split-seed pairs
-    # r19: eagerly checkpoints qp/bf/cells/hits broadcast values
-    "sim_ann_ivf_recall_curve",
-}
+)
 
 
-def _force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
+def bench_session(app_name: str, sf_dir: str) -> SparkSession:
+    """The Spark harnesses' session: the latency profile unless
+    SPARK_GRAFT_PROFILE=default, scan splits sized to ``sf_dir``.
 
-
-def _box_load() -> dict:
-    """Measure box load BEFORE the bench starts (this process is idle
-    during the sample, so the numbers describe *external* activity).
-    Returns {"load1": .., "cpu_idle_pct": .., "loaded": bool}; the
-    "loaded" stamp means the timings below were taken under contention
-    and should not be compared across rounds without an idle re-pair.
+    The latency profile (see session.get_spark) trades AQE's per-stage
+    materialization and tiny-shuffle compression for interactive
+    latency on sub-GB input; SPARK_GRAFT_PROFILE=default runs the
+    100 TB posture instead (AQE + compression on), so the scale profile
+    has its own recorded numbers (BASELINE.md honesty note).
     """
-    load1 = os.getloadavg()[0]
-    idle = None
-    try:
-        out = subprocess.run(
-            ["vmstat", "1", "3"], capture_output=True, text=True, timeout=20
-        ).stdout
-        lines = out.strip().splitlines()
-        hdr = next(l for l in lines if " id " in l).split()
-        idx = hdr.index("id")
-        # Skip the first data row (averages since boot) — only the live
-        # 1-second samples describe the box right now.
-        samples = [
-            float(l.split()[idx])
-            for l in lines
-            if l.split() and l.split()[0].isdigit()
-        ][1:]
-        if samples:
-            idle = round(sum(samples) / len(samples), 1)
-    except Exception:
-        pass
-    ncpu = os.cpu_count() or 1
-    loaded = (idle is not None and idle < 90.0) or (load1 / ncpu > 0.25)
-    return {
-        "load1": round(load1, 2),
-        "cpu_idle_pct": idle,
-        "loaded": loaded,
-    }
+    latency = os.environ.get("SPARK_GRAFT_PROFILE", "latency") != "default"
+    input_bytes = sum(
+        os.path.getsize(os.path.join(sf_dir, f)) for f in os.listdir(sf_dir)
+    )
+    spark = get_spark(
+        app_name=app_name, input_bytes=input_bytes, latency_profile=latency
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def best_of(op: Op, laps: int) -> float:
+    """Best wall seconds of ``laps`` runs of ``op``, each timed build-
+    inclusive: the plan build in fn() (with any Spark job it fires —
+    checkpoints, broadcast builds), Catalyst analysis and planning, and
+    the forced execution. That is everything a caller waits for, as
+    scripts/duck_bench.py times DuckDB from SQL text to result."""
+    best = float("inf")
+    for _ in range(laps):
+        t0 = time.perf_counter()
+        op.execute(op.build())
+        best = min(best, time.perf_counter() - t0)
+    return best
 
 
 def _wait_for_idle(max_wait_s: float) -> dict:
-    """Poll _box_load until the box reads unloaded, up to max_wait_s
+    """Poll box_load until the box reads unloaded, up to max_wait_s
     (VERDICT r8 item 3: two rounds running the driver's artifact was
     loaded-flagged and the binding numbers had to live in BASELINE.md —
     waiting out transient load makes the artifact itself binding).
-    Returns the final _box_load dict, stamped with how long we waited;
+    Returns the final box_load dict, stamped with how long we waited;
     if the deadline passes we run anyway and the "loaded" flag stays
     true, so the artifact still self-documents.
     """
-    box = _box_load()
+    box = box_load()
     t0 = time.monotonic()
     deadline = t0 + max_wait_s
     while box["loaded"] and time.monotonic() < deadline:
@@ -230,7 +191,7 @@ def _wait_for_idle(max_wait_s: float) -> dict:
         # sleep overshoots a smaller remaining budget, and capping the
         # report at max_wait_s under-states the actual wall wait).
         time.sleep(min(30.0, max(0.0, deadline - time.monotonic())))
-        box = _box_load()
+        box = box_load()
     box["idle_wait_s"] = round(time.monotonic() - t0, 1)
     return box
 
@@ -252,23 +213,8 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # Latency profile (see session.get_spark): sub-GB input, so trade
-    # AQE's per-stage materialization + tiny-shuffle compression for
-    # interactive latency, and size scan splits to the actual input.
-    # SPARK_GRAFT_PROFILE=default runs the 100 TB posture instead (AQE +
-    # compression on) so the scale profile has its own recorded numbers
-    # (BASELINE.md honesty note).
-    latency = os.environ.get("SPARK_GRAFT_PROFILE", "latency") != "default"
-    input_bytes = sum(
-        os.path.getsize(os.path.join(sf_dir, f)) for f in os.listdir(sf_dir)
-    )
-    spark = get_spark(
-        app_name="bench", input_bytes=input_bytes, latency_profile=latency
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the session (JVM JIT, parquet footer cache) on a tiny query.
-    _force(REGISTRY["prj_star"].fn(spark, sf_dir))
+    spark = bench_session("bench", sf_dir)
+    ops = Operators(spark, sf_dir, BENCH_QUERIES).ops()
 
     # Full untimed warm-up lap: the C2 JIT needs several executions of
     # each generated WholeStageCodegen class to reach steady state —
@@ -276,41 +222,12 @@ def main() -> None:
     # their best-of-3 (r3's win_partition_sum 'regression' was exactly
     # this: iter timings there run 0.48→0.26 s over six forces of an
     # unchanged plan). The DuckDB side (scripts/duck_bench.py) runs the
-    # same warm-up-lap-then-best-of-3 protocol.
-    plans = {}
-    for qid in BENCH_QUERIES:
-        if qid not in REGISTRY:
-            continue
-        if qid in TIMED_BUILD:
-            _force(REGISTRY[qid].fn(spark, sf_dir))
-        else:
-            plans[qid] = REGISTRY[qid].fn(spark, sf_dir)
-            _force(plans[qid])
+    # same warm-up-lap-then-best-of-3 protocol. An id missing from
+    # REGISTRY raises KeyError here rather than shrinking the headline.
+    for op in ops:
+        op.execute(op.build())
 
-    timings: dict[str, float] = {}
-    for qid in BENCH_QUERIES:
-        if qid not in REGISTRY:
-            continue
-        # Build the DataFrame once, untimed: that is pure Python-side
-        # py4j plan-object construction (~30-150 ms of API chatter),
-        # amortized to zero in any real deployment where a plan runs
-        # against TBs. Catalyst analysis, optimization, codegen and
-        # execution all happen inside the timed _force (the DuckDB
-        # oracle timing likewise includes its ~1 ms SQL parse).
-        best = float("inf")
-        if qid in TIMED_BUILD:
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _force(REGISTRY[qid].fn(spark, sf_dir))
-                best = min(best, time.perf_counter() - t0)
-        else:
-            df = plans[qid]
-            for _ in range(3):
-                t0 = time.perf_counter()
-                _force(df)
-                best = min(best, time.perf_counter() - t0)
-        timings[qid] = round(best, 4)
-
+    timings = {qid: round(best_of(op, 3), 4) for qid, op in zip(BENCH_QUERIES, ops)}
     total = round(sum(timings.values()), 4)
     print(
         json.dumps(

@@ -496,13 +496,12 @@ def run_pipeline(
     lms_csv: str,
     run_ts: dt.datetime | None = None,
     as_of_date: dt.date | None = None,
-    cache: bool = True,
 ) -> PipelineResult:
-    """Compose the five stages lazily. With ``cache`` (the default),
-    the four stages that later stages, the export and q0–q5 read —
-    cleaned_applications, lms_cleaned, loan_portfolio and
-    data_quality_report — are cached, the reference's materialized
-    tables: each is computed once per run instead of once per reader."""
+    """Compose the five stages lazily. The four stages that later
+    stages, the export and q0–q5 read — cleaned_applications,
+    lms_cleaned, loan_portfolio and data_quality_report — are cached,
+    the reference's materialized tables: each is computed once per run
+    instead of once per reader."""
     raw_apps = load_raw_applications(spark, apps_csv)
     raw_lms = load_raw_lms(spark, lms_csv)
 
@@ -514,18 +513,16 @@ def run_pipeline(
     lms_app_dupes = dupe_keys(raw_lms, "application_id", exclude_blank=True)
     lms_cleaned = clean_lms(raw_lms, loan_dupes, lms_app_dupes, run_ts)
 
-    if cache:
-        cleaned_apps = cleaned_apps.cache()
-        lms_cleaned = lms_cleaned.cache()
+    cleaned_apps = cleaned_apps.cache()
+    lms_cleaned = lms_cleaned.cache()
 
     approved = cleaned_apps.filter(F.col("status") == "approved").select(
         "application_id"
     )
     portfolio = build_loan_portfolio(cleaned_apps, lms_cleaned, as_of_date)
     report = build_quality_report(cleaned_apps, lms_cleaned, bad, run_ts)
-    if cache:
-        portfolio = portfolio.cache()
-        report = report.cache()
+    portfolio = portfolio.cache()
+    report = report.cache()
 
     return PipelineResult(
         raw_applications=raw_apps,
@@ -546,12 +543,6 @@ def run_pipeline(
 # ---------------------------------------------------------------------------
 # Opt-in STRICT spec checks (SURVEY.md §2.10 items 1-4)
 # ---------------------------------------------------------------------------
-
-STRICT_FLAG_NAMES = [
-    "application_not_approved",
-    "balance_exceeds_original",
-    "disbursement_before_application",
-]
 
 
 def strict_spec_checks(

@@ -209,15 +209,15 @@ def decode_audio(payload: bytes) -> dict:
     }
 
 
-def encode_wav_wave(n_samples: int, seed: int, rate: int = 8000) -> bytes:
+def encode_wav_wave(n_samples: int, seed: int) -> bytes:
     """Real RIFF/WAV writer with a VARYING waveform: sample ``k`` is
     ``((seed + 97*k) % 65536) - 32768`` — a deterministic sawtooth-like
     sweep over the full int16 range, so DSP features (zero crossings,
     magnitude sums) are non-trivial yet exactly replayable by an
     integer SQL oracle. The constant-amplitude ``encode_wav`` remains
-    the mm_audio_wav fixture."""
+    the mm_audio_wav fixture. Written at 8 kHz."""
     return _write_wav16(
-        (((seed + 97 * k) % 65536) - 32768 for k in range(n_samples)), rate
+        (((seed + 97 * k) % 65536) - 32768 for k in range(n_samples)), 8000
     )
 
 

@@ -41,19 +41,19 @@ from duckdb_data_eng_proj_spark.queries.training import (
 
 
 @contextmanager
-def _state_sized_shuffle(spark: SparkSession, state_rows: int, rows_per_part: int = 100_000):
+def _state_sized_shuffle(spark: SparkSession, state_rows: int):
     """Size ``spark.sql.shuffle.partitions`` to the iteration state for
     the duration of an iterative loop, then restore.
 
     AQE coalesces tiny shuffles automatically, but iterative loops
     checkpoint every round, and the latency profile (bench) runs AQE
     off — so the loop hand-sizes its shuffle width the same way AQE
-    would: ~``rows_per_part`` label/edge rows per task, clamped to
+    would: ~100k label/edge rows per task, clamped to
     [1, defaultParallelism]. A 30k-edge graph iterates on 1 partition
     (every stage one task, no fan-out floor); a 10B-edge graph at the
     100 TB design point gets full cluster width from the same dial.
     """
-    parts = max(1, min(spark.sparkContext.defaultParallelism, -(-state_rows // rows_per_part)))
+    parts = max(1, min(spark.sparkContext.defaultParallelism, -(-state_rows // 100_000)))
     key = "spark.sql.shuffle.partitions"
     old = spark.conf.get(key)
     spark.conf.set(key, str(parts))

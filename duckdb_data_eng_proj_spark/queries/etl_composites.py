@@ -13,16 +13,14 @@ rows-only (VERDICT r2 "Next round" #5).
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_data_eng_proj_spark.etl import run_pipeline
 from duckdb_data_eng_proj_spark.etl.analytics import ANALYTICS
-from duckdb_data_eng_proj_spark.etl.oracle_sql import ETL_ORACLES
+from duckdb_data_eng_proj_spark.etl.oracle_sql import _REF, ETL_ORACLES
 from duckdb_data_eng_proj_spark.queries.registry import register
 
-_REF = os.environ.get("SPARK_GRAFT_REFERENCE_DIR", "/root/reference")
 _RUN_TS = dt.datetime(2026, 1, 23, 12, 30, 57)  # the golden run's clock
 _AS_OF = dt.date(2026, 1, 23)
 

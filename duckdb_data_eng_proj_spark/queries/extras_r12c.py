@@ -423,7 +423,6 @@ def agg_assoc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _PCT_DIM = 64  # embedding dimensionality (filtered, not assumed)
 _PCT_POS = 0  # one-vs-rest positive class: label == 0
-_PCT_FP = 1_000_000  # per-component fixed-point scale
 
 
 @register(

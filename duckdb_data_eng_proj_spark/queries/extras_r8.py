@@ -396,21 +396,11 @@ _NB_TOK = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> 
     ),
 )
 def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _naive_bayes_df(spark, sf_dir, checkpoint_tokens=True)
-
-
-def _naive_bayes_df(
-    spark: SparkSession, sf_dir: str, *, checkpoint_tokens: bool = True
-) -> DataFrame:
-    """``checkpoint_tokens`` is the r17 A/B knob (r16 review: the
-    aggregate subtrees re-derived the token stream ~8x): True
-    materializes the exploded (doc_id, lang, token) frame once via
-    eager localCheckpoint so all eight consumers read it. Shipped
-    default True — the bench-harness A/B (BASELINE §Round 17,
-    alternating best-of-5 under the TIMED_BUILD protocol) reads
-    checkpoint 2.46 s vs recompute 2.87 s at sf0.1 (-14%). At 100 TB
-    the checkpoint is a persisted token table — the standard
-    train-once shape; False keeps the recompute arm reproducible."""
+    """The exploded (doc_id, lang, token) frame is materialized once
+    via eager localCheckpoint so all eight consumers read it instead of
+    re-deriving the token stream (BASELINE §Round 17: 2.46 s vs 2.87 s
+    recomputed at sf0.1). At 100 TB the checkpoint is a persisted token
+    table — the standard train-once shape."""
     from duckdb_data_eng_proj_spark.operators.textops import tokens
     from duckdb_data_eng_proj_spark.queries.registry import t
 
@@ -420,9 +410,7 @@ def _naive_bayes_df(
     d = t(spark, sf_dir, "documents")
     tt = d.select(
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("token")
-    )
-    if checkpoint_tokens:
-        tt = tt.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     tr = tt.filter(F.pmod("doc_id", F.lit(5)) != 0)
     te = tt.filter(F.pmod("doc_id", F.lit(5)) == 0).select("doc_id", "token")
 
@@ -733,7 +721,7 @@ def ml_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every derived aggregate reads the ~|thresholds|x|classes| rows.
     # Eager, not lazy: cls-distinct below BROADCASTS, and a lazy
     # checkpoint would run the fact scan inside the broadcast future
-    # (the audit_broadcast_subtrees r13 rule). TIMED_BUILD in bench.
+    # (the audit_broadcast_subtrees r13 rule).
     cnt = (
         base.groupBy("q", "cls")
         .agg(F.count("*").alias("c"))

@@ -16,32 +16,30 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from duckdb_data_eng_proj_spark.etl.oracle_sql import _REF, ETL_ORACLES
 from duckdb_data_eng_proj_spark.queries.registry import register
 from duckdb_data_eng_proj_spark.streaming.ingest import (
     stream_clean_lms,
     stream_window_counts,
 )
 
-_REF = os.environ.get("SPARK_GRAFT_REFERENCE_DIR", "/root/reference")
 _RUN_TS = dt.datetime(2026, 1, 23, 12, 30, 57)
 
 
-def split_lms_csv(src: str, n_head: int = 90) -> str:
+def split_lms_csv(src: str) -> str:
     """Split the LMS CSV into two header-carrying 'daily' files in a
-    fresh temp dir (simulates two file-drop days)."""
+    fresh temp dir (simulates two file-drop days): the first 90 data
+    rows, then the rest."""
     from duckdb_data_eng_proj_spark.streaming.ingest import _scratch_tmp
 
     with open(src, encoding="utf-8") as f:
         lines = f.read().splitlines()
     header, rows = lines[0], lines[1:]
     out_dir = _scratch_tmp("lms_days_")
-    for i, chunk in enumerate([rows[:n_head], rows[n_head:]]):
+    for i, chunk in enumerate([rows[:90], rows[90:]]):
         with open(os.path.join(out_dir, f"day{i}.csv"), "w", encoding="utf-8") as f:
             f.write("\n".join([header, *chunk]) + "\n")
     return out_dir
-
-
-from duckdb_data_eng_proj_spark.etl.oracle_sql import ETL_ORACLES
 
 
 @register(

@@ -54,7 +54,6 @@ def shuffle_width(cpus: int, latency_profile: bool) -> int:
 def get_spark(
     app_name: str = "duckdb-data-eng-proj-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
     input_bytes: int | None = None,
     latency_profile: bool = False,
 ) -> SparkSession:
@@ -62,7 +61,7 @@ def get_spark(
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS then 32 (driver contract).
     ``input_bytes`` (optional) auto-sizes the parquet scan split.
-    ``shuffle_partitions`` defaults to ``shuffle_width``: 2×cores, or
+    ``spark.sql.shuffle.partitions`` is ``shuffle_width``: 2×cores, or
     min(16, 2×cores) under the latency profile.
     ``latency_profile`` tunes for small-input interactive latency:
     AQE's per-query-stage materialization costs ~100 ms/query and only
@@ -73,8 +72,6 @@ def get_spark(
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     cpus = int(cpus)
-    if shuffle_partitions is None:
-        shuffle_partitions = shuffle_width(cpus, latency_profile)
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -83,7 +80,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(shuffle_width(cpus, latency_profile)))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

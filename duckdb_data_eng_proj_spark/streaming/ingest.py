@@ -466,9 +466,7 @@ def _arrival_batch(ev_ts: "F.Column", event_id: "F.Column") -> "F.Column":
     )
 
 
-def stream_watermark_late_counts(
-    spark: SparkSession, sf_dir: str, lateness: str = "2 hours"
-) -> DataFrame:
+def stream_watermark_late_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Allowed-lateness accounting under a REAL Structured Streaming
     watermark (VERDICT r7 item 3): 1-hour tumbling counts in APPEND
     mode over three deterministic arrival waves, joined back against
@@ -480,10 +478,10 @@ def stream_watermark_late_counts(
     "delayed" rows); ``maxFilesPerTrigger=1`` + strictly increasing
     mtimes force one micro-batch per wave in wave order. The
     watermark advances between batches to max-seen-event-time minus
-    ``lateness``; append mode emits a window only once the watermark
-    passes its end, and a delayed row is dropped iff its window was
-    already finalizable when the row arrived. Output per finalized
-    window: ``n_accepted`` (what streaming counted) and
+    the 2-hour allowed lateness; append mode emits a window only once
+    the watermark passes its end, and a delayed row is dropped iff its
+    window was already finalizable when the row arrived. Output per
+    finalized window: ``n_accepted`` (what streaming counted) and
     ``n_dropped_late`` (batch total minus accepted).
 
     Oracle = event-time replay in SQL (streaming ≡ batch accounting):
@@ -546,7 +544,7 @@ def stream_watermark_late_counts(
         .parquet(src_dir)
     )
     agg = (
-        stream.withWatermark("__ts", lateness)
+        stream.withWatermark("__ts", "2 hours")
         .groupBy(F.window("__ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n_accepted"))
         .select(F.col("w.start").alias("window_start"), "n_accepted")

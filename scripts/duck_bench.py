@@ -2,13 +2,18 @@
 
 Same protocol as bench.py: one untimed warm-up execution of every
 query, then best-of-3 timed — so neither engine pays first-execution
-compilation/caching inside its timed window.
+compilation/caching inside its timed window. Each timing runs from SQL
+text to fetched result (parse, plan, execute), as bench.py times each
+Spark query from fn() to the forced result.
+
+Usage: python scripts/duck_bench.py [SF_DIR]
 """
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from bench import BENCH_QUERIES

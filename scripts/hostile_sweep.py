@@ -24,9 +24,9 @@ exclusion, dedup_exact's NULLS-LAST keep-first sentinel, and the
 stateful stream fn mirroring SQL SUM on NULL values.
 
 Shared-session conf hygiene (added r20): the sweep reuses ONE
-SparkSession across all ops, and a few TIMED_BUILD-style ops mutate
-session conf (ts_ewma sets spark.sql.legacy.parquet.nanosAsLong) that
-used to leak into later ops' reads — r17 chased two false positives
+SparkSession across all ops, and a few ops whose fn() runs Spark
+jobs mutate session conf (ts_ewma sets
+spark.sql.legacy.parquet.nanosAsLong) that used to leak into later ops' reads — r17 chased two false positives
 (ts_resample_ohlc, sim_knn_bucket_join post-fix) and the r19 final
 sweep re-surfaced the ts_resample_ohlc artifact when a snapshot
 rebless reordered the enumeration. The sweep now snapshots the

@@ -1,26 +1,23 @@
 #!/usr/bin/env python
 """Isolate one or more bench queries: same session/profile/timing as
-bench.py (warm-up lap + best-of-3 on a noop sink), plus optional
-explain("formatted") capture.
+bench.py (warm-up run, then laps timed build-inclusive on a noop sink),
+plus optional explain("formatted") capture.
 
 Usage:
   python scripts/iso_bench.py qid [qid ...] [--explain DIR] [--laps N]
 
-Timing methodology matches bench.py exactly (TIMED_BUILD ops re-run
-fn() inside the timed region; plan-only ops time the force alone), so
-numbers are comparable 1:1 with bench.py's per-query entries.
+Each lap is ``bench.best_of(op, 1)``, so the best lap is comparable 1:1
+with bench.py's per-query entries.
 """
 from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import TIMED_BUILD, _force  # noqa: E402
-from duckdb_data_eng_proj_spark.queries import REGISTRY  # noqa: E402
-from duckdb_data_eng_proj_spark.session import get_spark  # noqa: E402
+from bench import bench_session, best_of  # noqa: E402
+from perfbench.workloads import Operators  # noqa: E402
 
 
 def main() -> None:
@@ -37,41 +34,18 @@ def main() -> None:
         del args[i : i + 2]
     qids = args
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    latency = os.environ.get("SPARK_GRAFT_PROFILE", "latency") != "default"
-    input_bytes = sum(
-        os.path.getsize(os.path.join(sf_dir, f)) for f in os.listdir(sf_dir)
-    )
-    spark = get_spark(
-        app_name="iso_bench", input_bytes=input_bytes, latency_profile=latency
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    _force(REGISTRY["prj_star"].fn(spark, sf_dir))
+    spark = bench_session("iso_bench", sf_dir)
 
-    for qid in qids:
-        spec = REGISTRY[qid]
+    for qid, op in zip(qids, Operators(spark, sf_dir, tuple(qids)).ops()):
         spark.sparkContext.setJobDescription(f"iso:{qid}")
         if explain_dir:
             os.makedirs(explain_dir, exist_ok=True)
-            df = spec.fn(spark, sf_dir)
+            (df,) = op.build()
             with open(os.path.join(explain_dir, f"{qid}.txt"), "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
-        # warm-up lap (bench.py protocol)
-        if qid in TIMED_BUILD:
-            _force(spec.fn(spark, sf_dir))
-            times = []
-            for _ in range(laps):
-                t0 = time.perf_counter()
-                _force(spec.fn(spark, sf_dir))
-                times.append(time.perf_counter() - t0)
-        else:
-            df = spec.fn(spark, sf_dir)
-            _force(df)
-            times = []
-            for _ in range(laps):
-                t0 = time.perf_counter()
-                _force(df)
-                times.append(time.perf_counter() - t0)
+        op.execute(op.build())  # warm-up run (bench.py protocol)
+        times = [best_of(op, 1) for _ in range(laps)]
         print(
             f"{qid}: best={min(times):.4f} laps="
             + ",".join(f"{t:.4f}" for t in times),

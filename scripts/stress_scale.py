@@ -9,6 +9,10 @@ scales and reports the throughput ratio. Linear-ish wall-clock growth
 means no plan degenerates (no accidental cross join, no driver
 collect, no single-task stage) as volume grows.
 
+The session is bench.py's (``bench_session``): the latency profile
+unless SPARK_GRAFT_PROFILE=default, scan splits sized to the sf0.1
+input. Each query is timed ``best_of(op, 2)``, build-inclusive.
+
 Usage: python scripts/stress_scale.py [amplification] [query_id ...]
 (query ids restrict the timed set — used for the deep ×16/×32 sweeps
 of the heavy dedup/knn/ensemble plans)
@@ -19,15 +23,14 @@ from __future__ import annotations
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from bench import bench_session, best_of
 from duckdb_data_eng_proj_spark.io.sources import load_table
-from duckdb_data_eng_proj_spark.queries import REGISTRY
-from duckdb_data_eng_proj_spark.session import get_spark
+from perfbench.workloads import Operators
 
 BASE = "/root/testdata/sf0.1"
 
@@ -88,25 +91,15 @@ def build_amplified(spark, out_dir: str, k: int) -> None:
         out.write.mode("overwrite").parquet(os.path.join(out_dir, f"{name}.parquet"))
 
 
-def time_queries(spark, sf_dir: str, queries=None) -> dict[str, float]:
-    timings = {}
-    for qid in queries or QUERIES:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            REGISTRY[qid].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        timings[qid] = round(best, 3)
-    return timings
+def time_queries(spark, sf_dir: str, queries) -> dict[str, float]:
+    ops = Operators(spark, sf_dir, tuple(queries)).ops()
+    return {qid: round(best_of(op, 2), 3) for qid, op in zip(queries, ops)}
 
 
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     queries = sys.argv[2:] or QUERIES
-    spark = get_spark(app_name="stress", latency_profile=True)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench_session("stress", BASE)
 
     out_dir = tempfile.mkdtemp(prefix=f"stress_x{k}_")
     print(f"amplifying sf0.1 ×{k} → {out_dir}", flush=True)

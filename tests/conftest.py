@@ -2,13 +2,33 @@
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
+import tempfile
 
 import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# The ETL and streaming ids read their CSV inputs from
+# $SPARK_GRAFT_REFERENCE_DIR, fixed when the package is imported
+# (etl/oracle_sql.py). Where neither the variable nor the default
+# reference data exists, generate 1× inputs (perfbench/loangen.py,
+# seed 0) so those ids run instead of failing on a missing file. The
+# golden tests still skip: no generator replaces the reference's
+# committed output/.
+if "SPARK_GRAFT_REFERENCE_DIR" not in os.environ and not os.path.isdir(
+    "/root/reference/data"
+):
+    from perfbench import loangen
+
+    _generated_ref = tempfile.mkdtemp(prefix="loan_reference_")
+    atexit.register(shutil.rmtree, _generated_ref, True)
+    loangen.generate(_generated_ref, scale=1, seed=0)
+    os.environ["SPARK_GRAFT_REFERENCE_DIR"] = _generated_ref
 
 from duckdb_data_eng_proj_spark.io.sources import TESTDATA_TABLES
 from duckdb_data_eng_proj_spark.session import get_spark

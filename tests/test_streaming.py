@@ -14,11 +14,11 @@ import os
 import pytest
 
 from duckdb_data_eng_proj_spark.etl.loan_pipeline import clean_lms, dupe_keys
+from duckdb_data_eng_proj_spark.etl.oracle_sql import _REF as REF
 from duckdb_data_eng_proj_spark.io.sources import read_csv_all_varchar
 from duckdb_data_eng_proj_spark.queries.streaming_q import split_lms_csv
 from duckdb_data_eng_proj_spark.streaming import stream_clean_lms
 
-REF = "/root/reference"
 RUN_TS = dt.datetime(2026, 1, 23, 12, 30, 57)
 
 pytestmark = pytest.mark.skipif(
