@@ -1,4 +1,7 @@
-"""Process-scoped scratch root for sink/roundtrip/index operators.
+"""Process-scoped scratch root: the one place ephemeral directories
+live — sink/roundtrip/index operators (``scratch_dir``), streaming
+sources and checkpoints (``scratch_tmp``) and the stress harness's
+amplified copy.
 
 Rounds 1-4 hardcoded ``/root/repo/.tmp`` (VERDICT r4 "What's wrong"
 #2, ADVICE r4): that breaks any other checkout location, and
@@ -44,6 +47,16 @@ def scratch_root() -> str:
 def scratch_dir(name: str) -> str:
     """Path for a named scratch subdirectory (writers create it)."""
     return os.path.join(scratch_root(), name)
+
+
+def scratch_tmp(prefix: str) -> str:
+    """Unique-per-call scratch directory under the process scratch
+    root: honors SPARK_GRAFT_TMP and is removed at interpreter exit.
+    Uniqueness matters — streaming checkpoints must NEVER be reused
+    across invocations (a reused checkpoint makes a re-run see every
+    source file as already processed and emit nothing), so this is
+    mkdtemp under the managed root, not a fixed scratch_dir(name)."""
+    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
 
 
 def graft_warehouse(spark, *reset_tables: str) -> str:

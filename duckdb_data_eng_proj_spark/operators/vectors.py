@@ -1,21 +1,52 @@
-"""Vector building blocks: dot product / cosine over array<float>.
+"""Vector building blocks and the k-means/IVF centroid family, in both
+engines side by side.
 
 Deterministic by construction: elements are cast to DOUBLE, products
 are summed left-to-right with a 0.0 seed (``F.aggregate`` is a
 sequential fold), so Spark and the DuckDB oracle (a ``list_reduce``
-fold in the same order) produce bit-identical doubles. Final values
-are rounded by callers before comparison/thresholding.
+fold in the same order, ``dot_sql``) produce bit-identical doubles.
+Final values are rounded by callers before comparison/thresholding.
 
-Scale path: these are pure Column expressions — cosine over a 100 TB
-embedding table is a narrow map stage. The all-pairs formulations in
-the query registrations are bucketed (by label / by IVF centroid) so
-the join is a bounded bucket-join, not an O(n²) crossJoin; see
-``sim_ann_ivf*`` for the ANN path.
+The centroid family — every k-means / IVF operator — is built only
+from these primitives (Spark | oracle SQL):
+
+- norm: ``norm`` | ``sqrt(dot_sql(x, x))``
+- fixed-dim normed vectors ``vec_id, embedding, nrm``: ``normed`` |
+  ``normed_cte``; as seed centroids ``cid, c_emb, c_nrm``: ``seeds``
+- argmax-cosine centroid assignment, ties to the lower cid:
+  ``assign`` | ``assign_cte``
+- centroids ranked per query into a probe list: ``probes`` | each
+  oracle's ``row_number() ... <= n`` window
+- one Lloyd update (per-dim sorted-fold means, then the norm):
+  ``update`` / ``sorted_mean`` | ``update_ctes`` / ``MEAN_SQL``
+
+Two rules ride on them, decided once here for both engines:
+
+- Fixed-dim contract (r17 hostile-vintage sweep): the per-dim update
+  folds a fixed ``range(dim)``; an off-width vector NULLs the oracle's
+  missing dims while Spark's posexplode just drops them, so centroid
+  families exclude off-width vectors on both engines (``normed``).
+  Pair-cosine families instead compute prefix cosines (``dot``).
+- Zero-norm exclusion (r16/r17): a zero-norm CENTROID makes every
+  cosine NaN and the engines break the NaN tie differently (DuckDB's
+  ORDER BY cos DESC sorts NaN first, Spark's struct array_min picks
+  the best finite); a zero-norm VECTOR divides by zero, which Spark's
+  ANSI mode raises on. Cosine to/from the zero vector is undefined, so
+  assignment drops both: centroids before packing, vectors before the
+  broadcast scan (``assign``, ``assign_cte``). ``probes`` drops the
+  centroids; its callers pass only nonzero query vectors.
+
+Scale path: these are Column expressions and map-side plans — the k
+centroids are packed into one broadcast row, so assigning or probing
+a 100 TB embedding table is a narrow map stage; only the Lloyd
+update's (cid, pos) aggregate shuffles, bounded by k × dim.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -31,13 +62,26 @@ def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product in DOUBLE (order-pinned, exact),
     over the COMMON PREFIX of both lists (r17 hostile-vintage sweep):
     zip_with NULL-PADS to the longer operand, so a length-mismatched
-    pair folded to NULL while the oracle's least()-ranged _dot_sql
+    pair folded to NULL while the oracle's least()-ranged dot_sql
     computed a prefix dot. Equal lengths (every generated vintage)
     take the direct branch; the slice allocation only runs on
     off-width rows."""
     n = F.least(F.size(a), F.size(b))
     return F.when(F.size(a) == F.size(b), _fold_dot(a, b)).otherwise(
         _fold_dot(F.slice(a, F.lit(1), n), F.slice(b, F.lit(1), n))
+    )
+
+
+def dot_sql(a: str, b: str) -> str:
+    """Oracle twin of ``dot``: sequential left fold in DOUBLE, same
+    order as F.aggregate, over the COMMON PREFIX of both lists —
+    least() is the identity on equal-length vectors (every generated
+    vintage); mismatched lengths mean prefix-cosine on BOTH engines,
+    the hyperplane family's sliced-plane semantics extended to pair
+    cosines."""
+    return (
+        f"list_reduce(list_transform(range(least(len({a}), len({b}))), "
+        f"i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)), (x, y) -> x + y)"
     )
 
 
@@ -56,7 +100,7 @@ def hyperplane_sig(emb: Column, planes: list[list[float]]) -> Column:
 
     Each plane literal is SLICED to the embedding's length so the dot
     is the PARTIAL dot the oracles compute (training._hp_sig_sql /
-    _dot_sql iterate ``range(len(embedding))``). The r15 hardening
+    dot_sql iterate the common prefix). The r15 hardening
     landed this slice only in sim_lsh_hyperplane's inline copy; the
     three other copies (sim_range_search, sim_knn_bucket_join,
     sim_ann_recall_eval) still indexed embedding[0..63] per dimension,
@@ -83,42 +127,204 @@ def hyperplane_sig(emb: Column, planes: list[list[float]]) -> Column:
     )
 
 
-def pack_centroids(cent, cid: str, emb: str, nrm: str):
-    """Collapse a tiny (k-row) centroid table into ONE row holding
-    ``_cents: array<struct<cid, emb, nrm>>``.
+# ---------------------------------------------------------------------------
+# Centroid family: Spark side
+
+
+def normed(vectors: DataFrame, dim: int) -> DataFrame:
+    """``vec_id, embedding, nrm`` over the vectors with exactly ``dim``
+    elements — the fixed-dim contract (module docstring)."""
+    return vectors.filter(F.size("embedding") == dim).select(
+        "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
+    )
+
+
+def seeds(vectors: DataFrame, cid: str = "cid") -> DataFrame:
+    """The ``vectors`` rows as a centroid table — ``vec_id`` as the id
+    column ``cid``, ``c_emb``, ``c_nrm`` — the shape ``assign`` and
+    ``probes`` read and ``update`` writes."""
+    return vectors.select(
+        F.col("vec_id").alias(cid),
+        F.col("embedding").alias("c_emb"),
+        F.col("nrm").alias("c_nrm"),
+    )
+
+
+def _packed(cent: DataFrame, cid: str) -> DataFrame:
+    """The k-row centroid table (``cid, c_emb, c_nrm``), zero-norm rows
+    dropped, collapsed into ONE row ``_cents: array<struct<cid, emb,
+    nrm>>``.
 
     Broadcast-crossJoining that single row gives every vector row the
-    full centroid set as an in-row array, so centroid assignment
-    becomes a per-row HOF argmax — ZERO shuffle of the big side. The
+    full centroid set as an in-row array, so assignment and probing
+    are per-row HOF reductions — ZERO shuffle of the big side. The
     round-1 plan (crossJoin-expand ×k then Window.partitionBy(vec_id)
     row_number) shuffled k× the corpus just to pick a max
-    (VERDICT r1 "What's wrong" #2).
-    """
-    return cent.agg(
+    (VERDICT r1 "What's wrong" #2)."""
+    return cent.filter(F.col("c_nrm") > 0).agg(
         F.collect_list(
             F.struct(
                 F.col(cid).alias("cid"),
-                F.col(emb).alias("emb"),
-                F.col(nrm).alias("nrm"),
+                F.col("c_emb").alias("emb"),
+                F.col("c_nrm").alias("nrm"),
             )
         ).alias("_cents")
     )
 
 
-def scored_centroids(cents: Column, emb: Column, nrm: Column) -> Column:
-    """``array<struct<neg_cos, cid>>`` per row — ascending order ≡
-    (cosine DESC, cid ASC), so ``F.array_min`` is the argmax centroid
-    and ``F.slice(F.array_sort(...), 1, n)`` is the top-n probe list.
+def _scored() -> Column:
+    """The row's centroids as ``array<struct<neg_cos, cid>>``: ascending
+    order ≡ (cosine DESC, cid ASC), so ``array_min`` is the argmax
+    centroid and the sorted array's first n are the top-n probe list.
 
     Order-independent despite collect_list's nondeterministic build
     order: (neg_cos, cid) is a total order (cids are distinct).
-    Cosines use the sequential-fold ``dot`` so they're bit-identical
-    to the DuckDB oracle's list_reduce.
-    """
+    Cosines use the sequential-fold ``dot``, bit-identical to the
+    oracle's list_reduce."""
+    emb, nrm = F.col("embedding"), F.col("nrm")
     return F.transform(
-        cents,
+        F.col("_cents"),
         lambda c: F.struct(
             (-(dot(emb, c["emb"]) / (nrm * c["nrm"]))).alias("neg_cos"),
             c["cid"].alias("cid"),
         ),
+    )
+
+
+def assign(
+    vectors: DataFrame,
+    cent: DataFrame,
+    cid: str = "cid",
+    keep: Sequence[str] = ("vec_id",),
+    cos: str | None = None,
+) -> DataFrame:
+    """Argmax-cosine assignment of ``vectors`` (``embedding, nrm``) to
+    ``cent`` (id column ``cid``, ``c_emb``, ``c_nrm``): the ``keep``
+    columns plus the winning centroid id, named ``cid`` too, and, when
+    ``cos`` names it, the winning cosine
+    (``-neg_cos`` is an exact sign flip, bit-identical to the oracle's
+    direct cosine). Ties go to the lower cid, like ``assign_cte``.
+
+    Map-side: the centroids are packed into one broadcast row and each
+    vector takes ``array_min`` over (neg_cos, cid) — the corpus is
+    never shuffled. Zero norms are excluded on both sides (module
+    docstring). With no admissible centroid the array is empty and
+    ``cid`` is NULL; callers that must fail empty like the oracle's
+    CROSS JOIN filter it."""
+    best = F.col("_best")
+    cols = [*keep, best["cid"].alias(cid)]
+    if cos is not None:
+        cols.append((-best["neg_cos"]).alias(cos))
+    return (
+        vectors.filter(F.col("nrm") > 0)
+        .crossJoin(F.broadcast(_packed(cent, cid)))
+        .withColumn("_best", F.array_min(_scored()))
+        .select(*cols)
+    )
+
+
+def probes(
+    queries: DataFrame,
+    cent: DataFrame,
+    keep: Sequence[Column],
+    cid: str = "cid",
+    n: int | None = None,
+) -> DataFrame:
+    """Per query row (``embedding``, nonzero ``nrm``), its centroids
+    ranked by (cosine DESC, cid ASC): one row per (query, centroid) with the
+    ``keep`` columns and the centroid id as ``cid``. ``n`` keeps the
+    top-n probe list; ``n=None`` keeps every centroid and adds its
+    1-based probe rank ``prn``. Map-side like ``assign``: the in-row
+    scored array is sorted and sliced — no shuffle, no window stage."""
+    joined = queries.crossJoin(F.broadcast(_packed(cent, cid)))
+    ranked = F.array_sort(_scored())
+    if n is None:
+        rows = joined.select(*keep, F.posexplode(ranked).alias("_pos", "_p"))
+        extra = [(F.col("_pos") + 1).cast("bigint").alias("prn")]
+    else:
+        rows = joined.select(*keep, F.explode(F.slice(ranked, 1, n)).alias("_p"))
+        extra = []
+    kept = [c for c in rows.columns if c not in ("_pos", "_p")]
+    return rows.select(*kept, F.col("_p")["cid"].alias(cid), *extra)
+
+
+def sorted_mean(values: Column) -> Column:
+    """Group mean as a sorted fold: collect the group's values, sort,
+    fold left from 0.0, divide by the row count — partition-order
+    independent and bit-identical to ``MEAN_SQL``. ``values`` should be
+    DOUBLE; callers pass it cast where their plan already casts it."""
+    return F.aggregate(
+        F.sort_array(F.collect_list(values)), F.lit(0.0), lambda a, x: a + x
+    ) / F.count("*")
+
+
+def update(vectors: DataFrame, assigned: DataFrame) -> DataFrame:
+    """One Lloyd update: each cluster's per-dim sorted-fold mean over
+    its members (``assigned``: ``vec_id, cid``, joined to ``vectors``
+    for the embeddings), reassembled in dim order, with its norm —
+    ``cid, c_emb, c_nrm``, the centroid table ``assign`` reads."""
+    exploded = (
+        assigned.join(vectors, "vec_id")
+        .select("cid", F.posexplode(F.col("embedding")).alias("pos", "val"))
+        .withColumn("val", F.col("val").cast("double"))
+    )
+    means = exploded.groupBy("cid", "pos").agg(sorted_mean(F.col("val")).alias("m"))
+    cent = means.groupBy("cid").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
+        ).alias("c_emb")
+    )
+    return cent.select("cid", "c_emb", norm(F.col("c_emb")).alias("c_nrm"))
+
+
+# ---------------------------------------------------------------------------
+# Centroid family: oracle SQL (DuckDB) twins
+
+
+def normed_cte(dim: int) -> str:
+    """``e`` CTE: the SQL twin of ``normed`` over ``embeddings``."""
+    return (
+        "e AS (SELECT vec_id, embedding, "
+        f"sqrt({dot_sql('embedding', 'embedding')}) AS nrm "
+        f"FROM embeddings WHERE len(embedding) = {dim})"
+    )
+
+
+def assign_cte(name: str, src: str, cent: str) -> str:
+    """``name`` CTE (``vec_id, cid``): the SQL twin of ``assign`` —
+    every ``src`` vector's argmax-cosine centroid of ``cent``
+    (``cid, c_emb, c_nrm``) by row_number over (cos DESC, cid), zero
+    norms excluded on both sides."""
+    cos = f"{dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm)"
+    return (
+        f"{name} AS (SELECT vec_id, cid FROM ("
+        f"SELECT v.vec_id, c.cid, row_number() OVER ("
+        f"PARTITION BY v.vec_id ORDER BY {cos} DESC, c.cid) AS rn "
+        f"FROM {src} v CROSS JOIN {cent} c "
+        "WHERE v.nrm > 0 AND c.c_nrm > 0) WHERE rn = 1)"
+    )
+
+
+# Sorted-fold mean of dim i over a (cid, i) group of rows joined to the
+# normed CTE ``e`` — the SQL twin of ``sorted_mean``.
+MEAN_SQL = (
+    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+    "list_sort(list(CAST(e.embedding[i+1] AS DOUBLE)))), (x, y) -> x + y) "
+    "/ COUNT(*)"
+)
+
+
+def update_ctes(prefix: str, assign: str, dim: int) -> str:
+    """``{prefix}m`` and ``{prefix}`` CTEs: the SQL twin of ``update``
+    over the members ``assign`` names (``vec_id, cid``), joined to the
+    normed CTE ``e`` — per-dim ``MEAN_SQL`` for dims ``range(dim)``,
+    then the ordered ``c_emb`` list and its norm ``c_nrm``."""
+    emb = "list(m ORDER BY pos)"
+    return (
+        f"{prefix}m AS (SELECT a.cid, t.i AS pos, {MEAN_SQL} AS m "
+        f"FROM {assign} a JOIN e ON e.vec_id = a.vec_id, range({dim}) t(i) "
+        f"GROUP BY a.cid, t.i), "
+        f"{prefix} AS (SELECT cid, {emb} AS c_emb, "
+        f"sqrt({dot_sql(emb, emb)}) AS c_nrm "
+        f"FROM {prefix}m GROUP BY cid)"
     )

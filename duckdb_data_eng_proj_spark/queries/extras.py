@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100, exact_units
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL
+from duckdb_data_eng_proj_spark.operators.vectors import sorted_mean
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
 from duckdb_data_eng_proj_spark.io.scratch import scratch_dir as _scratch
@@ -444,11 +445,8 @@ def vec_centroid_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     exploded = e.select(
         "label", F.posexplode(F.col("embedding")).alias("pos", "val")
     ).withColumn("val", F.col("val").cast("double"))
-    sorted_sum = F.aggregate(
-        F.sort_array(F.collect_list("val")), F.lit(0.0), lambda a, x: a + x
-    )
     return exploded.groupBy("label", "pos").agg(
-        F.round(sorted_sum / F.count("*"), 6).alias("centroid")
+        F.round(sorted_mean(F.col("val")), 6).alias("centroid")
     )
 
 

@@ -40,9 +40,13 @@ from pyspark.sql import functions as F
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.operators.lsh import bucket_pairs
 from duckdb_data_eng_proj_spark.operators.vectors import (
-    dot,
-    pack_centroids,
-    scored_centroids,
+    assign,
+    assign_cte,
+    normed,
+    normed_cte,
+    seeds,
+    update,
+    update_ctes,
 )
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import (
@@ -369,61 +373,6 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vec_id % 3 <> 0) isolate DATA drift from seed choice.
 _DRIFT_SEED_LIMIT = 24  # 24 ids minus the 8 multiples of 3 = 16 seeds
 
-_DOT_SQL = (
-    "list_reduce(list_transform(range(len({a})), "
-    "i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)), "
-    "(x, y) -> x + y)"
-)
-
-
-def _drift_assign_cte(name: str, src: str, cent: str) -> str:
-    """Argmax-cosine assignment of ``src`` vectors to ``cent`` —
-    ml_iter._assign_cte parameterized by the vector source (the stale
-    index assigns yesterday's corpus, the drift scan assigns today's;
-    citing ml_iter.py:47).
-
-    Zero norms are excluded on BOTH sides (r16): a zero CENTROID
-    makes every cosine NaN and the two engines break the NaN tie
-    differently (DuckDB's ORDER BY cos DESC sorts NaN first, Spark's
-    struct array_min picks the best finite); a zero VECTOR divides by
-    zero, which Spark's ANSI mode raises on outright. Cosine to/from
-    the zero vector is undefined, so both engines drop such rows from
-    assignment — the Spark side of every consumer filters the same
-    two predicates (centroids before packing, vectors before the
-    broadcast scan)."""
-    cos = (
-        _DOT_SQL.format(a="v.embedding", b="c.c_emb") + " / (v.nrm * c.c_nrm)"
-    )
-    return (
-        f"{name} AS (SELECT vec_id, cid FROM ("
-        f"SELECT v.vec_id, c.cid, row_number() OVER ("
-        f"PARTITION BY v.vec_id ORDER BY {cos} DESC, c.cid) AS rn "
-        f"FROM {src} v CROSS JOIN {cent} c "
-        "WHERE c.c_nrm > 0 AND v.nrm > 0) WHERE rn = 1)"
-    )
-
-
-def _drift_update_ctes(prefix: str, assign: str) -> str:
-    """Per-dim sorted-fold means over the assigned vectors
-    (ml_iter._update_ctes verbatim shape, citing ml_iter.py:57 — the
-    assignment set already restricts which vectors contribute, so the
-    vector join is always against the full ``e``)."""
-    mean = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_sort(list(CAST(e.embedding[i+1] AS DOUBLE)))), (x, y) -> x + y) "
-        "/ COUNT(*)"
-    )
-    emb = "list(m ORDER BY pos)"
-    return (
-        f"{prefix}m AS (SELECT a.cid, t.i AS pos, {mean} AS m "
-        f"FROM {assign} a JOIN e ON e.vec_id = a.vec_id, range(64) t(i) "
-        f"GROUP BY a.cid, t.i), "
-        f"{prefix} AS (SELECT cid, {emb} AS c_emb, "
-        f"sqrt({_DOT_SQL.format(a=emb, b=emb)}) AS c_nrm "
-        f"FROM {prefix}m GROUP BY cid)"
-    )
-
-
 _DRIFT_DISP_SQL = (
     "list_reduce(list_transform(range(64), "
     "i -> (CAST(o.c_emb[i+1] AS DOUBLE) - CAST(n.c_emb[i+1] AS DOUBLE)) "
@@ -436,23 +385,21 @@ _DRIFT_DISP_SQL = (
     "sim_ann_index_drift",
     oracle=(
         # fixed-dim contract (r17): the per-dim update folds hardcode 64
-        "WITH e AS (SELECT vec_id, embedding, "
-        + f"sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm "
-        "FROM embeddings WHERE len(embedding) = 64), "
+        f"WITH {normed_cte(64)}, "
         "eo AS (SELECT * FROM e WHERE vec_id % 3 <> 0), "
         "cent0 AS (SELECT vec_id AS cid, embedding AS c_emb, nrm AS c_nrm "
         f"FROM e WHERE vec_id < {_DRIFT_SEED_LIMIT} AND vec_id % 3 <> 0), "
-        + _drift_assign_cte("a_old", "eo", "cent0")
+        + assign_cte("a_old", "eo", "cent0")
         + ", "
-        + _drift_update_ctes("cold", "a_old")
+        + update_ctes("cold", "a_old", 64)
         + ", "
-        + _drift_assign_cte("a_new", "e", "cent0")
+        + assign_cte("a_new", "e", "cent0")
         + ", "
-        + _drift_update_ctes("cnew", "a_new")
+        + update_ctes("cnew", "a_new", 64)
         + ", "
-        + _drift_assign_cte("stale", "e", "cold")
+        + assign_cte("stale", "e", "cold")
         + ", "
-        + _drift_assign_cte("fresh", "e", "cnew")
+        + assign_cte("fresh", "e", "cnew")
         + ", "
         "cnt AS (SELECT s.cid AS scid, f.cid AS fcid "
         "FROM stale s JOIN fresh f ON f.vec_id = s.vec_id), "
@@ -510,66 +457,20 @@ _DRIFT_DISP_SQL = (
     tags=("similarity",),
 )
 def sim_ann_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = ensure_parallelism(t(spark, sf_dir, "embeddings")).filter(
-        F.size("embedding") == 64  # fixed-dim contract (r17)
-    ).select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+    e = normed(
+        ensure_parallelism(t(spark, sf_dir, "embeddings")), 64
     ).localCheckpoint()
     eo = e.filter(F.col("vec_id") % 3 != 0)
-    cent0 = e.filter(
-        (F.col("vec_id") < _DRIFT_SEED_LIMIT) & (F.col("vec_id") % 3 != 0)
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
+    cent0 = seeds(
+        e.filter((F.col("vec_id") < _DRIFT_SEED_LIMIT) & (F.col("vec_id") % 3 != 0))
     )
 
-    def assign(src: DataFrame, cent: DataFrame) -> DataFrame:
-        # c_nrm > 0 / nrm > 0 mirror _drift_assign_cte's zero-norm
-        # guards (r16) — see that helper's docstring.
-        packed = pack_centroids(
-            cent.filter(F.col("c_nrm") > 0), cid="cid", emb="c_emb", nrm="c_nrm"
-        )
-        best = F.array_min(
-            scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-        )
-        return (
-            src.filter(F.col("nrm") > 0)
-            .crossJoin(F.broadcast(packed))
-            .select("vec_id", best["cid"].alias("cid"))
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        exploded = (
-            assigned.join(e, "vec_id")
-            .select("cid", F.posexplode(F.col("embedding")).alias("pos", "val"))
-            .withColumn("val", F.col("val").cast("double"))
-        )
-        sorted_sum = F.aggregate(
-            F.sort_array(F.collect_list("val")), F.lit(0.0), lambda a, x: a + x
-        )
-        means = exploded.groupBy("cid", "pos").agg(
-            (sorted_sum / F.count("*")).alias("m")
-        )
-        cent = means.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("c_emb")
-        )
-        return cent.select(
-            "cid",
-            "c_emb",
-            F.sqrt(dot(F.col("c_emb"), F.col("c_emb"))).alias("c_nrm"),
-        )
-
     # Eager-checkpoint both centroid sets: each feeds a broadcast
-    # (pack_centroids) — the r10 lesson: lazily-checkpointed subplans
-    # consumed by broadcasts get raced into concurrent recomputes.
-    cold = update(assign(eo, cent0)).localCheckpoint()
-    cnew = update(assign(e, cent0)).localCheckpoint()
+    # (the packed centroids) — the r10 lesson: lazily-checkpointed
+    # subplans consumed by broadcasts get raced into concurrent
+    # recomputes.
+    cold = update(e, assign(eo, cent0)).localCheckpoint()
+    cnew = update(e, assign(e, cent0)).localCheckpoint()
     stale = assign(e, cold).withColumnRenamed("cid", "scid")
     fresh = assign(e, cnew).withColumnRenamed("cid", "fcid")
     cnt = stale.join(fresh, "vec_id").localCheckpoint()

@@ -58,20 +58,18 @@ from duckdb_data_eng_proj_spark.operators.textops import (
     word_ngrams,
 )
 from duckdb_data_eng_proj_spark.operators.vectors import (
-    dot,
-    pack_centroids,
-    scored_centroids,
+    assign,
+    assign_cte,
+    normed,
+    normed_cte,
+    seeds,
 )
-from duckdb_data_eng_proj_spark.queries.extras_r11 import (
-    _DRIFT_SEED_LIMIT,
-    _drift_assign_cte,
-)
+from duckdb_data_eng_proj_spark.queries.extras_r11 import _DRIFT_SEED_LIMIT
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import (
     _LSH_PRELUDE,
     _TOKS_CTE,
     _bigram_sets_df,
-    _dot_sql,
     _fingerprint_expr,
     _fp_sql,
     _lsh_bands_df,
@@ -93,16 +91,14 @@ _ADMIT_SPLIT_FACTOR = 2
     "sim_ann_ivf_admit",
     oracle=(
         # fixed-dim contract (r17): the admit update folds hardcode 64
-        "WITH e AS (SELECT vec_id, embedding, "
-        f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm "
-        "FROM embeddings WHERE len(embedding) = 64), "
+        f"WITH {normed_cte(64)}, "
         "eo AS (SELECT * FROM e WHERE vec_id % 3 <> 0), "
         "nb AS (SELECT * FROM e WHERE vec_id % 3 = 0), "
         "cent AS (SELECT vec_id AS cid, embedding AS c_emb, nrm AS c_nrm "
         f"FROM e WHERE vec_id < {_DRIFT_SEED_LIMIT} AND vec_id % 3 <> 0), "
-        + _drift_assign_cte("a_old", "eo", "cent")
+        + assign_cte("a_old", "eo", "cent")
         + ", "
-        + _drift_assign_cte("a_new", "nb", "cent")
+        + assign_cte("a_new", "nb", "cent")
         + ", "
         "co AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n FROM a_old "
         "GROUP BY cid), "
@@ -156,45 +152,23 @@ _ADMIT_SPLIT_FACTOR = 2
     tags=("similarity",),
 )
 def sim_ann_ivf_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = ensure_parallelism(t(spark, sf_dir, "embeddings")).filter(
-        F.size("embedding") == 64  # fixed-dim contract (r17)
-    ).select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    cent = e.filter(
-        (F.col("vec_id") < _DRIFT_SEED_LIMIT) & (F.col("vec_id") % 3 != 0)
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
+    e = normed(ensure_parallelism(t(spark, sf_dir, "embeddings")), 64)
+    cent = seeds(
+        e.filter((F.col("vec_id") < _DRIFT_SEED_LIMIT) & (F.col("vec_id") % 3 != 0))
     )
     # Eager-checkpoint the centroid table before packing: it feeds a
     # broadcast (the r10 lesson — lazily-shared subplans under
-    # broadcasts race into concurrent recomputes). c_nrm > 0 mirrors
-    # _drift_assign_cte's zero-norm centroid guard (r16).
+    # broadcasts race into concurrent recomputes).
     cent = cent.localCheckpoint()
-    packed = pack_centroids(
-        cent.filter(F.col("c_nrm") > 0), cid="cid", emb="c_emb", nrm="c_nrm"
-    )
-    best = F.array_min(
-        scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-    )
 
     # ONE corpus pass (r16 — previously two disjoint scans, one per
     # generation): existing (vec_id % 3 <> 0) and incoming batch
     # (vec_id % 3 = 0) partition e exactly, so conditional counts over
     # a single assignment scan produce both columns. The oracle keeps
     # the two-CTE spec form; the counts are identical by partition.
-    # nrm > 0 mirrors _drift_assign_cte's zero-norm vector guard.
     cnts = (
-        e.filter(F.col("nrm") > 0)
-        .crossJoin(F.broadcast(packed))
-        .select(
-            best["cid"].alias("cid"),
-            (F.col("vec_id") % 3 == 0).alias("_incoming"),
-        )
+        assign(e, cent)
+        .select("cid", (F.col("vec_id") % 3 == 0).alias("_incoming"))
         .groupBy("cid")
         .agg(
             F.count(F.when(~F.col("_incoming"), F.lit(1)))

@@ -58,11 +58,10 @@ names matching the oracle exactly.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from duckdb_data_eng_proj_spark.io.scratch import scratch_tmp
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.operators.lsh import (
     band_table,
@@ -70,15 +69,27 @@ from duckdb_data_eng_proj_spark.operators.lsh import (
     shingle_sets,
 )
 from duckdb_data_eng_proj_spark.operators.textops import tokens
+from duckdb_data_eng_proj_spark.operators.vectors import (
+    assign,
+    assign_cte,
+    dot,
+    dot_sql,
+    normed,
+    normed_cte,
+    probes,
+    seeds,
+    update,
+    update_ctes,
+)
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import (
     _ASSIGN_CTES,
-    _dot_sql,
     _ivf_parts,
     _LSH_PRELUDE,
     _TOKS_CTE,
 )
 from duckdb_data_eng_proj_spark.queries.extras_r11 import (
+    _DRIFT_SEED_LIMIT,
     _INC_JACCARD,
     _INC_VERIFY_SQL,
 )
@@ -111,7 +122,7 @@ def _rrf_term_sql(rk: str) -> str:
         "probes AS (SELECT query_id, centroid_id FROM ("
         "SELECT q.vec_id AS query_id, c.centroid_id, row_number() OVER ("
         "PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, "
+        f"{dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, "
         "c.centroid_id) AS prn "
         f"FROM e q CROSS JOIN cent c WHERE q.vec_id < {_RRF_NQ} "
         "AND q.nrm > 0) "
@@ -120,7 +131,7 @@ def _rrf_term_sql(rk: str) -> str:
         "JOIN assign a ON a.centroid_id = p.centroid_id "
         "WHERE a.vec_id <> p.query_id), "
         "sscored AS (SELECT c.query_id, c.neighbor_id, "
-        f"{_dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
+        f"{dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
         "FROM cand c JOIN e q ON q.vec_id = c.query_id "
         "JOIN e n ON n.vec_id = c.neighbor_id), "
         "sem AS (SELECT query_id, neighbor_id AS doc_id, rk FROM ("
@@ -185,50 +196,27 @@ def _rrf_term_sql(rk: str) -> str:
 )
 def txt_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # --- semantic half (sim_ann_ivf_search's plan, k=10) -------------
-    from duckdb_data_eng_proj_spark.operators.vectors import (
-        dot,
-        pack_centroids,
-        scored_centroids,
-    )
-
     en, cent, _ = _ivf_parts(spark, sf_dir)
     q = en.filter((F.col("vec_id") < _RRF_NQ) & (F.col("nrm") > 0))
-    packed = pack_centroids(cent, cid="centroid_id", emb="c_emb", nrm="c_nrm")
-    probes = (
-        q.crossJoin(F.broadcast(packed))
-        .select(
+    probe = probes(
+        q,
+        cent,
+        [
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        scored_centroids(
-                            F.col("_cents"), F.col("embedding"), F.col("nrm")
-                        )
-                    ),
-                    1,
-                    4,
-                )
-            ).alias("_p"),
-        )
-        .select(
-            "query_id", "q_emb", "q_nrm", F.col("_p")["cid"].alias("centroid_id")
-        )
+        ],
+        cid="centroid_id",
+        n=4,
     )
-    corpus = en.filter(F.col("nrm") > 0).crossJoin(F.broadcast(packed)).select(
-        "vec_id",
-        "embedding",
-        "nrm",
-        F.array_min(
-            scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-        )["cid"].alias("centroid_id"),
+    corpus = assign(
+        en, cent, cid="centroid_id", keep=("vec_id", "embedding", "nrm")
     )
     cos = dot(F.col("q_emb"), F.col("embedding")) / (
         F.col("q_nrm") * F.col("nrm")
     )
     sscored = (
-        corpus.join(F.broadcast(probes), "centroid_id")
+        corpus.join(F.broadcast(probe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id", F.col("vec_id").alias("doc_id"), cos.alias("cos_raw")
@@ -354,7 +342,12 @@ def _bpe_fold_col() -> F.Column:
     )
 
 
-def _bpe_oracle() -> str:
+def _bpe_chain_sql(rounds: int) -> str:
+    """DuckDB CTE chain: v0 (word-frequency vocab, char-split) through
+    v{rounds} (encoded vocab after each argmax merge), with per-round
+    m{r} (the 1-row merge rule) and st{r} (corpus tokens after) —
+    parameterized by round count so txt_bpe_apply (3 rounds), the
+    trainer (6 rounds) and the encoder (3 rounds) share one spelling."""
     parts = [
         f"WITH {_TOKS_CTE}, ",
         "v0 AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c, "
@@ -362,7 +355,7 @@ def _bpe_oracle() -> str:
         "(SELECT unnest(tk) AS w FROM toks) "
         "WHERE NOT contains(w, chr(31)) GROUP BY w)",
     ]
-    for r in range(1, _BPE_ROUNDS + 1):
+    for r in range(1, rounds + 1):
         prev = f"v{r - 1}"
         parts.append(
             # scalar range() + list_transform + unnest: DuckDB 1.0's
@@ -379,13 +372,78 @@ def _bpe_oracle() -> str:
             f", st{r} AS (SELECT CAST(SUM(c * len(s)) AS BIGINT) AS toks "
             f"FROM v{r})"
         )
+    return "".join(parts)
+
+
+def _bpe_trained_vocab(
+    spark: SparkSession, sf_dir: str, rounds: int
+) -> tuple[DataFrame, list[tuple[DataFrame, DataFrame]]]:
+    """Run ``rounds`` argmax merges over the word-frequency vocabulary
+    and return (final encoded vocab, per-round (merge-rule,
+    encoded-vocab) pairs). One corpus scan builds v0; every round is
+    vocab-bounded: pair aggregate, 1-row eagerly-checkpointed merge
+    rule, map-side fold."""
+    d = ensure_parallelism(t(spark, sf_dir, "documents"))
+    us = "\x1f"
+    vocab = (
+        d.select(F.explode(tokens(F.col("text"))).alias("w"))
+        .filter(~F.col("w").contains(us))
+        .groupBy("w")
+        .agg(F.count("*").cast("bigint").alias("c"))
+        .select("w", "c", F.split("w", "").alias("s"))
+        # vocab feeds every round (pair stats + fold) — one corpus
+        # pass, materialized once (the iterative-family barrier).
+        .localCheckpoint(eager=True)
+    )
+    ledger: list[tuple[DataFrame, DataFrame]] = []
+    v = vocab
+    for _ in range(rounds):
+        pairs = (
+            # size guard BEFORE the transform: F.sequence(1, 0) counts
+            # BACKWARDS (the word_ngrams lesson) — single-symbol words
+            # contribute no pairs, exactly like the oracle's empty
+            # range(1, 1).
+            v.filter(F.size("s") >= 2)
+            .select(
+                "c",
+                F.explode(
+                    F.expr(
+                        "transform(sequence(1, size(s) - 1), "
+                        "i -> struct(element_at(s, i) AS a, "
+                        "element_at(s, i + 1) AS b))"
+                    )
+                ).alias("p"),
+            )
+            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), "c")
+            .groupBy("a", "b")
+            .agg(F.sum("c").cast("bigint").alias("f"))
+        )
+        # 1-row merge rule: eagerly checkpointed so the pair aggregate
+        # runs as a normal job, never inside the broadcast future
+        # (audit_broadcast_subtrees r13 bright line).
+        m = (
+            pairs.orderBy(F.desc("f"), F.asc("a"), F.asc("b"))
+            .limit(1)
+            .localCheckpoint(eager=True)
+        )
+        v = (
+            v.crossJoin(F.broadcast(m))
+            .select("w", "c", _bpe_fold_col().alias("s"))
+            # per-round barrier: next round's statistics and this
+            # round's tokens_after / vocab_symbols read these symbols.
+            .localCheckpoint(eager=True)
+        )
+        ledger.append((m, v))
+    return v, ledger
+
+
+def _bpe_oracle() -> str:
     selects = [
         f"SELECT CAST({r} AS BIGINT) AS round, a AS sym_a, b AS sym_b, "
         f"f AS pair_freq, toks AS tokens_after FROM m{r}, st{r}"
         for r in range(1, _BPE_ROUNDS + 1)
     ]
-    parts.append(" " + " UNION ALL ".join(selects))
-    return "".join(parts)
+    return _bpe_chain_sql(_BPE_ROUNDS) + " " + " UNION ALL ".join(selects)
 
 
 @register(
@@ -418,56 +476,9 @@ def _bpe_oracle() -> str:
     tags=("text",),
 )
 def txt_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = ensure_parallelism(t(spark, sf_dir, "documents"))
-    us = "\x1f"
-    vocab = (
-        d.select(F.explode(tokens(F.col("text"))).alias("w"))
-        .filter(~F.col("w").contains(us))
-        .groupBy("w")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .select("w", "c", F.split("w", "").alias("s"))
-        # vocab feeds every round (pair stats + fold) — one corpus
-        # pass, materialized once (the iterative-family barrier).
-        .localCheckpoint(eager=True)
-    )
-
+    _, ledger = _bpe_trained_vocab(spark, sf_dir, _BPE_ROUNDS)
     rows = []
-    v = vocab
-    for r in range(1, _BPE_ROUNDS + 1):
-        pairs = (
-            # size guard BEFORE the transform: F.sequence(1, 0) counts
-            # BACKWARDS (the word_ngrams lesson) — single-symbol words
-            # contribute no pairs, exactly like the oracle's empty
-            # range(1, 1).
-            v.filter(F.size("s") >= 2)
-            .select(
-                "c",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(s) - 1), "
-                        "i -> struct(element_at(s, i) AS a, "
-                        "element_at(s, i + 1) AS b))"
-                    )
-                ).alias("p"),
-            )
-            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), "c")
-            .groupBy("a", "b")
-            .agg(F.sum("c").cast("bigint").alias("f"))
-        )
-        # 1-row merge rule: eagerly checkpointed so the pair aggregate
-        # runs as a normal job, never inside the broadcast future
-        # below (audit_broadcast_subtrees r13).
-        m = (
-            pairs.orderBy(F.desc("f"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        applied = v.crossJoin(F.broadcast(m)).select(
-            "w", "c", _bpe_fold_col().alias("s")
-        )
-        # per-round barrier: round r+1's statistics read these encoded
-        # symbols, and the tokens_after aggregate reads them too.
-        v = applied.localCheckpoint(eager=True)
+    for r, (m, v) in enumerate(ledger, start=1):
         st = v.agg(
             F.sum(F.col("c") * F.size("s")).cast("bigint").alias("tokens_after")
         )
@@ -587,7 +598,7 @@ def ext_stream_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_bands, idx_bg = _admit_build_index(spark, sf_dir, docs=docs)
 
     # Two real micro-batches: parity split, one file per trigger.
-    src_dir = tempfile.mkdtemp(prefix="dedup_admit_src_")
+    src_dir = scratch_tmp("dedup_admit_src_")
     for part in (0, 1):
         incoming.filter(F.pmod("doc_id", F.lit(2)) == part).coalesce(
             1
@@ -669,7 +680,7 @@ def ext_stream_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
             else acc["df"].unionByName(verdicts)
         )
 
-    ckpt = tempfile.mkdtemp(prefix="dedup_admit_ckpt_")
+    ckpt = scratch_tmp("dedup_admit_ckpt_")
     qy = (
         stream.writeStream.foreachBatch(admit_batch)
         .outputMode("append")
@@ -711,41 +722,23 @@ def ext_stream_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # flag rule: n_new * 1000 >= n_members * 350.
 _REPAIR_PERMILLE = 350
 
-from duckdb_data_eng_proj_spark.operators.vectors import (  # noqa: E402
-    dot,
-    pack_centroids,
-    scored_centroids,
-)
-from duckdb_data_eng_proj_spark.queries.extras_r11 import (  # noqa: E402
-    _DOT_SQL,
-    _DRIFT_SEED_LIMIT,
-    _drift_assign_cte,
-    _drift_update_ctes,
-)
-
-_REPAIR_COS_OLD = (
-    _DOT_SQL.format(a="e.embedding", b="o.c_emb") + " / (e.nrm * o.c_nrm)"
-)
-_REPAIR_COS_NEW = (
-    _DOT_SQL.format(a="e.embedding", b="r.c_emb") + " / (e.nrm * r.c_nrm)"
-)
+_REPAIR_COS_OLD = dot_sql("e.embedding", "o.c_emb") + " / (e.nrm * o.c_nrm)"
+_REPAIR_COS_NEW = dot_sql("e.embedding", "r.c_emb") + " / (e.nrm * r.c_nrm)"
 
 
 @register(
     "sim_ann_ivf_repair",
     oracle=(
         # fixed-dim contract (r17): the repair update folds hardcode 64
-        "WITH e AS (SELECT vec_id, embedding, "
-        + f"sqrt({_DOT_SQL.format(a='embedding', b='embedding')}) AS nrm "
-        "FROM embeddings WHERE len(embedding) = 64), "
+        f"WITH {normed_cte(64)}, "
         "eo AS (SELECT * FROM e WHERE vec_id % 3 <> 0), "
         "cent0 AS (SELECT vec_id AS cid, embedding AS c_emb, nrm AS c_nrm "
         f"FROM e WHERE vec_id < {_DRIFT_SEED_LIMIT} AND vec_id % 3 <> 0), "
-        + _drift_assign_cte("a_old", "eo", "cent0")
+        + assign_cte("a_old", "eo", "cent0")
         + ", "
-        + _drift_update_ctes("cold", "a_old")
+        + update_ctes("cold", "a_old", 64)
         + ", "
-        + _drift_assign_cte("a_t", "e", "cold")
+        + assign_cte("a_t", "e", "cold")
         + ", "
         "cs AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_members, "
         "CAST(SUM(CASE WHEN vec_id % 3 = 0 THEN 1 ELSE 0 END) AS BIGINT) "
@@ -754,7 +747,7 @@ _REPAIR_COS_NEW = (
         f"WHERE n_new * 1000 >= n_members * {_REPAIR_PERMILLE}), "
         "a_f AS (SELECT a.vec_id, a.cid FROM a_t a "
         "JOIN flg f ON f.cid = a.cid), "
-        + _drift_update_ctes("rep", "a_f")
+        + update_ctes("rep", "a_f", 64)
         + ", "
         "sc AS (SELECT a.cid, "
         f"CAST(SUM(CAST(floor({_REPAIR_COS_OLD} * 1000000) AS BIGINT)) "
@@ -803,70 +796,17 @@ _REPAIR_COS_NEW = (
     tags=("similarity",),
 )
 def sim_ann_ivf_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        ensure_parallelism(t(spark, sf_dir, "embeddings"))
-        .filter(F.size("embedding") == 64)  # fixed-dim contract (r17)
-        .select(
-            "vec_id",
-            "embedding",
-            F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-        )
-        .localCheckpoint()
-    )
+    e = normed(
+        ensure_parallelism(t(spark, sf_dir, "embeddings")), 64
+    ).localCheckpoint()
     eo = e.filter(F.col("vec_id") % 3 != 0)
-    cent0 = e.filter(
-        (F.col("vec_id") < _DRIFT_SEED_LIMIT) & (F.col("vec_id") % 3 != 0)
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
+    cent0 = seeds(
+        e.filter((F.col("vec_id") < _DRIFT_SEED_LIMIT) & (F.col("vec_id") % 3 != 0))
     )
-
-    # assign/update mirror sim_ann_index_drift's (extras_r11.py:431) —
-    # duplicated rather than refactored so the verified drift op's
-    # core hash stays untouched.
-    def assign(src: DataFrame, cent: DataFrame) -> DataFrame:
-        # c_nrm > 0 / nrm > 0 mirror _drift_assign_cte's zero-norm
-        # guards (r16) — see that helper's docstring.
-        packed = pack_centroids(
-            cent.filter(F.col("c_nrm") > 0), cid="cid", emb="c_emb", nrm="c_nrm"
-        )
-        best = F.array_min(
-            scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-        )
-        return (
-            src.filter(F.col("nrm") > 0)
-            .crossJoin(F.broadcast(packed))
-            .select("vec_id", best["cid"].alias("cid"))
-        )
-
-    def update(assigned: DataFrame) -> DataFrame:
-        exploded = (
-            assigned.join(e, "vec_id")
-            .select("cid", F.posexplode(F.col("embedding")).alias("pos", "val"))
-            .withColumn("val", F.col("val").cast("double"))
-        )
-        sorted_sum = F.aggregate(
-            F.sort_array(F.collect_list("val")), F.lit(0.0), lambda a, x: a + x
-        )
-        means = exploded.groupBy("cid", "pos").agg(
-            (sorted_sum / F.count("*")).alias("m")
-        )
-        cent = means.groupBy("cid").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("c_emb")
-        )
-        return cent.select(
-            "cid",
-            "c_emb",
-            F.sqrt(dot(F.col("c_emb"), F.col("c_emb"))).alias("c_nrm"),
-        )
 
     # Eager checkpoints on every table a broadcast consumes (the
     # audit rule + the r10 lazily-checkpointed-broadcast race lesson).
-    cold = update(assign(eo, cent0)).localCheckpoint()
+    cold = update(e, assign(eo, cent0)).localCheckpoint()
     a_t = assign(e, cold).localCheckpoint()
     cs = a_t.groupBy("cid").agg(
         F.count("*").cast("bigint").alias("n_members"),
@@ -878,7 +818,7 @@ def sim_ann_ivf_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_new") * F.lit(1000) >= F.col("n_members") * F.lit(_REPAIR_PERMILLE)
     ).localCheckpoint()
     a_f = a_t.join(F.broadcast(flg.select("cid")), "cid")
-    rep = update(a_f.select("vec_id", "cid")).localCheckpoint()
+    rep = update(e, a_f.select("vec_id", "cid")).localCheckpoint()
 
     cos_old = dot(F.col("embedding"), F.col("o_emb")) / (
         F.col("nrm") * F.col("o_nrm")

@@ -26,10 +26,10 @@ from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.queries.registry import register, t
-from duckdb_data_eng_proj_spark.queries.training import _TOKS_CTE, tokens
+from duckdb_data_eng_proj_spark.queries.training import tokens
 from duckdb_data_eng_proj_spark.queries.extras_r13 import (
-    _bpe_fold_col,
-    _bpe_fold_sql,
+    _bpe_chain_sql,
+    _bpe_trained_vocab,
 )
 
 # ---------------------------------------------------------------------------
@@ -45,95 +45,6 @@ from duckdb_data_eng_proj_spark.queries.extras_r13 import (
 # string (merge ('a','bc') and ('ab','c') both mint 'abc').
 _BPE_TRAIN_MERGES = 6
 _ENC_ROUNDS = 3  # encode path reuses txt_bpe_apply's 3-merge table
-
-
-def _bpe_chain_sql(rounds: int) -> str:
-    """DuckDB CTE chain: v0 (word-frequency vocab, char-split) through
-    v{rounds} (encoded vocab after each argmax merge), with per-round
-    m{r} (the 1-row merge rule) and st{r} (corpus tokens after).
-    Mirrors extras_r13._bpe_oracle's chain 1:1 — parameterized by
-    round count so the trainer (6 rounds) and the encoder (3 rounds)
-    share one spelling."""
-    parts = [
-        f"WITH {_TOKS_CTE}, ",
-        "v0 AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS c, "
-        "string_split(w, '') AS s FROM "
-        "(SELECT unnest(tk) AS w FROM toks) "
-        "WHERE NOT contains(w, chr(31)) GROUP BY w)",
-    ]
-    for r in range(1, rounds + 1):
-        prev = f"v{r - 1}"
-        parts.append(
-            f", p{r} AS (SELECT q.pr.a AS a, q.pr.b AS b, "
-            f"CAST(SUM(q.c) AS BIGINT) AS f "
-            f"FROM (SELECT c, unnest(list_transform(range(1, len(s)), "
-            f"i -> {{'a': s[i], 'b': s[i+1]}})) AS pr FROM {prev}) q "
-            f"GROUP BY q.pr.a, q.pr.b)"
-            f", m{r} AS (SELECT a, b, f FROM p{r} "
-            f"ORDER BY f DESC, a, b LIMIT 1)"
-            f", v{r} AS (SELECT w, c, {_bpe_fold_sql('m.a', 'm.b')} AS s "
-            f"FROM {prev}, m{r} m)"
-            f", st{r} AS (SELECT CAST(SUM(c * len(s)) AS BIGINT) AS toks "
-            f"FROM v{r})"
-        )
-    return "".join(parts)
-
-
-def _bpe_trained_vocab(
-    spark: SparkSession, sf_dir: str, rounds: int
-) -> tuple[DataFrame, list[tuple[DataFrame, DataFrame]]]:
-    """Run ``rounds`` argmax merges over the word-frequency vocabulary
-    (txt_bpe_apply's trainer loop, extras_r13.py — same fold, same
-    barriers) and return (final encoded vocab, per-round (merge-rule,
-    encoded-vocab) pairs). One corpus scan builds v0; every round is
-    vocab-bounded: pair aggregate, 1-row eagerly-checkpointed merge
-    rule, map-side fold."""
-    d = ensure_parallelism(t(spark, sf_dir, "documents"))
-    us = "\x1f"
-    vocab = (
-        d.select(F.explode(tokens(F.col("text"))).alias("w"))
-        .filter(~F.col("w").contains(us))
-        .groupBy("w")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .select("w", "c", F.split("w", "").alias("s"))
-        .localCheckpoint(eager=True)
-    )
-    ledger: list[tuple[DataFrame, DataFrame]] = []
-    v = vocab
-    for _ in range(rounds):
-        pairs = (
-            v.filter(F.size("s") >= 2)
-            .select(
-                "c",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(s) - 1), "
-                        "i -> struct(element_at(s, i) AS a, "
-                        "element_at(s, i + 1) AS b))"
-                    )
-                ).alias("p"),
-            )
-            .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), "c")
-            .groupBy("a", "b")
-            .agg(F.sum("c").cast("bigint").alias("f"))
-        )
-        # 1-row merge rule: eagerly checkpointed so the pair aggregate
-        # runs as a normal job, never inside the broadcast future
-        # (audit_broadcast_subtrees r13 bright line).
-        m = (
-            pairs.orderBy(F.desc("f"), F.asc("a"), F.asc("b"))
-            .limit(1)
-            .localCheckpoint(eager=True)
-        )
-        v = (
-            v.crossJoin(F.broadcast(m))
-            .select("w", "c", _bpe_fold_col().alias("s"))
-            # per-round barrier: next round's statistics and this
-            # round's tokens_after / vocab_symbols read these symbols.
-            .localCheckpoint(eager=True)
-        )
-        ledger.append((m, v))
-    return v, ledger
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
-from duckdb_data_eng_proj_spark.operators.vectors import dot
+from duckdb_data_eng_proj_spark.operators.vectors import dot, dot_sql, norm
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
 # ---------------------------------------------------------------------------
@@ -46,18 +46,17 @@ _MRL_DIM = 64  # fixed-dim contract (the PQ-family rule)
 # same-named divergent copy here was safe only because the fixed-dim
 # filter runs first, and silently reintroduced the zip_with/NULL-dot
 # class on any future reuse without that filter (ADVICE r17).
-from duckdb_data_eng_proj_spark.queries.training import _dot_sql
 
 
 def _mrl_oracle() -> str:
-    pdot = _dot_sql(f"a.embedding[1:{_MRL_P}]", f"b.embedding[1:{_MRL_P}]")
+    pdot = dot_sql(f"a.embedding[1:{_MRL_P}]", f"b.embedding[1:{_MRL_P}]")
     return (
         # fixed-dim contract + zero-norm guards on BOTH norms (full
         # AND prefix): a vector whose first 16 dims are all zero has
         # no defined coarse cosine even when its full norm is fine
         "WITH e AS (SELECT vec_id, embedding, "
-        f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm, "
-        f"sqrt({_dot_sql(f'embedding[1:{_MRL_P}]', f'embedding[1:{_MRL_P}]')}) AS pnrm "
+        f"sqrt({dot_sql('embedding', 'embedding')}) AS nrm, "
+        f"sqrt({dot_sql(f'embedding[1:{_MRL_P}]', f'embedding[1:{_MRL_P}]')}) AS pnrm "
         f"FROM embeddings WHERE len(embedding) = {_MRL_DIM}), "
         "ee AS (SELECT * FROM e WHERE nrm > 0 AND pnrm > 0), "
         "coarse AS (SELECT query_id, vec_id, embedding, nrm, q_emb, q_nrm "
@@ -68,9 +67,9 @@ def _mrl_oracle() -> str:
         "FROM ee a JOIN ee b ON a.vec_id < 10 AND b.vec_id <> a.vec_id) "
         f"WHERE crk <= {_MRL_C}), "
         "fine AS (SELECT query_id, vec_id AS neighbor_id, "
-        f"{_dot_sql('q_emb', 'embedding')} / (q_nrm * nrm) AS cos_raw, "
+        f"{dot_sql('q_emb', 'embedding')} / (q_nrm * nrm) AS cos_raw, "
         "row_number() OVER (PARTITION BY query_id ORDER BY "
-        f"{_dot_sql('q_emb', 'embedding')} / (q_nrm * nrm) DESC, vec_id) AS rank "
+        f"{dot_sql('q_emb', 'embedding')} / (q_nrm * nrm) DESC, vec_id) AS rank "
         "FROM coarse) "
         "SELECT query_id, neighbor_id, "
         # shortest-repr display round (the r17 F.round rule)
@@ -126,8 +125,8 @@ def _mrl_df(spark: SparkSession, sf_dir: str, c: int) -> DataFrame:
             .select(
                 "vec_id",
                 "embedding",
-                F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-                F.sqrt(dot(prefix, prefix)).alias("pnrm"),
+                norm(F.col("embedding")).alias("nrm"),
+                norm(prefix).alias("pnrm"),
                 prefix.alias("pemb"),
             )
             .filter((F.col("nrm") > 0) & (F.col("pnrm") > 0))

@@ -48,16 +48,18 @@ from pyspark.sql import functions as F
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens, word_ngrams
 from duckdb_data_eng_proj_spark.operators.vectors import (
+    assign,
     dot,
-    pack_centroids,
-    scored_centroids,
+    dot_sql,
+    normed,
+    normed_cte,
+    seeds,
 )
 from duckdb_data_eng_proj_spark.queries.extras_r12c import (
     _BM25_QUERIES,
     _BM25_TERMS,
 )
 from duckdb_data_eng_proj_spark.queries.registry import register, t
-from duckdb_data_eng_proj_spark.queries.training import _dot_sql
 
 # ---------------------------------------------------------------------------
 # txt_rerank_proximity
@@ -367,17 +369,15 @@ _REB_K = 16
 _REB_DIM = 64  # fixed-dim contract (the PQ-family rule, r17)
 
 _REB_COS = (
-    _dot_sql("v.embedding", "c.c_emb") + " / (v.nrm * c.c_nrm)"
+    dot_sql("v.embedding", "c.c_emb") + " / (v.nrm * c.c_nrm)"
 )
 
 
 def _reb_oracle() -> str:
-    cos_mf = _dot_sql("m.embedding", "f.f_emb") + " / (m.nrm * f.f_nrm)"
-    cos_ab = _dot_sql("a.c_emb", "b.c_emb") + " / (a.c_nrm * b.c_nrm)"
+    cos_mf = dot_sql("m.embedding", "f.f_emb") + " / (m.nrm * f.f_nrm)"
+    cos_ab = dot_sql("a.c_emb", "b.c_emb") + " / (a.c_nrm * b.c_nrm)"
     return (
-        "WITH e AS (SELECT vec_id, embedding, "
-        f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm "
-        f"FROM embeddings WHERE len(embedding) = {_REB_DIM}), "
+        f"WITH {normed_cte(_REB_DIM)}, "
         "cent AS (SELECT vec_id AS cid, embedding AS c_emb, nrm AS c_nrm "
         f"FROM e WHERE vec_id < {_REB_SEED_LIMIT} AND vec_id % 3 <> 0), "
         "asg AS (SELECT vec_id, cid, cos FROM ("
@@ -463,47 +463,13 @@ def _reb_oracle() -> str:
     tags=("similarity",),
 )
 def sim_ann_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = (
-        ensure_parallelism(t(spark, sf_dir, "embeddings"))
-        .filter(F.size("embedding") == _REB_DIM)  # fixed-dim contract
-        .select(
-            "vec_id",
-            "embedding",
-            F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-        )
-    )
-    cent = (
-        e.filter(
-            (F.col("vec_id") < _REB_SEED_LIMIT) & (F.col("vec_id") % 3 != 0)
-        )
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("c_emb"),
-            F.col("nrm").alias("c_nrm"),
-        )
-        # eager: feeds the packed broadcast (the r10 lazy-subplan race)
-        .localCheckpoint()
-    )
-    packed = pack_centroids(
-        cent.filter(F.col("c_nrm") > 0), cid="cid", emb="c_emb", nrm="c_nrm"
-    )
-    best = F.array_min(
-        scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-    )
-    # assignment scan: map-side argmax, keeps the winning cosine
-    # (-neg_cos is an exact sign flip, bit-identical to the oracle's
-    # direct cos) and the member embedding for the split evaluation.
-    asg = (
-        e.filter(F.col("nrm") > 0)
-        .crossJoin(F.broadcast(packed))
-        .select(
-            "vec_id",
-            "embedding",
-            "nrm",
-            best["cid"].alias("cid"),
-            (-best["neg_cos"]).alias("cos"),
-        )
-    )
+    e = normed(ensure_parallelism(t(spark, sf_dir, "embeddings")), _REB_DIM)
+    cent = seeds(
+        e.filter((F.col("vec_id") < _REB_SEED_LIMIT) & (F.col("vec_id") % 3 != 0))
+    ).localCheckpoint()  # eager: feeds the packed broadcast (r10 race)
+    # assignment scan: map-side argmax, keeps the winning cosine and
+    # the member embedding for the split evaluation.
+    asg = assign(e, cent, keep=("vec_id", "embedding", "nrm"), cos="cos")
     # ONE map-side-combinable pass: per-cell count + farthest member
     # (struct-min on (cos, vec_id) — no NULLs, total order).
     percell = asg.groupBy("cid").agg(

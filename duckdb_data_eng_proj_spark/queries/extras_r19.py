@@ -57,17 +57,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_data_eng_proj_spark.operators.vectors import (
-    dot,
-    pack_centroids,
-    scored_centroids,
-)
+from duckdb_data_eng_proj_spark.operators.vectors import dot, dot_sql, probes
 from duckdb_data_eng_proj_spark.queries.registry import register
-from duckdb_data_eng_proj_spark.queries.training import (
-    _ASSIGN_CTES,
-    _dot_sql,
-    _ivf_parts,
-)
+from duckdb_data_eng_proj_spark.queries.training import _ASSIGN_CTES, _ivf_parts
 
 # ---------------------------------------------------------------------------
 # sim_ann_ivf_recall_curve
@@ -89,14 +81,14 @@ _CURVE_LV_SQL = ", ".join(str(x) for x in _CURVE_LEVELS)
         "qp AS (SELECT query_id, centroid_id, prn FROM ("
         "SELECT q.vec_id AS query_id, c.centroid_id, row_number() OVER ("
         "PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, "
+        f"{dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, "
         "c.centroid_id) AS prn FROM q CROSS JOIN cent c)), "
         "cells AS (SELECT centroid_id, CAST(COUNT(*) AS BIGINT) AS n "
         "FROM assign GROUP BY centroid_id), "
         "bf AS (SELECT query_id, neighbor_id FROM ("
         "SELECT q.vec_id AS query_id, n.vec_id AS neighbor_id, "
         "row_number() OVER (PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) DESC, "
+        f"{dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) DESC, "
         "n.vec_id) AS rk FROM q JOIN vv n ON n.vec_id <> q.vec_id) "
         f"WHERE rk <= {_CURVE_K}), "
         "hits AS (SELECT b.query_id, qp.prn FROM bf b "
@@ -156,30 +148,14 @@ _CURVE_LV_SQL = ", ".join(str(x) for x in _CURVE_LEVELS)
     tags=("similarity",),
 )
 def sim_ann_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    en, cent, assign = _ivf_parts(spark, sf_dir)
+    en, cent, members = _ivf_parts(spark, sf_dir)
     vv = en.filter(F.col("nrm") > 0)
     q = vv.filter(F.col("vec_id") < _CURVE_NQ)
 
-    # Full-depth probe ranking per query (|Q| × 16 rows): sort the
-    # in-row scored centroid array, posexplode for prn — no window.
-    packed = pack_centroids(cent, cid="centroid_id", emb="c_emb", nrm="c_nrm")
+    # Full-depth probe ranking per query (|Q| × 16 rows) with its
+    # 1-based probe rank prn — no window.
     qp = (
-        q.crossJoin(F.broadcast(packed))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.posexplode(
-                F.array_sort(
-                    scored_centroids(
-                        F.col("_cents"), F.col("embedding"), F.col("nrm")
-                    )
-                )
-            ).alias("_pos", "_p"),
-        )
-        .select(
-            "query_id",
-            F.col("_p")["cid"].alias("centroid_id"),
-            (F.col("_pos") + 1).cast("bigint").alias("prn"),
-        )
+        probes(q, cent, [F.col("vec_id").alias("query_id")], cid="centroid_id")
         # EAGER checkpoint: qp is broadcast twice below (hits, cd) —
         # audit_broadcast_subtrees rule; the VALUE is |Q|×16 rows.
         .localCheckpoint(eager=True)
@@ -216,7 +192,7 @@ def sim_ann_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Cell occupancy is index metadata: map-side-combinable count.
     cells = (
-        assign.groupBy("centroid_id")
+        members.groupBy("centroid_id")
         .agg(F.count("*").cast("bigint").alias("n"))
         # EAGER checkpoint: feeds a broadcast; subtree is the corpus
         # assignment scan. The VALUE is ≤ 16 rows.
@@ -225,7 +201,7 @@ def sim_ann_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Each winner's cell probe rank (≤ k·|Q| rows).
     hits = (
-        assign.join(F.broadcast(bf), F.col("vec_id") == F.col("neighbor_id"))
+        members.join(F.broadcast(bf), F.col("vec_id") == F.col("neighbor_id"))
         .select("query_id", "centroid_id")
         .join(F.broadcast(qp), ["query_id", "centroid_id"])
         .select("query_id", "prn")

@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
+from duckdb_data_eng_proj_spark.operators.vectors import dot_sql, sorted_mean
 from duckdb_data_eng_proj_spark.queries.registry import register, t
-from duckdb_data_eng_proj_spark.queries.training import _dot_sql, _hp_sig_cte
+from duckdb_data_eng_proj_spark.queries.training import _hp_sig_cte
 
 
 # ---------------------------------------------------------------------------
@@ -345,11 +346,11 @@ _RANGE_THR_FP = 2000  # floor(cos * 1e4) >= this, i.e. cosine >= 0.2
     oracle=(
         f"WITH {_hp_sig_cte()} "
         "SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, "
-        f"CAST(round(CAST(CAST({_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
+        f"CAST(round(CAST(CAST({dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
         "AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) "
         "AS cos_sim "
         "FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id < b.vec_id "
-        f"WHERE CAST(floor({_dot_sql('a.embedding', 'b.embedding')} "
+        f"WHERE CAST(floor({dot_sql('a.embedding', 'b.embedding')} "
         f"/ (a.nrm * b.nrm) * 10000) AS BIGINT) >= {_RANGE_THR_FP}"
     ),
     doc=(
@@ -573,13 +574,8 @@ def _pq_train(spark: SparkSession, sf_dir: str):
         x = a.join(sub, ["vec_id", "m"]).select(
             "m", "cid", F.posexplode("sv").alias("pos", "val")
         )
-        sorted_sum = F.aggregate(
-            F.sort_array(F.collect_list(F.col("val").cast("double"))),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
         means = x.groupBy("m", "cid", "pos").agg(
-            (sorted_sum / F.count("*")).alias("mu")
+            sorted_mean(F.col("val").cast("double")).alias("mu")
         )
         return means.groupBy("m", "cid").agg(
             F.transform(

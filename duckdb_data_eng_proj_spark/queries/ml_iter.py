@@ -14,86 +14,47 @@ assignments (which depend on first-iteration float means) still
 match exactly. No intermediate rounding — only the final output is
 rounded.
 
-Scale shape per iteration: one broadcast join (k centroids) + one
-argmax window + one shuffle keyed by (cluster, dim). At 100 TB the
-driver loop (real k-means) persists assignments between iterations
-and checks movement; the per-iteration plan is exactly this one.
+Scale shape per iteration: one map-side packed-centroid argmax over
+a broadcast k-row centroid table (zero corpus shuffle) + one shuffle
+keyed by (cluster, dim) for the means. At 100 TB the driver loop
+(real k-means) persists assignments between iterations and checks
+movement; the per-iteration plan is exactly this one. Assignment,
+update and their oracle CTEs are operators/vectors.py's.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.operators.vectors import (
-    dot,
-    pack_centroids,
-    scored_centroids,
+    MEAN_SQL,
+    assign,
+    assign_cte,
+    dot_sql,
+    normed,
+    normed_cte,
+    seeds,
+    update,
+    update_ctes,
 )
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
 _K = 8
 _DIM = 64
 
-
-def _dot_sql(a: str, b: str) -> str:
-    return (
-        f"list_reduce(list_transform(range(len({a})), "
-        f"i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)), (x, y) -> x + y)"
-    )
-
-
-def _assign_cte(name: str, cent: str) -> str:
-    # Zero norms excluded on BOTH sides (r17, closing the r16
-    # _drift_assign_cte rule's residue): a zero-norm CENTROID makes
-    # every cosine NaN and the engines break the argmax tie
-    # differently; a zero-norm VECTOR has no defined cosine at all.
-    cos = f"{_dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm)"
-    return (
-        f"{name} AS (SELECT vec_id, cid FROM ("
-        f"SELECT v.vec_id, c.cid, row_number() OVER ("
-        f"PARTITION BY v.vec_id ORDER BY {cos} DESC, c.cid) AS rn "
-        f"FROM e v CROSS JOIN {cent} c "
-        "WHERE v.nrm > 0 AND c.c_nrm > 0) WHERE rn = 1)"
-    )
-
-
-def _update_ctes(prefix: str, assign: str) -> str:
-    """Per-dim sorted-fold means → ordered centroid arrays + norms."""
-    mean = (
-        "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        "list_sort(list(CAST(e.embedding[i+1] AS DOUBLE)))), (x, y) -> x + y) "
-        "/ COUNT(*)"
-    )
-    return (
-        f"{prefix}m AS (SELECT a.cid, t.i AS pos, {mean} AS m "
-        f"FROM {assign} a JOIN e ON e.vec_id = a.vec_id, range({_DIM}) t(i) "
-        f"GROUP BY a.cid, t.i), "
-        f"{prefix} AS (SELECT cid, list(m ORDER BY pos) AS c_emb, "
-        f"sqrt({_dot_sql('list(m ORDER BY pos)', 'list(m ORDER BY pos)')}) AS c_nrm "
-        f"FROM {prefix}m GROUP BY cid)"
-    )
-
-
-# Fixed-dim contract (r17 hostile-vintage sweep): the update step's
-# per-dim fold hardcodes range(_DIM) — an off-width vector NULLs the
-# oracle's missing dims while Spark's posexplode just drops them, so
-# the engines' centroids diverge. Off-contract vectors are excluded
-# from clustering on BOTH engines (the IVF/PQ rule).
 _ORACLE = (
-    "WITH e AS (SELECT vec_id, embedding, "
-    f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm FROM embeddings "
-    f"WHERE len(embedding) = {_DIM}), "
+    f"WITH {normed_cte(_DIM)}, "
     f"cent0 AS (SELECT vec_id AS cid, embedding AS c_emb, nrm AS c_nrm "
     f"FROM e WHERE vec_id < {_K}), "
-    + _assign_cte("a1", "cent0")
+    + assign_cte("a1", "e", "cent0")
     + ", "
-    + _update_ctes("cent1", "a1")
+    + update_ctes("cent1", "a1", _DIM)
     + ", "
-    + _assign_cte("a2", "cent1")
+    + assign_cte("a2", "e", "cent1")
     + ", "
-    + _update_ctes("cent2", "a2")
+    + update_ctes("cent2", "a2", _DIM)
     + " SELECT a.cid AS cluster_id, COUNT(*) AS n_members, "
     "CAST(round(CAST(CAST(MAX(c.c_nrm) AS VARCHAR) AS DECIMAL(38,18)), 4) "
     "AS DOUBLE) AS centroid_norm, "
@@ -101,48 +62,6 @@ _ORACLE = (
     "AS DOUBLE) AS centroid_d0 "
     "FROM a2 a JOIN cent2 c ON c.cid = a.cid GROUP BY a.cid"
 )
-
-
-def _assign(en: DataFrame, cent: DataFrame) -> DataFrame:
-    """Map-side argmax: k centroids packed into one broadcast row, per
-    vector a HOF array_min over (neg_cos, cid) — zero shuffle of the
-    corpus (vs round 1's crossJoin-expand + row_number window, which
-    shuffled k× the corpus; VERDICT r1 #2). Zero norms excluded on
-    BOTH sides (r17, mirroring _assign_cte's guards): centroids before
-    packing, vectors before the broadcast scan — the
-    _drift_assign_cte rule applied to the kmeans family."""
-    packed = pack_centroids(
-        cent.filter(F.col("c_nrm") > 0), cid="cid", emb="c_emb", nrm="c_nrm"
-    )
-    best = F.array_min(
-        scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-    )
-    return (
-        en.filter(F.col("nrm") > 0)
-        .crossJoin(F.broadcast(packed))
-        .select("vec_id", best["cid"].alias("cid"))
-    )
-
-
-def _update(en: DataFrame, assign: DataFrame) -> DataFrame:
-    exploded = (
-        assign.join(en, "vec_id")
-        .select("cid", F.posexplode(F.col("embedding")).alias("pos", "val"))
-        .withColumn("val", F.col("val").cast("double"))
-    )
-    sorted_sum = F.aggregate(
-        F.sort_array(F.collect_list("val")), F.lit(0.0), lambda a, x: a + x
-    )
-    means = exploded.groupBy("cid", "pos").agg(
-        (sorted_sum / F.count("*")).alias("m")
-    )
-    cent = means.groupBy("cid").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]
-        ).alias("c_emb")
-    )
-    c_nrm: Column = F.sqrt(dot(F.col("c_emb"), F.col("c_emb")))
-    return cent.select("cid", "c_emb", c_nrm.alias("c_nrm"))
 
 
 _MAX_LLOYD_ITERS = 50
@@ -163,19 +82,11 @@ def kmeans_converged_state(
     ml_kmeans_2iter is nowhere near converged — it exists for the
     exact cross-engine oracle, this loop is the real operator).
     """
-    e = ensure_parallelism(t(spark, sf_dir, "embeddings"))
-    # fixed-dim contract — see _ORACLE's comment (r17)
-    en = e.filter(F.size("embedding") == _DIM).select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+    en = normed(
+        ensure_parallelism(t(spark, sf_dir, "embeddings")), _DIM
     ).localCheckpoint()
-    cent0 = en.filter(F.col("vec_id") < _K).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    assign = _assign(en, cent0).localCheckpoint()
+    cent0 = seeds(en.filter(F.col("vec_id") < _K))
+    members = assign(en, cent0).localCheckpoint()
     iters = 0
     while iters < _MAX_LLOYD_ITERS:
         iters += 1
@@ -183,17 +94,17 @@ def kmeans_converged_state(
         # a single checkpointed plan; the convergence count then reads
         # the cached result (per-action overhead dominates at small
         # N — 3 actions/round measured ~3x slower than this shape).
-        cent = _update(en, assign)
+        cent = update(en, members)
         new_assign = (
-            _assign(en, cent)
-            .join(assign.withColumnRenamed("cid", "prev_cid"), "vec_id")
+            assign(en, cent)
+            .join(members.withColumnRenamed("cid", "prev_cid"), "vec_id")
             .localCheckpoint()
         )
         changed = new_assign.filter(F.col("cid") != F.col("prev_cid")).count()
-        assign = new_assign.select("vec_id", "cid")
+        members = new_assign.select("vec_id", "cid")
         if changed == 0:
             break
-    return assign, _update(en, assign), iters
+    return members, update(en, members), iters
 
 
 # Convergence-faithful oracle (closes VERDICT r5 #4, the registry's
@@ -207,35 +118,27 @@ def kmeans_converged_state(
 # iteration whose centroid state equals the final state — exactly the
 # round where the Spark loop's changed-count hits zero (Lloyd's
 # monotone objective rules out revisiting a state before fixpoint).
-_MEAN_SQL = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_sort(list(CAST(e.embedding[i+1] AS DOUBLE)))), (x, y) -> x + y) "
-    "/ COUNT(*)"
-)
-_COS_SQL = f"{_dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm)"
-
 _CONVERGED_ORACLE = (
-    "WITH RECURSIVE e AS (SELECT vec_id, embedding, "
-    f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm FROM embeddings "
-    f"WHERE len(embedding) = {_DIM}), "
+    f"WITH RECURSIVE {normed_cte(_DIM)}, "
     "it(iter, cid, c_emb, c_nrm) AS ("
     f"SELECT 0, vec_id, embedding, nrm FROM e WHERE vec_id < {_K} "
     "UNION ALL "
-    f"SELECT u.iter, u.cid, u.c_emb, sqrt({_dot_sql('u.c_emb', 'u.c_emb')}) "
+    f"SELECT u.iter, u.cid, u.c_emb, sqrt({dot_sql('u.c_emb', 'u.c_emb')}) "
     "AS c_nrm FROM ("
     "SELECT m.iter, m.cid, list(m.m ORDER BY m.pos) AS c_emb FROM ("
-    f"SELECT a.iter + 1 AS iter, a.cid, t.i AS pos, {_MEAN_SQL} AS m FROM ("
+    f"SELECT a.iter + 1 AS iter, a.cid, t.i AS pos, {MEAN_SQL} AS m FROM ("
     "SELECT vec_id, cid, iter FROM ("
     "SELECT v.vec_id, c.cid, c.iter, row_number() OVER ("
-    f"PARTITION BY v.vec_id ORDER BY {_COS_SQL} DESC, c.cid) AS rn "
+    "PARTITION BY v.vec_id ORDER BY "
+    f"{dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) DESC, c.cid) AS rn "
     f"FROM e v CROSS JOIN it c WHERE c.iter < {_MAX_LLOYD_ITERS} "
     "AND v.nrm > 0 AND c.c_nrm > 0) WHERE rn = 1"
     f") a JOIN e ON e.vec_id = a.vec_id, range({_DIM}) t(i) "
     "GROUP BY a.iter, a.cid, t.i) m GROUP BY m.iter, m.cid) u), "
     f"centf AS (SELECT cid, c_emb, c_nrm FROM it WHERE iter = {_MAX_LLOYD_ITERS}), "
-    + _assign_cte("a_f", "centf")
+    + assign_cte("a_f", "e", "centf")
     + ", "
-    + _update_ctes("cent_f", "a_f")
+    + update_ctes("cent_f", "a_f", _DIM)
     + ", "
     f"fin AS (SELECT cid, c_emb FROM it WHERE iter = {_MAX_LLOYD_ITERS}), "
     "first_stable AS (SELECT i.cid, MIN(i.iter) AS f FROM it i "
@@ -291,27 +194,17 @@ def ml_kmeans_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ml_kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = ensure_parallelism(t(spark, sf_dir, "embeddings"))
-    # fixed-dim contract — see _ORACLE's comment (r17)
-    en = e.filter(F.size("embedding") == _DIM).select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    cent0 = en.filter(F.col("vec_id") < _K).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    a1 = _assign(en, cent0)
-    # EAGER checkpoint between Lloyd iterations (r13): _assign
+    en = normed(ensure_parallelism(t(spark, sf_dir, "embeddings")), _DIM)
+    cent0 = seeds(en.filter(F.col("vec_id") < _K))
+    a1 = assign(en, cent0)
+    # EAGER checkpoint between Lloyd iterations (r13): assign
     # BROADCASTS the packed centroids, so without the barrier the
     # whole iteration-1 pipeline (assignment join + update aggregates)
     # executes inside round 2's broadcast future
     # (audit_broadcast_subtrees — the dedup_lsh_tune class).
-    cent1 = _update(en, a1).localCheckpoint(eager=True)
-    a2 = _assign(en, cent1)
-    cent2 = _update(en, a2)
+    cent1 = update(en, a1).localCheckpoint(eager=True)
+    a2 = assign(en, cent1)
+    cent2 = update(en, a2)
     return (
         a2.join(cent2, "cid")
         .groupBy(F.col("cid").alias("cluster_id"))

@@ -30,12 +30,12 @@ def split_lms_csv(src: str) -> str:
     """Split the LMS CSV into two header-carrying 'daily' files in a
     fresh temp dir (simulates two file-drop days): the first 90 data
     rows, then the rest."""
-    from duckdb_data_eng_proj_spark.streaming.ingest import _scratch_tmp
+    from duckdb_data_eng_proj_spark.io.scratch import scratch_tmp
 
     with open(src, encoding="utf-8") as f:
         lines = f.read().splitlines()
     header, rows = lines[0], lines[1:]
-    out_dir = _scratch_tmp("lms_days_")
+    out_dir = scratch_tmp("lms_days_")
     for i, chunk in enumerate([rows[:90], rows[90:]]):
         with open(os.path.join(out_dir, f"day{i}.csv"), "w", encoding="utf-8") as f:
             f.write("\n".join([header, *chunk]) + "\n")

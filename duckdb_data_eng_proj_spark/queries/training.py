@@ -49,9 +49,13 @@ from duckdb_data_eng_proj_spark.operators.lsh import (
     shingle_sets,
 )
 from duckdb_data_eng_proj_spark.operators.vectors import (
+    assign,
     dot,
-    pack_centroids,
-    scored_centroids,
+    dot_sql,
+    norm,
+    normed,
+    probes,
+    seeds,
 )
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
@@ -171,28 +175,10 @@ _LSH_PRELUDE_BODY = (
 _LSH_PRELUDE = f"WITH {_LSH_PRELUDE_BODY}"
 
 
-def _dot_sql(a: str, b: str) -> str:
-    """Sequential left fold in DOUBLE — same order as F.aggregate.
-
-    Over the COMMON PREFIX of both lists (r17 hostile-vintage sweep):
-    Spark's zip_with truncates to the shorter operand, but
-    range(len(a)) indexed b[i] past b's end — NULL in DuckDB, so a
-    short-embedding pair read NULL cos where Spark computed a prefix
-    cos. least() is the identity on equal-length vectors (every
-    generated vintage); mismatched lengths now mean prefix-cosine on
-    BOTH engines — the hyperplane family's sliced-plane semantics
-    extended to pair cosines. Centroid/codebook families instead
-    EXCLUDE off-contract vectors (the fixed-dim rule)."""
-    return (
-        f"list_reduce(list_transform(range(least(len({a}), len({b}))), "
-        f"i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)), (x, y) -> x + y)"
-    )
-
-
 # per-row squared norm, reused by every similarity oracle
 _EMB_CTE = (
     "e AS (SELECT vec_id, label, embedding, "
-    f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm FROM embeddings)"
+    f"sqrt({dot_sql('embedding', 'embedding')}) AS nrm FROM embeddings)"
 )
 
 
@@ -687,11 +673,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         f"WITH {_EMB_CTE} "
         "SELECT a.label, a.vec_id AS vec_a, b.vec_id AS vec_b, "
-        f"CAST(round(CAST(CAST({_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
+        f"CAST(round(CAST(CAST({dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
         "AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS cos_sim "
         "FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id "
         "WHERE a.nrm > 0 AND b.nrm > 0 "
-        f"AND {_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) >= 0.3"
+        f"AND {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) >= 0.3"
     ),
     doc=(
         "Embedding-cosine near-dup: pairs within the same label bucket "
@@ -709,8 +695,8 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = ensure_parallelism(t(spark, sf_dir, "embeddings"))
     # zero-norm vectors have no defined cosine — excluded on BOTH
-    # engines (r17, the _drift_assign_cte rule's brute-force residue)
-    en = e.select("vec_id", "label", "embedding", F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm")).filter(F.col("nrm") > 0)
+    # engines (r17, vectors.py's zero-norm rule, brute-force residue)
+    en = e.select("vec_id", "label", "embedding", norm(F.col("embedding")).alias("nrm")).filter(F.col("nrm") > 0)
     a, b = en.alias("a"), en.alias("b")
     cos = dot(F.col("a.embedding"), F.col("b.embedding")) / (
         F.col("a.nrm") * F.col("b.nrm")
@@ -737,7 +723,7 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         f"WITH {_EMB_CTE}, scored AS ("
         "SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, "
-        f"{_dot_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS cos_raw "
+        f"{dot_sql('q.embedding', 'c.embedding')} / (q.nrm * c.nrm) AS cos_raw "
         "FROM e q JOIN e c ON q.vec_id < 10 AND c.vec_id <> q.vec_id "
         "AND q.nrm > 0 AND c.nrm > 0) "
         "SELECT query_id, neighbor_id, CAST(round(CAST(CAST(cos_raw AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS cos_sim, rank FROM ("
@@ -758,7 +744,7 @@ def ext_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     en = e.select(
         "vec_id",
         "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     ).filter(F.col("nrm") > 0)
     q = en.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),
@@ -781,25 +767,26 @@ def ext_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Zero norms excluded on both sides (r16, the _drift_assign_cte rule
+# Zero norms excluded on both sides (r16, vectors.py's zero-norm rule
 # extended to the read family): a zero-norm CENTROID makes every
 # cosine NaN and the engines break the argmax tie differently; a
 # zero-norm VECTOR divides by zero, which Spark's ANSI mode raises on.
 # Cosine to/from the zero vector is undefined, so both engines drop
-# such rows from assignment — _ivf_parts applies the same two filters.
+# such rows from assignment — vectors.assign and vectors.probes apply
+# the same two filters.
 # ... and the FIXED-DIM contract (r17 hostile-vintage sweep, the PQ
 # family's rule): an off-width vector has no defined cosine against a
 # 64-dim centroid — excluded from the index and from probing on BOTH
 # engines (the pair-cos family instead computes prefix cosines; see
-# _dot_sql).
+# vectors.dot_sql).
 _ASSIGN_CTES = (
     f"{_EMB_CTE}, cent AS (SELECT vec_id AS centroid_id, embedding AS c_emb, nrm AS c_nrm "
     "FROM e WHERE vec_id < 16 AND nrm > 0 AND len(embedding) = 64), "
     "assign AS (SELECT vec_id, centroid_id, cos_raw FROM ("
     "SELECT v.vec_id, c.centroid_id, "
-    f"{_dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) AS cos_raw, "
+    f"{dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) AS cos_raw, "
     "row_number() OVER (PARTITION BY v.vec_id ORDER BY "
-    f"{_dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) DESC, c.centroid_id) AS rn "
+    f"{dot_sql('v.embedding', 'c.c_emb')} / (v.nrm * c.c_nrm) DESC, c.centroid_id) AS rn "
     "FROM e v CROSS JOIN cent c WHERE v.nrm > 0 AND len(v.embedding) = 64) "
     "WHERE rn = 1)"
 )
@@ -808,48 +795,26 @@ _ASSIGN_CTES = (
 def _ivf_parts(spark: SparkSession, sf_dir: str):
     """(normed vectors, centroids, assignment) — shared IVF front half.
 
-    Assignment is a map-side argmax: the 16 centroids are packed into
-    a single broadcast row and each vector reduces the in-row array
-    with ``array_min`` over (neg_cos, cid) — the corpus is never
+    Assignment is vectors.assign's map-side argmax over the 16
+    centroids packed into one broadcast row — the corpus is never
     shuffled (round 1 expanded ×16 then shuffled for a row_number
     window; VERDICT r1 "What's wrong" #2)."""
-    e = ensure_parallelism(t(spark, sf_dir, "embeddings"))
     # fixed-dim contract (r17): off-width vectors excluded from the
     # whole IVF surface — index, assignment, and probe queries alike
-    en = e.filter(F.size("embedding") == 64).select(
-        "vec_id",
-        "embedding",
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
-    )
-    # nrm > 0 filters mirror _ASSIGN_CTES' zero-norm guards (r16) —
-    # see that constant's comment.
-    cent = en.filter((F.col("vec_id") < 16) & (F.col("nrm") > 0)).select(
-        F.col("vec_id").alias("centroid_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("nrm").alias("c_nrm"),
-    )
-    packed = pack_centroids(cent, cid="centroid_id", emb="c_emb", nrm="c_nrm")
-    best = F.array_min(
-        scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-    )
-    assign = (
-        en.filter(F.col("nrm") > 0)
-        .crossJoin(F.broadcast(packed))
-        .withColumn("_best", best)
-        .select(
-            "vec_id",
-            F.col("_best")["cid"].alias("centroid_id"),
-            (-F.col("_best")["neg_cos"]).alias("cos_raw"),
-        )
+    en = normed(ensure_parallelism(t(spark, sf_dir, "embeddings")), 64)
+    # the zero-norm centroid guard (_ASSIGN_CTES' nrm > 0) is
+    # vectors.assign's and vectors.probes', applied before packing
+    cent = seeds(en.filter(F.col("vec_id") < 16), cid="centroid_id")
+    members = assign(en, cent, cid="centroid_id", cos="cos_raw").filter(
         # Fail EMPTY like the oracle's CROSS JOIN, not open: with no
         # vec_id<16 centroids the packed row holds an empty array and
         # array_min yields NULL — the old plan then emitted every
         # vector with centroid_id=NULL while the oracle emits zero
         # rows (round-15 review; fires if embeddings are regenerated
         # with ids not starting at 0).
-        .filter(F.col("centroid_id").isNotNull())
+        F.col("centroid_id").isNotNull()
     )
-    return en, cent, assign
+    return en, cent, members
 
 
 @register(
@@ -868,8 +833,8 @@ def _ivf_parts(spark: SparkSession, sf_dir: str):
     ),
 )
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, _, assign = _ivf_parts(spark, sf_dir)
-    return assign.select(
+    _, _, members = _ivf_parts(spark, sf_dir)
+    return members.select(
         "vec_id", "centroid_id", F.round("cos_raw", 4).alias("cos_sim")
     )
 
@@ -881,14 +846,14 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probes AS (SELECT query_id, centroid_id FROM ("
         "SELECT q.vec_id AS query_id, c.centroid_id, row_number() OVER ("
         "PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, c.centroid_id) AS prn "
+        f"{dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, c.centroid_id) AS prn "
         "FROM e q CROSS JOIN cent c WHERE q.vec_id < 10 AND q.nrm > 0 "
         "AND len(q.embedding) = 64) WHERE prn <= 4), "
         "cand AS (SELECT p.query_id, a.vec_id AS neighbor_id FROM probes p "
         "JOIN assign a ON a.centroid_id = p.centroid_id "
         "WHERE a.vec_id <> p.query_id), "
         "scored AS (SELECT c.query_id, c.neighbor_id, "
-        f"{_dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
+        f"{dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
         "FROM cand c JOIN e q ON q.vec_id = c.query_id "
         "JOIN e n ON n.vec_id = c.neighbor_id) "
         "SELECT query_id, neighbor_id, CAST(round(CAST(CAST(cos_raw AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS cos_sim, rank FROM ("
@@ -918,42 +883,27 @@ def sim_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-nprobe centroids per query, map-side: sort the in-row scored
     # array and slice — no shuffle, no window stage. The query
     # embedding rides along so rescoring never rejoins the corpus.
-    packed = pack_centroids(cent, cid="centroid_id", emb="c_emb", nrm="c_nrm")
-    probes = (
-        q.crossJoin(F.broadcast(packed))
-        .select(
+    probe = probes(
+        q,
+        cent,
+        [
             F.col("vec_id").alias("query_id"),
             F.col("embedding").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        scored_centroids(
-                            F.col("_cents"), F.col("embedding"), F.col("nrm")
-                        )
-                    ),
-                    1,
-                    4,
-                )
-            ).alias("_p"),
-        )
-        .select("query_id", "q_emb", "q_nrm", F.col("_p")["cid"].alias("centroid_id"))
+        ],
+        cid="centroid_id",
+        n=4,
     )
     # One corpus pass: in-row centroid assignment, then a broadcast
     # hash join against the tiny probe table (explicit hint — the
     # latency profile runs AQE-off, where an unhinted tiny side would
     # plan as a full sort-merge shuffle).
-    corpus = en.filter(F.col("nrm") > 0).crossJoin(F.broadcast(packed)).select(
-        "vec_id",
-        "embedding",
-        "nrm",
-        F.array_min(
-            scored_centroids(F.col("_cents"), F.col("embedding"), F.col("nrm"))
-        )["cid"].alias("centroid_id"),
+    corpus = assign(
+        en, cent, cid="centroid_id", keep=("vec_id", "embedding", "nrm")
     )
     cos = dot(F.col("q_emb"), F.col("embedding")) / (F.col("q_nrm") * F.col("nrm"))
     scored = (
-        corpus.join(F.broadcast(probes), "centroid_id")
+        corpus.join(F.broadcast(probe), "centroid_id")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_raw"))
     )
@@ -972,14 +922,14 @@ def sim_ann_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "probes AS (SELECT query_id, centroid_id FROM ("
         "SELECT q.vec_id AS query_id, c.centroid_id, row_number() OVER ("
         "PARTITION BY q.vec_id ORDER BY "
-        f"{_dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, c.centroid_id) AS prn "
+        f"{dot_sql('q.embedding', 'c.c_emb')} / (q.nrm * c.c_nrm) DESC, c.centroid_id) AS prn "
         "FROM e q CROSS JOIN cent c WHERE q.vec_id < 10 AND q.nrm > 0 "
         "AND len(q.embedding) = 64) WHERE prn <= 4), "
         "cand AS (SELECT p.query_id, a.vec_id AS neighbor_id FROM probes p "
         "JOIN assign a ON a.centroid_id = p.centroid_id "
         "WHERE a.vec_id <> p.query_id), "
         "scored AS (SELECT c.query_id, c.neighbor_id, "
-        f"{_dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
+        f"{dot_sql('q.embedding', 'n.embedding')} / (q.nrm * n.nrm) AS cos_raw "
         "FROM cand c JOIN e q ON q.vec_id = c.query_id "
         "JOIN e n ON n.vec_id = c.neighbor_id) "
         "SELECT query_id, neighbor_id, CAST(round(CAST(CAST(cos_raw AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) AS cos_sim, rank FROM ("
@@ -1005,13 +955,13 @@ def sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     import re
     import shutil
 
-    en, cent, assign = _ivf_parts(spark, sf_dir)
+    en, cent, members = _ivf_parts(spark, sf_dir)
     sf_tag = re.sub(r"[^0-9a-zA-Z.]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
     from duckdb_data_eng_proj_spark.io.scratch import scratch_dir
     idx_dir = scratch_dir(f"ivf_index_{sf_tag}")
     shutil.rmtree(idx_dir, ignore_errors=True)
     (
-        assign.select("vec_id", "centroid_id")
+        members.select("vec_id", "centroid_id")
         .join(en, "vec_id")
         .select("vec_id", "embedding", "nrm", "centroid_id")
         .write.mode("overwrite")
@@ -1021,26 +971,10 @@ def sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = spark.read.parquet(idx_dir)
 
     q = en.filter((F.col("vec_id") < 10) & (F.col("nrm") > 0))
-    packed = pack_centroids(cent, cid="centroid_id", emb="c_emb", nrm="c_nrm")
-    probes = (
-        q.crossJoin(F.broadcast(packed))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        scored_centroids(
-                            F.col("_cents"), F.col("embedding"), F.col("nrm")
-                        )
-                    ),
-                    1,
-                    4,
-                )
-            ).alias("_p"),
-        )
-        .select("query_id", F.col("_p")["cid"].alias("centroid_id"))
+    probe = probes(
+        q, cent, [F.col("vec_id").alias("query_id")], cid="centroid_id", n=4
     )
-    probe_rows = probes.collect()  # bounded: nprobe × |queries| ≤ 40
+    probe_rows = probe.collect()  # bounded: nprobe × |queries| ≤ 40
     probe_cents = sorted({r.centroid_id for r in probe_rows})
     probe_df = spark.createDataFrame(
         [(r.query_id, r.centroid_id) for r in probe_rows],
@@ -1582,7 +1516,7 @@ def _hp_sig_sql() -> str:
     for p, plane in enumerate(planes):
         lit = "[" + ",".join(f"{v:.1f}" for v in plane) + "]"
         bits.append(
-            f"(CASE WHEN {_dot_sql('embedding', lit)} >= 0 "
+            f"(CASE WHEN {dot_sql('embedding', lit)} >= 0 "
             f"THEN {1 << p} ELSE 0 END)"
         )
     return " + ".join(bits)
@@ -1598,8 +1532,8 @@ def _hp_sig_cte() -> str:
     ``_hp_sig_df``'s filter."""
     return (
         f"sig AS (SELECT vec_id, embedding, {_hp_sig_sql()} AS sig, "
-        f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm "
-        f"FROM embeddings WHERE {_dot_sql('embedding', 'embedding')} > 0)"
+        f"sqrt({dot_sql('embedding', 'embedding')}) AS nrm "
+        f"FROM embeddings WHERE {dot_sql('embedding', 'embedding')} > 0)"
     )
 
 
@@ -1616,7 +1550,7 @@ def _hp_sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         hyperplane_sig(F.col("embedding"), _hyperplanes()).alias("sig"),
-        F.sqrt(dot(F.col("embedding"), F.col("embedding"))).alias("nrm"),
+        norm(F.col("embedding")).alias("nrm"),
     ).filter(F.col("nrm") > 0)
 
 
@@ -1625,11 +1559,11 @@ def _hp_sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         f"WITH {_hp_sig_cte()} "
         "SELECT a.sig, a.vec_id AS vec_a, b.vec_id AS vec_b, "
-        f"CAST(round(CAST(CAST({_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
+        f"CAST(round(CAST(CAST({dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
         "AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) "
         "AS cos_sim "
         "FROM sig a JOIN sig b ON a.sig = b.sig AND a.vec_id < b.vec_id "
-        f"WHERE {_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) >= 0.2"
+        f"WHERE {dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) >= 0.2"
     ),
     doc=(
         "Random-hyperplane LSH over embeddings (Charikar SimHash for "

@@ -29,9 +29,9 @@ from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.operators.textops import distinct_ngrams, tokens
+from duckdb_data_eng_proj_spark.operators.vectors import dot_sql
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import (
-    _dot_sql,
     _hp_sig_cte,
     _TOK,
     _TOKS_CTE,
@@ -397,10 +397,10 @@ _KNN_K = 3
     oracle=(
         f"WITH {_hp_sig_cte()}, "
         "cand AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, "
-        f"CAST(round(CAST(CAST({_dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
+        f"CAST(round(CAST(CAST({dot_sql('a.embedding', 'b.embedding')} / (a.nrm * b.nrm) "
         "AS VARCHAR) AS DECIMAL(38,18)), 4) AS DOUBLE) "
         "AS cos_sim, "
-        f"CAST(floor({_dot_sql('a.embedding', 'b.embedding')} "
+        f"CAST(floor({dot_sql('a.embedding', 'b.embedding')} "
         "/ (a.nrm * b.nrm) * 10000) AS BIGINT) AS cs_fp "
         "FROM sig a JOIN sig b "
         "ON a.sig = b.sig AND a.vec_id <> b.vec_id), "
@@ -565,7 +565,7 @@ _RECALL_NQ = 10  # evaluation query batch: vec_id < 10
     oracle=(
         f"WITH {_hp_sig_cte()}, "
         "bf AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, "
-        f"CAST(floor({_dot_sql('a.embedding', 'b.embedding')} "
+        f"CAST(floor({dot_sql('a.embedding', 'b.embedding')} "
         "/ (a.nrm * b.nrm) * 10000) AS BIGINT) "
         f"AS cs FROM sig a JOIN sig b ON a.vec_id < {_RECALL_NQ} "
         "AND b.vec_id <> a.vec_id), "
@@ -574,7 +574,7 @@ _RECALL_NQ = 10  # evaluation query batch: vec_id < 10
         "ORDER BY cs DESC, neighbor_id) AS r FROM bf) WHERE r <= "
         f"{_KNN_K}), "
         "lc AS (SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id, "
-        f"CAST(floor({_dot_sql('a.embedding', 'b.embedding')} "
+        f"CAST(floor({dot_sql('a.embedding', 'b.embedding')} "
         "/ (a.nrm * b.nrm) * 10000) AS BIGINT) "
         "AS cs FROM sig a JOIN sig b ON a.sig = b.sig "
         f"AND a.vec_id < {_RECALL_NQ} AND b.vec_id <> a.vec_id), "

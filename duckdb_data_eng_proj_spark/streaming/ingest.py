@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,19 +39,8 @@ from duckdb_data_eng_proj_spark.etl.loan_pipeline import (
     clean_lms,
     dupe_keys,
 )
-from duckdb_data_eng_proj_spark.io.scratch import scratch_root
+from duckdb_data_eng_proj_spark.io.scratch import scratch_tmp
 from duckdb_data_eng_proj_spark.io.sources import all_varchar_schema
-
-
-def _scratch_tmp(prefix: str) -> str:
-    """Unique-per-call scratch directory under the process scratch
-    root (io/scratch.py): honors SPARK_GRAFT_TMP and is removed at
-    interpreter exit. Uniqueness matters — streaming checkpoints must
-    NEVER be reused across invocations (a reused checkpoint makes a
-    re-run see every source file as already processed and emit
-    nothing), so this is mkdtemp under the managed root, not a fixed
-    scratch_dir(name)."""
-    return tempfile.mkdtemp(prefix=prefix, dir=scratch_root())
 
 
 def _symlink_events_dir(sf_dir: str, prefix: str) -> str:
@@ -60,7 +48,7 @@ def _symlink_events_dir(sf_dir: str, prefix: str) -> str:
     (streaming file sources need a DIRECTORY). The link target is
     abspath'd: a relative sf_dir would otherwise resolve relative to
     the temp dir and dangle."""
-    src_dir = _scratch_tmp(prefix)
+    src_dir = scratch_tmp(prefix)
     os.symlink(
         os.path.abspath(f"{sf_dir}/events.parquet"),
         os.path.join(src_dir, "events.parquet"),
@@ -72,7 +60,7 @@ def _parity_split_dir(raw: DataFrame, prefix: str) -> str:
     """Re-write the events table as two parquet chunks split by
     event_id parity so maxFilesPerTrigger=1 yields two genuine
     micro-batches (cross-batch state is actually exercised)."""
-    src_dir = _scratch_tmp(prefix)
+    src_dir = scratch_tmp(prefix)
     half = F.pmod(F.col("event_id"), F.lit(2))
     for part in (0, 1):
         raw.filter(half == part).coalesce(1).write.mode("append").parquet(src_dir)
@@ -126,7 +114,7 @@ def stream_clean_lms(
         .csv(input_dir)
     )
 
-    raw = _drain_stream(stream, _scratch_tmp("lms_stream_ckpt_"))
+    raw = _drain_stream(stream, scratch_tmp("lms_stream_ckpt_"))
     if raw is None:
         raw = spark.createDataFrame([], schema)
     loan_dupes = dupe_keys(raw, "loan_id", exclude_blank=True)
@@ -171,7 +159,7 @@ def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
     name = f"win_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_tmp("win_stream_ckpt_")
+    ckpt = scratch_tmp("win_stream_ckpt_")
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -245,7 +233,7 @@ def stream_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-    out = _drain_stream(agg, _scratch_tmp("state_stream_ckpt_"), "update")
+    out = _drain_stream(agg, scratch_tmp("state_stream_ckpt_"), "update")
     assert out is not None
     # The final state is the row from the user's LAST batch. n_events
     # strictly increases across a user's batches, so max over the
@@ -281,7 +269,7 @@ def stream_topk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(5)
     )
     name = f"topk_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_tmp("topk_stream_ckpt_")
+    ckpt = scratch_tmp("topk_stream_ckpt_")
     q = (
         ranked.writeStream.format("memory")
         .queryName(name)
@@ -320,7 +308,7 @@ def stream_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = joined.groupBy("c_mktsegment").agg(F.count("*").alias("n_events"))
 
     name = f"enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_tmp("enrich_stream_ckpt_")
+    ckpt = scratch_tmp("enrich_stream_ckpt_")
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
@@ -363,7 +351,7 @@ def stream_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "event_type"]
     )
 
-    out = _drain_stream(dedup, _scratch_tmp("dedup_stream_ckpt_"), "append")
+    out = _drain_stream(dedup, scratch_tmp("dedup_stream_ckpt_"), "append")
     assert out is not None
     return out
 
@@ -390,7 +378,7 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     src_dir = _symlink_events_dir(sf_dir, "events_session_src_")
-    ckpt = _scratch_tmp("session_stream_ckpt_")
+    ckpt = scratch_tmp("session_stream_ckpt_")
 
     ts = _event_ts(raw)
     ts_type = dict(raw.dtypes).get("ts")
@@ -513,10 +501,10 @@ def stream_watermark_late_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # four times (round-15 review).
     ev = ev.localCheckpoint()
 
-    src_dir = _scratch_tmp("events_late_src_")
+    src_dir = scratch_tmp("events_late_src_")
     now = _time.time()
     for wave in range(3):
-        stage = _scratch_tmp(f"late_wave{wave}_")
+        stage = scratch_tmp(f"late_wave{wave}_")
         ev.filter(F.col("__b") == wave).drop("__b").coalesce(1).write.mode(
             "overwrite"
         ).parquet(stage)
@@ -550,7 +538,7 @@ def stream_watermark_late_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("w.start").alias("window_start"), "n_accepted")
     )
     name = f"late_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch_tmp("late_stream_ckpt_")
+    ckpt = scratch_tmp("late_stream_ckpt_")
     q = (
         agg.writeStream.format("memory")
         .queryName(name)

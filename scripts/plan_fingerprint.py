@@ -1,0 +1,131 @@
+#!/usr/bin/env python
+"""Plan fingerprints: hash every optimized plan a registered query builds.
+
+Per id, the query is built with ``DataFrame.localCheckpoint`` wrapped so
+that the optimized plan of every checkpointed frame is recorded, then the
+returned frame's optimized plan is recorded too. Each plan is normalized
+(expression ids, lambda-variable ids, RDD ids and temp paths carry no
+meaning across sessions) and hashed. Two trees whose fingerprints match
+build the same plans, so a refactor that claims "no plan moved" can be
+checked with one command instead of re-verifying every id.
+
+Usage:
+  python scripts/plan_fingerprint.py [--sf DIR] [--out FILE] [qid ...]
+  python scripts/plan_fingerprint.py --diff A.json B.json
+
+With no ids, every registered id except the ETL and streaming ones
+(``etl_*``, ``ext_stream_*``) is fingerprinted, in registry order, in
+one session. ``--sf`` defaults to the test suite's sf0.001 directory
+($SPARK_GRAFT_TEST_SF_DIR, as in tests/conftest.py). ``--diff`` prints
+"N of M ids changed" and the ids whose hashes differ (or that exist in
+only one file).
+"""
+
+from __future__ import annotations
+
+import argparse
+import hashlib
+import json
+import os
+import re
+import sys
+import tempfile
+
+_HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _HERE)
+
+_EXCLUDED_PREFIXES = ("etl_", "ext_stream_")
+
+_NORMALIZE = [
+    (re.compile(r"#\d+"), "#"),  # expression ids
+    (re.compile(r"\b([xyz])_\d+\b"), r"\1_"),  # PySpark lambda variables
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    (re.compile(r"\[\d+\] at "), "[] at "),  # RDD ids in RDD names
+]
+
+
+def normalize(plan: str) -> str:
+    for pat, repl in _NORMALIZE:
+        plan = pat.sub(repl, plan)
+    tmp = tempfile.gettempdir()
+    for base in {tmp, os.path.realpath(tmp)}:  # scratch and sink paths
+        plan = re.sub(rf"(file:)?{re.escape(base)}/[^\s,\])]*", "<tmp>", plan)
+    return plan
+
+
+def _plan_text(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _digest(df) -> str:
+    return hashlib.sha256(normalize(_plan_text(df)).encode()).hexdigest()[:16]
+
+
+def fingerprint(spark, sf_dir: str, qids: list[str]) -> dict:
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from duckdb_data_eng_proj_spark.queries import REGISTRY
+
+    seen: list[str] = []
+    original = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        seen.append(_digest(self))
+        return original(self, *args, **kwargs)
+
+    # print every field of a node (the default truncates at 25)
+    spark.conf.set("spark.sql.debug.maxToStringFields", 1_000_000)
+    out: dict = {}
+    DataFrame.localCheckpoint = recording
+    try:
+        for qid in qids:
+            seen.clear()
+            try:
+                result = _digest(REGISTRY[qid].fn(spark, sf_dir))
+                out[qid] = {"checkpoints": list(seen), "result": result}
+            except Exception as e:  # noqa: BLE001 - recorded, not raised
+                out[qid] = {"error": f"{type(e).__name__}: {str(e)[:200]}"}
+            print(f"{qid}: {out[qid].get('result', out[qid].get('error'))}", flush=True)
+    finally:
+        DataFrame.localCheckpoint = original
+    return out
+
+
+def diff(a: dict, b: dict) -> list[str]:
+    return sorted(q for q in set(a) | set(b) if a.get(q) != b.get(q))
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("qids", nargs="*")
+    ap.add_argument("--sf", default=os.environ.get(
+        "SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001"))
+    ap.add_argument("--out", default="plan_fingerprints.json")
+    ap.add_argument("--diff", nargs=2, metavar=("A", "B"))
+    args = ap.parse_args()
+
+    if args.diff:
+        with open(args.diff[0]) as fa, open(args.diff[1]) as fb:
+            a, b = json.load(fa), json.load(fb)
+        changed = diff(a, b)
+        print(f"{len(changed)} of {len(set(a) | set(b))} ids changed")
+        for q in changed:
+            print(f"  {q}")
+        return
+
+    from duckdb_data_eng_proj_spark.queries import REGISTRY
+    from duckdb_data_eng_proj_spark.session import get_spark
+
+    qids = args.qids or [
+        q for q in REGISTRY if not q.startswith(_EXCLUDED_PREFIXES)
+    ]
+    spark = get_spark("plan_fingerprint")
+    out = fingerprint(spark, args.sf, qids)
+    with open(args.out, "w") as f:
+        json.dump(out, f, indent=1, sort_keys=True)
+    errors = sum("error" in v for v in out.values())
+    print(f"wrote {len(out)} fingerprints ({errors} errors) to {args.out}")
+
+
+if __name__ == "__main__":
+    main()

@@ -1,9 +1,10 @@
 #!/usr/bin/env python
 """Scale stress check: run headline plans at ~8-20x bench volume.
 
-Builds an amplified copy of the sf0.1 testdata in /tmp (ids offset per
-replica so keys stay unique — dedup/join cardinalities scale
-realistically), then times representative registry queries at both
+Builds an amplified copy of the sf0.1 testdata under the process
+scratch root (io/scratch.py; removed at exit), ids offset per replica
+so keys stay unique — dedup/join cardinalities scale realistically —
+then times representative registry queries at both
 scales and reports the throughput ratio. Linear-ish wall-clock growth
 (ratio ≈ amplification / parallel headroom) is the pass signal: it
 means no plan degenerates (no accidental cross join, no driver
@@ -22,13 +23,13 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
 from bench import bench_session, best_of
+from duckdb_data_eng_proj_spark.io.scratch import scratch_tmp
 from duckdb_data_eng_proj_spark.io.sources import load_table
 from perfbench.workloads import Operators
 
@@ -101,7 +102,7 @@ def main() -> None:
     queries = sys.argv[2:] or QUERIES
     spark = bench_session("stress", BASE)
 
-    out_dir = tempfile.mkdtemp(prefix=f"stress_x{k}_")
+    out_dir = scratch_tmp(f"stress_x{k}_")  # removed at exit
     print(f"amplifying sf0.1 ×{k} → {out_dir}", flush=True)
     build_amplified(spark, out_dir, k)
 

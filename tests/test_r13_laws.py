@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import re
 from collections import Counter, defaultdict
 
@@ -334,6 +335,19 @@ def test_stream_admit_verdict_shape(spark):
             assert r.partner_id % 3 == 0
             assert r.partner_id < r.doc_id
             assert r.partner_id % 2 == r.doc_id % 2
+
+
+def test_stream_admit_leaves_no_tempdir_entries(spark):
+    """The op's source and checkpoint dirs live under the process
+    scratch root (io/scratch.py, removed at exit), never directly in
+    the system tempdir, where nothing would remove them."""
+    import tempfile
+
+    tmp = tempfile.gettempdir()
+    before = {n for n in os.listdir(tmp) if n.startswith("dedup_admit_")}
+    REGISTRY["ext_stream_dedup_admit"].fn(spark, SF_DIR).collect()
+    after = {n for n in os.listdir(tmp) if n.startswith("dedup_admit_")}
+    assert after <= before, f"left in {tmp}: {sorted(after - before)}"
 
 
 # ---------------------------------------------------------------------------

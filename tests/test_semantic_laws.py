@@ -284,12 +284,9 @@ def test_kmeans_converged_is_fixpoint(spark):
     iterations on the fixture, and the returned state is a Lloyd
     fixpoint — one more assign step against the final centroids
     reproduces the final assignment exactly."""
-    from duckdb_data_eng_proj_spark.queries.ml_iter import (
-        _assign,
-        kmeans_converged_state,
-    )
+    from duckdb_data_eng_proj_spark.queries.ml_iter import kmeans_converged_state
     from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
-    from duckdb_data_eng_proj_spark.operators.vectors import dot
+    from duckdb_data_eng_proj_spark.operators.vectors import assign as _assign, dot
     from duckdb_data_eng_proj_spark.queries.registry import t as load
     from tests.conftest import SF_DIR
 
