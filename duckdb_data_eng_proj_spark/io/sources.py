@@ -15,7 +15,8 @@ Reference semantics being reproduced:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 TESTDATA_TABLES = (
@@ -62,19 +63,36 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts")
-        from pyspark.sql import functions as F
+        raw = read_raw_events(spark, sf_dir)
+        return raw.withColumn("ts", event_ts(raw))
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+
+def read_raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events.parquet`` with its on-disk ``ts`` type: an INT64
+    TIMESTAMP(NANOS) column reads as raw bigint nanos (``nanosAsLong``
+    is set on the session — the Spark reader rejects that type
+    otherwise). Streaming sources take this schema; pair it with
+    ``event_ts`` for the normalized event time."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
+
+
+def event_ts(raw: DataFrame) -> Column:
+    """Normalized event-time column for ``read_raw_events``' schema.
+
+    Handles both generator vintages (see ``load_table``): INT64
+    TIMESTAMP(NANOS) read as bigint under nanosAsLong, and
+    timestamp[us] read as TIMESTAMP_NTZ — watermarks and epoch
+    arithmetic require the LTZ TIMESTAMP type.
+    """
+    ts_type = dict(raw.dtypes).get("ts")
+    if ts_type == "bigint":
+        return F.timestamp_micros(F.expr("ts div 1000"))
+    if ts_type == "timestamp_ntz":
+        return F.col("ts").cast("timestamp")
+    return F.col("ts")
 
 
 def ensure_parallelism(df: DataFrame) -> DataFrame:

@@ -22,12 +22,17 @@ with a survivor changes the keep-first winner.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100
+from duckdb_data_eng_proj_spark.operators.graph import (
+    EDGES_SQL,
+    label_prop_rounds,
+    star_fixpoint,
+    state_sized_shuffle,
+    undirected,
+)
 from duckdb_data_eng_proj_spark.operators.lsh import BUCKET_COLS, band_table, first_match
 from duckdb_data_eng_proj_spark.queries.registry import register
 from duckdb_data_eng_proj_spark.queries.training import (
@@ -38,29 +43,6 @@ from duckdb_data_eng_proj_spark.queries.training import (
     _fp_sql,
     _lang_hits_sql,
 )
-
-
-@contextmanager
-def _state_sized_shuffle(spark: SparkSession, state_rows: int):
-    """Size ``spark.sql.shuffle.partitions`` to the iteration state for
-    the duration of an iterative loop, then restore.
-
-    AQE coalesces tiny shuffles automatically, but iterative loops
-    checkpoint every round, and the latency profile (bench) runs AQE
-    off — so the loop hand-sizes its shuffle width the same way AQE
-    would: ~100k label/edge rows per task, clamped to
-    [1, defaultParallelism]. A 30k-edge graph iterates on 1 partition
-    (every stage one task, no fan-out floor); a 10B-edge graph at the
-    100 TB design point gets full cluster width from the same dial.
-    """
-    parts = max(1, min(spark.sparkContext.defaultParallelism, -(-state_rows // 100_000)))
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(parts))
-    try:
-        yield parts
-    finally:
-        spark.conf.set(key, old)
 
 
 # Jaccard thresholds in exact single-intersect integer form:
@@ -297,9 +279,6 @@ def pipe_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Safety cap only — the loop exits on fixpoint (5-6 rounds measured).
-_CC_MAX_ROUNDS = 64
-
 # Crossover policy (VERDICT r4 #6): label propagation's round count
 # grows with graph diameter (×8 stress: 5.3× wall, purely more
 # rounds), so dedup_cluster_cc runs label-prop for at most this many
@@ -311,140 +290,14 @@ _CC_MAX_ROUNDS = 64
 _CC_LP_CROSSOVER_ROUNDS = 16
 
 
-def _label_prop_rounds(edges: DataFrame, max_rounds: int):
-    """Min-label propagation + pointer jumping for ≤ max_rounds.
-
-    Returns (labels, converged): labels maps doc_id -> lbl (monotone
-    non-increasing, always a doc_id inside the component); converged
-    is False when the round budget ran out before the fixpoint.
-    """
-    lab = (
-        edges.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("lbl", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    prev_sum = None
-    for _ in range(max_rounds):
-        contrib = edges.join(
-            lab.withColumnRenamed("doc_id", "dst"), "dst"
-        ).select(F.col("src").alias("doc_id"), "lbl")
-        propagated = (
-            contrib.unionByName(lab.select("doc_id", "lbl"))
-            .groupBy("doc_id")
-            .agg(F.min("lbl").alias("lbl"))
-        )
-        ptr = propagated.select(
-            F.col("doc_id").alias("_pdoc"), F.col("lbl").alias("_plbl")
-        )
-        # Lazy checkpoint: the convergence agg below is the action
-        # that materializes it — one job per round, not two.
-        lab = propagated.join(ptr, F.col("lbl") == F.col("_pdoc")).select(
-            "doc_id", F.col("_plbl").alias("lbl")
-        ).localCheckpoint(eager=False)
-        (cur_sum,) = lab.agg(F.sum("lbl")).first()
-        if cur_sum == prev_sum:
-            return lab, True
-        prev_sum = cur_sum
-    return lab, False
-
-
-def _star_fixpoint(edges: DataFrame) -> DataFrame:
-    """Alternating large-star/small-star to fixpoint over canonical
-    (u < v) edges; returns the fixpoint star edges (root u -> member
-    v).
-
-    Convergence probe (r16, VERDICT r15 item 1): the cheap
-    (count, Σu, Σv) signature SCREENS each round, and a signature
-    match is then CONFIRMED by an exact set no-change check — with
-    equal counts, one-sided ``exceptAll`` emptiness proves multiset
-    equality. The signature alone has no monotonicity proof (unlike
-    label-prop's non-increasing label sum), and an unconfirmed
-    signature exit is exactly the collision class that was REAL in
-    graph_mst_boruvka's pointer-doubling probe (r15, fixed 3907a9b).
-    The confirm join is state-sized and only runs on candidate-exit
-    rounds (once, at the true fixpoint, on every graph observed).
-    Raises instead of returning a non-fixpoint edge set if the round
-    cap exhausts — callers must never treat a truncated contraction
-    as converged components.
-
-    r20: the signature screen is SEEDED with the INPUT's signature
-    (one tiny agg over the checkpointed input) instead of starting at
-    None — an input that is already a star fixpoint (the common
-    Borůvka-crossover residual: a handful of canonical star edges)
-    exits after ONE star round + confirm instead of two. At this
-    engine's bench scale a star round costs ~1.4 s of driver-side
-    Catalyst planning + codegen alone (measured on a 1-edge residual:
-    1.6 s cold round vs 0.12 s re-running the identical DataFrame),
-    so the saved round is pure wall-clock; loop semantics for
-    non-fixpoint inputs are unchanged (round r still exits on
-    out(r) == in(r), confirmed exactly). The input is
-    lazy-checkpointed so every round's plan starts at a LogicalRDD
-    scan instead of re-planning the caller's contraction lineage."""
-    edges = edges.localCheckpoint(eager=False)
-    prev_sig = tuple(edges.agg(F.count("*"), F.sum("u"), F.sum("v")).first())
-    for _ in range(_CC_MAX_ROUNDS):
-        # Lazy checkpoint: the signature agg is the materializing
-        # action — one job per star round.
-        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=False)
-        sig = tuple(nxt.agg(F.count("*"), F.sum("u"), F.sum("v")).first())
-        if sig == prev_sig and nxt.exceptAll(edges).isEmpty():
-            return nxt
-        prev_sig, edges = sig, nxt
-    raise RuntimeError(
-        f"_star_fixpoint: no fixpoint within {_CC_MAX_ROUNDS} alternating "
-        "star rounds — refusing to return a non-fixpoint edge set "
-        "(components would be silently under-merged)"
-    )
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star (Kiveris et al., 'Connected Components in MapReduce
-    and Beyond'): every strictly-larger neighbor of u hooks to
-    m = min(N(u) ∪ {u}). Canonical (u < v) edges in and out. The
-    per-node minimum is a map-side-combinable F.min joined back —
-    never a collected neighbor list, so a hot node with millions of
-    neighbors costs a shuffle, not executor memory."""
-    bi = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    mins = bi.groupBy("u").agg(F.min("v").alias("mn"))
-    mins = mins.select("u", F.least(F.col("mn"), F.col("u")).alias("m"))
-    return (
-        bi.filter(F.col("v") > F.col("u"))
-        .join(mins, "u")
-        .select(F.col("m").alias("u"), F.col("v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star: u and its strictly-smaller neighbors all hook to
-    the minimum of that set. Same aggregate+join shape as large-star."""
-    bi = edges.unionByName(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    ble = bi.filter(F.col("v") < F.col("u"))
-    mins = ble.groupBy("u").agg(F.min("v").alias("m"))
-    hook_self = mins.select(F.col("m").alias("u"), F.col("u").alias("v"))
-    hook_nbrs = (
-        ble.join(mins, "u")
-        .select(F.col("m").alias("u"), F.col("v").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    return hook_self.unionByName(hook_nbrs).distinct()
-
-
 _CC_ORACLE = (
     "WITH RECURSIVE "
     + _LSH_PRELUDE_BODY
     + ", "
     + _PAIRS_SQL.format(thr=0.05)
-    + ", edges AS MATERIALIZED ("
-    "SELECT doc_a AS src, doc_b AS dst FROM ndpairs "
-    "UNION ALL SELECT doc_b AS src, doc_a AS dst FROM ndpairs), "
-    "reach AS (SELECT src AS doc_id, src AS v FROM edges "
+    + ", "
+    + EDGES_SQL
+    + ", reach AS (SELECT src AS doc_id, src AS v FROM edges "
     "UNION SELECT r.doc_id, e.dst AS v FROM reach r "
     "JOIN edges e ON e.src = r.v) "
     "SELECT doc_id, min(v) AS cluster_id FROM reach GROUP BY doc_id"
@@ -495,13 +348,9 @@ def _cluster_cc_crossover(
     # lineage robustness (no LSH replay on executor loss) and
     # consistency, not wall-clock.
     pairs = _near_dup_pairs(spark, sf_dir, 0.05).localCheckpoint()
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).localCheckpoint()
-    with _state_sized_shuffle(spark, edges.count()):
-        lab, converged = _label_prop_rounds(edges, lp_rounds)
+    edges = undirected(pairs).localCheckpoint()
+    with state_sized_shuffle(spark, edges.count()):
+        lab, converged = label_prop_rounds(edges, lp_rounds)
         if not converged:
             # Contract by partial labels: the label graph is far
             # smaller than the doc graph (label-prop has already
@@ -524,7 +373,7 @@ def _cluster_cc_crossover(
                 .distinct()
                 .localCheckpoint()
             )
-            stars = _star_fixpoint(contracted)
+            stars = star_fixpoint(contracted)
             roots = stars.select(
                 F.col("v").alias("lbl"), F.col("u").alias("_root")
             )
@@ -573,8 +422,8 @@ def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
     ).distinct().localCheckpoint()
-    with _state_sized_shuffle(spark, edges.count()):
-        edges = _star_fixpoint(edges)
+    with state_sized_shuffle(spark, edges.count()):
+        edges = star_fixpoint(edges)
         # fixpoint edges form stars (root=u → member=v); roots label
         # themselves, as do vertices whose edges all collapsed away.
         # Eager checkpoint INSIDE the width context so the closing
@@ -620,10 +469,9 @@ def _pagerank_oracle() -> str:
         _LSH_PRELUDE
         + ", "
         + _PAIRS_SQL.format(thr=0.05)
-        + ", edges AS MATERIALIZED ("
-        "SELECT doc_a AS src, doc_b AS dst FROM ndpairs "
-        "UNION ALL SELECT doc_b AS src, doc_a AS dst FROM ndpairs), "
-        "nodes AS (SELECT src AS doc_id, COUNT(*) AS deg "
+        + ", "
+        + EDGES_SQL
+        + ", nodes AS (SELECT src AS doc_id, COUNT(*) AS deg "
         "FROM edges GROUP BY src), "
         f"p0 AS (SELECT doc_id, deg, CAST({_PR_UNITS} AS BIGINT) AS pr "
         "FROM nodes), "
@@ -660,13 +508,7 @@ def ml_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Graph tables feed every iteration — localCheckpoint once (the
     # same per-round persist discipline as dedup_cluster_cc) so the
     # LSH pair derivation never replays inside the unrolled plan.
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .localCheckpoint()
-    )
+    edges = undirected(pairs).localCheckpoint()
     nodes = (
         edges.groupBy(F.col("src").alias("doc_id"))
         .agg(F.count("*").alias("deg"))

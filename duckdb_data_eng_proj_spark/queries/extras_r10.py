@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from duckdb_data_eng_proj_spark.io.sources import event_ts, read_raw_events
+from duckdb_data_eng_proj_spark.operators.graph import undirected
 from duckdb_data_eng_proj_spark.operators.lsh import bucket_pairs
 from duckdb_data_eng_proj_spark.operators.textops import tokens
 from duckdb_data_eng_proj_spark.queries.registry import register, t
@@ -416,14 +418,8 @@ def _pr_iter_sql(prev: str, out: str) -> str:
 def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_data_eng_proj_spark.queries.training import _lsh_bands_df
 
-    cand = bucket_pairs(_lsh_bands_df(spark, sf_dir)).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    )
-    edges = (
-        cand.unionAll(cand.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    pairs = bucket_pairs(_lsh_bands_df(spark, sf_dir))
+    edges = undirected(pairs).localCheckpoint(eager=False)
     deg = edges.groupBy("src").agg(F.count("*").alias("d")).localCheckpoint(eager=False)
     pr = deg.select("src", F.lit(_PR_SCALE).cast("long").alias("pr")).withColumnRenamed(
         "src", "node"
@@ -511,14 +507,11 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     b = (
         raw.select(
             F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", _event_ts(raw)).alias("bucket_ts"),
+            F.date_trunc("hour", event_ts(raw)).alias("bucket_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("user_id", "bucket_ts")
@@ -787,14 +780,11 @@ def txt_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     b = (
         raw.select(
             F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", _event_ts(raw)).alias("bucket_ts"),
+            F.date_trunc("hour", event_ts(raw)).alias("bucket_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("user_id", "bucket_ts")
@@ -915,14 +905,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_data_eng_proj_spark.queries.training import _lsh_bands_df
 
     cand = bucket_pairs(_lsh_bands_df(spark, sf_dir)).localCheckpoint()
-    edges = (
-        cand.unionAll(
-            cand.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-        )
-        .withColumnRenamed("doc_a", "src")
-        .withColumnRenamed("doc_b", "dst")
-        .localCheckpoint()
-    )
+    edges = undirected(cand).localCheckpoint()
     # Neighbor LISTS, not wedge rows: the relational wedge join
     # (edges ⋈ edges on the shared endpoint) materializes Σ_edges deg
     # rows through a shuffle — ~4e9 at ×8 replication, where verbatim

@@ -37,11 +37,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_data_eng_proj_spark.queries.corpus import (
-    _near_dup_pairs,
-    _PAIRS_SQL,
-    _state_sized_shuffle,
+from duckdb_data_eng_proj_spark.operators.graph import (
+    EDGES_SQL,
+    fixed_rounds,
+    state_sized_shuffle,
+    undirected,
 )
+from duckdb_data_eng_proj_spark.queries.corpus import _near_dup_pairs, _PAIRS_SQL
 from duckdb_data_eng_proj_spark.queries.extras_r6 import _PRETOK_RE
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import _LSH_PRELUDE
@@ -317,12 +319,6 @@ _BFS_THR = 0.05
 _BFS_SEED_MOD = 11
 _BFS_ROUNDS = 3  # levels 0.._BFS_ROUNDS, unrolled 1:1 in the oracle
 
-_BFS_EDGES_SQL = (
-    "edges AS MATERIALIZED ("
-    "SELECT doc_a AS src, doc_b AS dst FROM ndpairs "
-    "UNION ALL SELECT doc_b AS src, doc_a AS dst FROM ndpairs)"
-)
-
 
 def _bfs_round_sql(i: int) -> str:
     """One unrolled BFS round: frontier = level i-1, expand over
@@ -344,7 +340,7 @@ def _bfs_round_sql(i: int) -> str:
         + ", "
         + _PAIRS_SQL.format(thr=_BFS_THR)
         + ", "
-        + _BFS_EDGES_SQL
+        + EDGES_SQL
         + ", s0 AS (SELECT doc_id, CAST(0 AS BIGINT) AS lvl FROM documents "
         f"WHERE doc_id % {_BFS_SEED_MOD} = 0), "
         + ", ".join(_bfs_round_sql(i) for i in range(1, _BFS_ROUNDS + 1))
@@ -368,7 +364,7 @@ def _bfs_round_sql(i: int) -> str:
         "joins move |frontier|·degree rows, never all-pairs; edges "
         "and levels localCheckpoint per round (lineage barrier, the "
         "iterative-family rule) with the loop's shuffle width sized "
-        "to the edge count (_state_sized_shuffle). At 100 TB the "
+        "to the edge count (graph.state_sized_shuffle). At 100 TB the "
         "edge table is the LSH-verified pair set — index-sized, not "
         "corpus-sized — and each BFS round is one co-partitioned "
         "shuffle join over it."
@@ -376,41 +372,30 @@ def _bfs_round_sql(i: int) -> str:
     tags=("graph",),
 )
 def graph_bfs_seed_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _near_dup_pairs(spark, sf_dir, _BFS_THR)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-        .localCheckpoint()
-    )
+    edges = undirected(_near_dup_pairs(spark, sf_dir, _BFS_THR)).localCheckpoint()
     seeds = (
         t(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % _BFS_SEED_MOD == 0)
         .select("doc_id", F.lit(0).cast("long").alias("lvl"))
     )
-    with _state_sized_shuffle(spark, edges.count()):
-        # r20: rounds are FIXED (no per-round driver decision), so the
-        # per-round checkpoints are lazy — lineage still truncates at
-        # each LogicalRDD, every round's state is still persisted once
-        # — and ONE eager materialization after the loop runs the whole
-        # expansion as a single job inside the width context instead of
-        # one job per round (measured 3.56 -> 2.84 s at sf0.1, equal
-        # output).
-        levels = seeds.localCheckpoint(eager=False)
-        frontier = levels
-        for i in range(1, _BFS_ROUNDS + 1):
-            reached = (
-                edges.join(
-                    frontier.select(F.col("doc_id").alias("src")), "src", "semi"
-                )
-                .select(F.col("dst").alias("doc_id"))
-                .distinct()
-            )
-            fresh = reached.join(levels, "doc_id", "anti").select(
-                "doc_id", F.lit(i).cast("long").alias("lvl")
-            )
-            levels = levels.unionAll(fresh).localCheckpoint(eager=False)
-            frontier = fresh
-        levels = levels.localCheckpoint(eager=True)
+
+    def expand(levels: DataFrame, i: int) -> DataFrame:
+        # the frontier is level i-1, read from the checkpointed levels
+        frontier = levels.filter(F.col("lvl") == i - 1).select(
+            F.col("doc_id").alias("src")
+        )
+        reached = (
+            edges.join(frontier, "src", "semi")
+            .select(F.col("dst").alias("doc_id"))
+            .distinct()
+        )
+        fresh = reached.join(levels, "doc_id", "anti").select(
+            "doc_id", F.lit(i).cast("long").alias("lvl")
+        )
+        return levels.unionAll(fresh)
+
+    with state_sized_shuffle(spark, edges.count()):
+        levels = fixed_rounds(
+            seeds.localCheckpoint(eager=False), _BFS_ROUNDS, expand
+        )
     return levels.orderBy("doc_id")

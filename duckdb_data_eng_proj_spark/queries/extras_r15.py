@@ -284,11 +284,14 @@ def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # graph_mst_boruvka
 
+from duckdb_data_eng_proj_spark.operators.graph import (  # noqa: E402
+    ptr_contract,
+    star_fixpoint,
+    state_sized_shuffle,
+)
 from duckdb_data_eng_proj_spark.queries.corpus import (  # noqa: E402
     _PAIRS_SQL,
     _near_dup_pairs,
-    _star_fixpoint,
-    _state_sized_shuffle,
 )
 from duckdb_data_eng_proj_spark.queries.training import (  # noqa: E402
     _LSH_PRELUDE_BODY,
@@ -308,7 +311,7 @@ _MST_THR = 0.10
 # near-dup bulk), then contract by the partial labels and finish each
 # bounded residual group with exact Kruskal in one Arrow-grouped
 # stage. Depth-invariance of the hybrid is law-tested (forced rounds
-# 0 / 2 / 8 all yield the identical edge set).
+# 0 / _MST_BORUVKA_ROUNDS / 8 all yield the identical edge set).
 # r20: 3 rounds, not 2 — the third round resolves the rare
 # 4-component chain the pair/triangle bulk leaves behind, and when it
 # empties the live set the crossover short-circuits entirely (no star
@@ -388,12 +391,14 @@ def _weighted_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fixpoint on the COMPONENT graph (component-sized, halving "
         "per round), and the surviving cross-component edges become "
         "the next round's working set. Live components at least "
-        "halve per round; after 2 rounds (the near-dup bulk: every "
-        "pair/triangle cluster is resolved) a CROSSOVER contracts by "
+        f"halve per round; after {_MST_BORUVKA_ROUNDS} rounds (the "
+        "near-dup bulk: every pair/triangle cluster and the rare "
+        "4-component chain are resolved) a CROSSOVER contracts by "
         "the partial labels and finishes each bounded residual group "
         "with exact Kruskal in one explicit-width Arrow-grouped "
         "stage — dedup_cluster_cc's crossover policy, with hybrid "
-        "depth output-invariance law-tested at rounds 0/2/8 "
+        f"depth output-invariance law-tested at rounds "
+        f"0/{_MST_BORUVKA_ROUNDS}/8 "
         "(driver loop is O(1) control, all data work distributed: "
         "lazy localCheckpoint per round, state-sized shuffle "
         "width). The oracle avoids "
@@ -433,7 +438,7 @@ def _mst_boruvka_rounds(
             e.join(la, "a").join(lb, "b").filter(F.col("ca") != F.col("cb"))
         )
 
-    with _state_sized_shuffle(spark, edges.count()):
+    with state_sized_shuffle(spark, edges.count()):
         # dedup_cluster_cc's barrier discipline: LAZY checkpoints, one
         # materializing action per round (the chosen count) — eager
         # checkpoints were measured 2-3x slower (pure job floor).
@@ -455,7 +460,7 @@ def _mst_boruvka_rounds(
                 done = True
                 break
             mst_parts.append(pick.select("a", "b", "w_permille").distinct())
-            roots = _ptr_contract(pick)
+            roots = ptr_contract(pick)
             labels = (
                 labels.join(roots, "lbl", "left")
                 .select(
@@ -486,7 +491,7 @@ def _mst_boruvka_rounds(
             # probe.
             live = relabel(edges, labels).localCheckpoint(eager=False)
             if live.limit(1).count() > 0:
-                groups = _star_fixpoint(
+                groups = star_fixpoint(
                     live.select(
                         F.least("ca", "cb").alias("u"),
                         F.greatest("ca", "cb").alias("v"),
@@ -516,56 +521,6 @@ def _mst_boruvka_rounds(
     return out.select(
         F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), "w_permille"
     )
-
-
-def _ptr_contract(pick: DataFrame) -> DataFrame:
-    """Borůvka hooking contraction over the round's pick table (one
-    row per live component: comp + its chosen edge's endpoint labels
-    ca/cb). The pointer graph ptr(c) = partner(c) is FUNCTIONAL, and
-    by the lexicographic total order each merged group contains
-    exactly one 2-cycle — the group's minimum edge, whose endpoints
-    chose each other. Collapse that 2-cycle to its smaller label,
-    then pointer-double to the root: ceil(log2(depth)) one-join
-    iterations, each a single materializing agg — measured ~3x
-    cheaper than the alternating-star fixpoint on the same graphs
-    (star remains the right tool for the crossover's ARBITRARY
-    residual graph below). Returns (lbl, _root) for every live comp."""
-    p = pick.select(
-        F.col("comp").alias("c"),
-        F.when(F.col("comp") == F.col("ca"), F.col("cb"))
-        .otherwise(F.col("ca"))
-        .alias("p"),
-    )
-    pp = p.select(F.col("c").alias("c2"), F.col("p").alias("p2"))
-    p = (
-        p.join(pp, p["p"] == pp["c2"])
-        .select(
-            "c",
-            F.when(F.col("p2") == F.col("c"), F.least("c", "p"))
-            .otherwise(F.col("p"))
-            .alias("p"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(64):
-        # Converge on the EXACT fixpoint p == p∘p, not a (count, sum)
-        # signature: a doubling can move labels with a net-zero sum
-        # change (e.g. one pointer −4, two pointers +2 — found by the
-        # round-15 review's 20k-graph emulation at ~0.5% of random
-        # graphs), and the signature break would then keep unrooted
-        # labels, split a merged component, and re-emit its bridging
-        # edge as a duplicate MST row. The doubled join is computed
-        # anyway, so the exact check costs one existence probe on it.
-        pj = p.select(F.col("c").alias("c2"), F.col("p").alias("p2"))
-        j = (
-            p.join(pj, p["p"] == pj["c2"])
-            .select("c", "p", "p2")
-            .localCheckpoint(eager=False)
-        )
-        if j.filter(F.col("p") != F.col("p2")).limit(1).count() == 0:
-            break
-        p = j.select("c", F.col("p2").alias("p")).localCheckpoint(eager=False)
-    return p.select(F.col("c").alias("lbl"), F.col("p").alias("_root"))
 
 
 def _kruskal_group(pdf):

@@ -82,7 +82,7 @@ _TRI_THR = 0.05  # same pair-graph threshold as the dedup_cluster_cc family
         "Two shuffles over edge-sized data (degree agg, wedge "
         "equi-join) + one edge-keyed closing join; the pair graph "
         "itself is LSH-bounded (no all-pairs), reused verbatim from "
-        "the cluster family (corpus.py:58)."
+        "the cluster family (corpus._near_dup_pairs)."
     ),
 )
 def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,11 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_data_eng_proj_spark.queries.corpus import (
-    _PAIRS_SQL,
-    _near_dup_pairs,
-    _state_sized_shuffle,
+from duckdb_data_eng_proj_spark.io.sources import event_ts, read_raw_events
+from duckdb_data_eng_proj_spark.operators.graph import (
+    EDGES_SQL,
+    fixed_rounds,
+    self_labels,
+    state_sized_shuffle,
+    undirected,
 )
+from duckdb_data_eng_proj_spark.queries.corpus import _PAIRS_SQL, _near_dup_pairs
 from duckdb_data_eng_proj_spark.queries.registry import register
 from duckdb_data_eng_proj_spark.queries.training import _LSH_PRELUDE
 
@@ -47,10 +51,7 @@ _LPC_THR = 0.05  # same pair-graph threshold as the dedup_cluster_cc family
 _LPC_ROUNDS = 3  # fixed synchronous rounds — unrolled 1:1 in the oracle
 
 _LPC_EDGES_SQL = (
-    "edges AS MATERIALIZED ("
-    "SELECT doc_a AS src, doc_b AS dst FROM ndpairs "
-    "UNION ALL SELECT doc_b AS src, doc_a AS dst FROM ndpairs), "
-    "l0 AS (SELECT DISTINCT src AS doc_id, src AS lbl FROM edges)"
+    EDGES_SQL + ", l0 AS (SELECT DISTINCT src AS doc_id, src AS lbl FROM edges)"
 )
 
 
@@ -87,57 +88,34 @@ def _lpc_round_sql(i: int) -> str:
         "deterministic, unlike classic randomized LPA). Scale shape "
         "per round: one join keyed by dst + two grouped aggregates, "
         "all partition-bounded; labels localCheckpoint'd between "
-        "rounds like dedup_cluster_cc (corpus.py:370), shuffle width "
-        "sized to the label state. Fixed rounds (not fixpoint) keep "
+        "rounds like dedup_cluster_cc, shuffle width sized to the "
+        "label state. Fixed rounds (not fixpoint) keep "
         "the oracle exactly unrollable AND bound the 100 TB job "
         "count — LPA communities stabilize in a handful of rounds on "
         "near-dup graphs, and round count is the knob, not a risk."
     ),
 )
 def graph_label_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _near_dup_pairs(spark, sf_dir, _LPC_THR)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    edges = undirected(_near_dup_pairs(spark, sf_dir, _LPC_THR)).localCheckpoint()
+
+    def vote(labels: DataFrame, _i: int) -> DataFrame:
+        votes = (
+            edges.join(labels.select(F.col("doc_id").alias("dst"), "lbl"), "dst")
+            .groupBy("src", "lbl")
+            .agg(F.count("*").alias("c"))
         )
-        .localCheckpoint()
-    )
-    with _state_sized_shuffle(spark, edges.count()):
-        # r20: fixed rounds, no per-round driver decision — lazy
-        # per-round checkpoints with ONE eager materialization after
-        # the loop (one job instead of one per round inside the width
-        # context; measured 3.39 -> 2.78 s at sf0.1, equal output).
-        labels = (
-            edges.select(F.col("src").alias("doc_id"))
-            .distinct()
-            .withColumn("lbl", F.col("doc_id"))
-            .localCheckpoint(eager=False)
+        # winner: max vote count, ties to smallest label — one
+        # map-side-combinable max of a (count, -label) struct, no
+        # window/sort over the vote table.
+        return (
+            votes.groupBy("src")
+            .agg(F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))).alias("m"))
+            .select(F.col("src").alias("doc_id"), (-F.col("m.nl")).alias("lbl"))
         )
-        for _ in range(_LPC_ROUNDS):
-            votes = (
-                edges.join(
-                    labels.select(F.col("doc_id").alias("dst"), "lbl"), "dst"
-                )
-                .groupBy("src", "lbl")
-                .agg(F.count("*").alias("c"))
-            )
-            # winner: max vote count, ties to smallest label — one
-            # map-side-combinable max of a (count, -label) struct, no
-            # window/sort over the vote table.
-            labels = (
-                votes.groupBy("src")
-                .agg(
-                    F.max(
-                        F.struct(F.col("c"), (-F.col("lbl")).alias("nl"))
-                    ).alias("m")
-                )
-                .select(
-                    F.col("src").alias("doc_id"), (-F.col("m.nl")).alias("lbl")
-                )
-                .localCheckpoint(eager=False)
-            )
-        labels = labels.localCheckpoint(eager=True)
+
+    with state_sized_shuffle(spark, edges.count()):
+        seed = self_labels(edges).localCheckpoint(eager=False)
+        labels = fixed_rounds(seed, _LPC_ROUNDS, vote)
     return labels.select("doc_id", F.col("lbl").alias("community_id"))
 
 
@@ -214,10 +192,7 @@ def _ewma_pdf(pdf):
     ),
 )
 def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     # NULL ts/value rows are not plottable points — excluded on BOTH
     # engines (r17 hostile vintage: a NULL bucket key NaT-poisons the
     # pandas sort and int(None) aborts the recursion; the LTTB rule)
@@ -225,7 +200,7 @@ def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = (
         raw.select(
             F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", _event_ts(raw)).alias("bucket_ts"),
+            F.date_trunc("hour", event_ts(raw)).alias("bucket_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("user_id", "bucket_ts")
@@ -561,11 +536,13 @@ _KCORE_ROUNDS = 3  # fixed peeling rounds — unrolled 1:1 in the oracle
 
 def _kcore_round_sql(i: int) -> str:
     """One unrolled peeling round: degree census, keep >= k, restrict
-    edges to kept endpoints on both sides."""
+    edges to kept endpoints on both sides. Round 1 peels the shared
+    ``edges`` CTE."""
+    prev = "edges" if i == 1 else f"e{i - 1}"
     return (
-        f"d{i} AS (SELECT src, COUNT(*) AS c FROM e{i - 1} GROUP BY src), "
+        f"d{i} AS (SELECT src, COUNT(*) AS c FROM {prev} GROUP BY src), "
         f"k{i} AS (SELECT src FROM d{i} WHERE c >= {_KCORE_K}), "
-        f"e{i} AS (SELECT e.src, e.dst FROM e{i - 1} e "
+        f"e{i} AS (SELECT e.src, e.dst FROM {prev} e "
         f"JOIN k{i} a ON a.src = e.src JOIN k{i} b ON b.src = e.dst)"
     )
 
@@ -576,8 +553,9 @@ def _kcore_round_sql(i: int) -> str:
         _LSH_PRELUDE
         + ", "
         + _PAIRS_SQL.format(thr=_LPC_THR)
-        + ", e0 AS MATERIALIZED (SELECT doc_a AS src, doc_b AS dst FROM ndpairs "
-        "UNION ALL SELECT doc_b AS src, doc_a AS dst FROM ndpairs), "
+        + ", "
+        + EDGES_SQL
+        + ", "
         + ", ".join(_kcore_round_sql(i) for i in range(1, _KCORE_ROUNDS + 1))
         + f" SELECT src AS doc_id, CAST(COUNT(*) AS BIGINT) AS core_deg "
         f"FROM e{_KCORE_ROUNDS} GROUP BY src"
@@ -598,32 +576,27 @@ def _kcore_round_sql(i: int) -> str:
         "one map-side-combinable degree agg + two semi-join "
         "restrictions keyed by vertex — state-sized, never "
         "corpus-sized; edges localCheckpoint'd between rounds like "
-        "dedup_cluster_cc (corpus.py:370)."
+        "dedup_cluster_cc."
     ),
 )
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pairs = _near_dup_pairs(spark, sf_dir, _LPC_THR)
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
+    edges = undirected(_near_dup_pairs(spark, sf_dir, _LPC_THR)).localCheckpoint()
+
+    def peel(e: DataFrame, _i: int) -> DataFrame:
+        keep = (
+            e.groupBy("src")
+            .agg(F.count("*").alias("c"))
+            .filter(F.col("c") >= _KCORE_K)
+            .select("src")
         )
-        .localCheckpoint()
-    )
-    with _state_sized_shuffle(spark, edges.count()):
-        for _ in range(_KCORE_ROUNDS):
-            keep = (
-                edges.groupBy("src")
-                .agg(F.count("*").alias("c"))
-                .filter(F.col("c") >= _KCORE_K)
-                .select("src")
-            )
-            edges = (
-                edges.join(keep, "src", "semi")
-                .join(keep.select(F.col("src").alias("dst")), "dst", "semi")
-                .select("src", "dst")
-                .localCheckpoint()
-            )
+        return (
+            e.join(keep, "src", "semi")
+            .join(keep.select(F.col("src").alias("dst")), "dst", "semi")
+            .select("src", "dst")
+        )
+
+    with state_sized_shuffle(spark, edges.count()):
+        edges = fixed_rounds(edges, _KCORE_ROUNDS, peel)
         # Closing degree census eagerly materialized INSIDE the width
         # context (r17, the dedup_cluster_cc_star r16 pattern): this
         # groupBy's shuffle is state-sized like every round's, so it
@@ -856,10 +829,7 @@ def _holt_pdf(pdf):
     ),
 )
 def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     # NULL ts/value rows are not plottable points — excluded on BOTH
     # engines (r17 hostile vintage: a NULL bucket key NaT-poisons the
     # pandas sort and int(None) aborts the recursion; the LTTB rule)
@@ -867,7 +837,7 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = (
         raw.select(
             F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", _event_ts(raw)).alias("bucket_ts"),
+            F.date_trunc("hour", event_ts(raw)).alias("bucket_ts"),
             F.round(F.col("value") * 100, 0).cast("long").alias("v"),
         )
         .groupBy("user_id", "bucket_ts")
@@ -938,13 +908,10 @@ def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def evt_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     ev = raw.select(
         F.col("user_id").cast("long").alias("user_id"),
-        F.unix_timestamp(_event_ts(raw)).alias("ts_s"),
+        F.unix_timestamp(event_ts(raw)).alias("ts_s"),
         F.round(F.col("value") * 100, 0).cast("long").alias("v_c100"),
     )
     u = ev.groupBy("user_id").agg(

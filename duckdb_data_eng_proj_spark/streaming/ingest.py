@@ -10,9 +10,9 @@ Two flows:
    gives batch-replay equivalence by construction: after all files
    are processed, output ≡ batch pipeline on the union — the
    duplicate flags are global, exactly like the reference's daily
-   full-table rebuild. At scale the accumulate-and-rebuild step
-   becomes incremental (dropDuplicates with watermark state for the
-   dup flags; everything else is stateless and streams through).
+   full-table rebuild. Every call rebuilds over the accumulated
+   whole; applying each day's file incrementally, proven equal to the
+   full rebuild, is ROADMAP item 5.
 
 2. ``stream_window_counts`` — tumbling 1-hour event counts with a
    1-day watermark, run with ``availableNow`` over the static events
@@ -40,7 +40,11 @@ from duckdb_data_eng_proj_spark.etl.loan_pipeline import (
     dupe_keys,
 )
 from duckdb_data_eng_proj_spark.io.scratch import scratch_tmp
-from duckdb_data_eng_proj_spark.io.sources import all_varchar_schema
+from duckdb_data_eng_proj_spark.io.sources import (
+    all_varchar_schema,
+    event_ts,
+    read_raw_events,
+)
 
 
 def _symlink_events_dir(sf_dir: str, prefix: str) -> str:
@@ -92,6 +96,24 @@ def _drain_stream(
     return acc["df"]
 
 
+def _drain_memory(agg: DataFrame, output_mode: str, prefix: str) -> DataFrame:
+    """Run the streaming aggregate ``agg`` into a uniquely named memory
+    sink with ``availableNow`` and return the sink table once the
+    source is drained. ``prefix`` names the sink (``{prefix}_<hex>``)
+    and its scratch checkpoint dir (``{prefix}_stream_ckpt_*``)."""
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    q = (
+        agg.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .option("checkpointLocation", scratch_tmp(f"{prefix}_stream_ckpt_"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return agg.sparkSession.table(name)
+
+
 def stream_clean_lms(
     spark: SparkSession,
     input_dir: str,
@@ -122,35 +144,17 @@ def stream_clean_lms(
     return clean_lms(raw, loan_dupes, app_dupes, run_ts)
 
 
-def _event_ts(raw: DataFrame) -> "F.Column":
-    """Normalized event-time column for the raw on-disk events schema.
-
-    Handles both generator vintages (see io/sources.py): INT64
-    TIMESTAMP(NANOS) read as bigint under nanosAsLong, and timestamp[us]
-    read as TIMESTAMP_NTZ — watermarks and epoch arithmetic require the
-    LTZ TIMESTAMP type.
-    """
-    ts_type = dict(raw.dtypes).get("ts")
-    if ts_type == "bigint":
-        return F.timestamp_micros(F.expr("ts div 1000"))
-    if ts_type == "timestamp_ntz":
-        return F.col("ts").cast("timestamp")
-    return F.col("ts")
-
-
 def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour counts per event_type with a 1-day watermark,
     executed as a streaming query over the static events parquet."""
     # Streaming file source needs a *directory*; expose the single
     # parquet file through a temp dir symlink. The schema must be the
     # raw on-disk one (ts physical type varies by generator vintage —
-    # see _event_ts), so read it pre-conversion under the nanosAsLong
-    # conf.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    # see io.sources.event_ts).
+    raw = read_raw_events(spark, sf_dir)
     src_dir = _symlink_events_dir(sf_dir, "events_stream_src_")
     stream = spark.readStream.schema(raw.schema).parquet(src_dir)
-    ts = _event_ts(raw)
+    ts = event_ts(raw)
     agg = (
         stream.withColumn("__ts", ts)
         .withWatermark("__ts", "1 day")
@@ -158,18 +162,7 @@ def stream_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
     )
-    name = f"win_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_tmp("win_stream_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_memory(agg, "complete", "win")
 
 
 def stream_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -195,8 +188,7 @@ def stream_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     src_dir = _parity_split_dir(raw, "events_state_src_")
 
     stream = (
@@ -258,8 +250,7 @@ def stream_user_totals_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_topk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Complete-mode streaming top-k: per-type counts, re-ranked each
     micro-batch; the memory sink holds the current top 5."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     src_dir = _symlink_events_dir(sf_dir, "events_topk_src_")
     stream = spark.readStream.schema(raw.schema).parquet(src_dir)
     ranked = (
@@ -268,18 +259,7 @@ def stream_topk_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("n_events"), F.asc("event_type"))
         .limit(5)
     )
-    name = f"topk_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_tmp("topk_stream_ckpt_")
-    q = (
-        ranked.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_memory(ranked, "complete", "topk")
 
 
 def stream_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -294,8 +274,7 @@ def stream_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan holds as long as the dimension stays broadcast-size;
     bigger dims move to a pre-bucketed co-located join.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     src_dir = _symlink_events_dir(sf_dir, "events_enrich_src_")
     stream = spark.readStream.schema(raw.schema).parquet(src_dir)
 
@@ -307,18 +286,7 @@ def stream_enrich_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = joined.groupBy("c_mktsegment").agg(F.count("*").alias("n_events"))
 
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_tmp("enrich_stream_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return _drain_memory(agg, "complete", "enrich")
 
 
 def stream_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,8 +306,7 @@ def stream_distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lateness horizon instead of growing forever; the unbounded
     variant here matches the oracle exactly for a finite replay.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     src_dir = _parity_split_dir(raw, "events_dedup_src_")
 
     stream = (
@@ -375,12 +342,11 @@ def stream_session_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated per session (the ext_sessionize oracle shape) — checked
     by the registry oracle.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     src_dir = _symlink_events_dir(sf_dir, "events_session_src_")
     ckpt = scratch_tmp("session_stream_ckpt_")
 
-    ts = _event_ts(raw)
+    ts = event_ts(raw)
     ts_type = dict(raw.dtypes).get("ts")
 
     def run_pass() -> DataFrame | None:
@@ -490,11 +456,10 @@ def stream_watermark_late_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import time as _time
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    raw = read_raw_events(spark, sf_dir)
     ev = raw.select(
         F.col("event_id").cast("long").alias("event_id"),
-        _event_ts(raw).alias("__ts"),
+        event_ts(raw).alias("__ts"),
     ).withColumn("__b", _arrival_batch(F.col("__ts"), F.col("event_id")))
     # Materialize once: ev feeds the three wave writes AND the totals
     # aggregate — without this the events scan + projection executes
@@ -537,18 +502,7 @@ def stream_watermark_late_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_accepted"))
         .select(F.col("w.start").alias("window_start"), "n_accepted")
     )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    ckpt = scratch_tmp("late_stream_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    accepted = spark.table(name)
+    accepted = _drain_memory(agg, "append", "late")
 
     totals = ev.groupBy(
         F.date_trunc("hour", F.col("__ts")).alias("window_start")

@@ -564,6 +564,29 @@ def test_r10_op_exchange_budget(spark, qid, budget):
     assert n <= budget, f"{qid}: {n} exchanges > budget {budget}"
 
 
+def test_graph_pagerank_edges_have_no_distinct(spark, monkeypatch):
+    """graph_pagerank's edge table is graph.undirected over
+    lsh.bucket_pairs, whose DISTINCT doc_a < doc_b contract makes the
+    two orientations disjoint: no aggregate sits above the union. The
+    edge frame is lazily checkpointed, so its plan never shows in the
+    returned plan's budget above; it is read off the checkpoint call.
+    With the old .distinct() the frame read 10 exchanges here."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames = []
+    original = DataFrame.localCheckpoint
+
+    def recording(self, eager=True):
+        frames.append(self)
+        return original(self, eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    REGISTRY["graph_pagerank"].fn(spark, SF_DIR)
+    (edges,) = [f for f in frames if f.columns == ["src", "dst"]]
+    assert edges._jdf.queryExecution().optimizedPlan().nodeName() == "Union"
+    assert count_exchanges(edges) <= 8
+
+
 def test_gbdt_round_fact_scan_bounded(spark):
     """ml_gbdt_round touches the fact table exactly once: the (q, cls)
     count is eagerly localCheckpointed, so the physical plan must not
@@ -762,7 +785,7 @@ def test_mst_tail_width_pinned_and_scan_free(spark):
     stage, so it must carry the explicit-width repartition AQE may
     not coalesce (the r14 standing rule) — asserted on the forced
     rounds=0 variant, where the crossover ALWAYS runs (at sf0.001 the
-    shipped 2 rounds converge first and emit no tail). Both variants
+    shipped 3 rounds converge first and emit no tail). Both variants
     must keep every corpus-scale input behind the round checkpoints:
     a documents.parquet scan in the visible plan means a stage
     stopped materializing."""
@@ -883,7 +906,7 @@ def test_vacuum_is_join_free(spark):
         # the alphabet²-sized rank window + sort share the rest
         ("txt_bpe_merge_round", 2),
         # edges and levels localCheckpoint each BFS round (build jobs
-        # run in fn() under _state_sized_shuffle); the returned plan
+        # run in fn() under graph.state_sized_shuffle); the returned plan
         # is the final doc_id sort over the checkpointed level table
         ("graph_bfs_seed_distance", 1),
     ],

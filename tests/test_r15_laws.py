@@ -248,9 +248,10 @@ def test_mst_forest_law(spark, oracle_con):
 
 def test_mst_forced_rounds_invariance(spark):
     """Hybrid depth must be output-invariant: 0 Borůvka rounds (pure
-    contracted Kruskal), the shipped 2, and 8 (deep distributed
-    rounds) — the same unique edge set."""
+    contracted Kruskal), the shipped _MST_BORUVKA_ROUNDS (3), and 8
+    (deep distributed rounds) — the same unique edge set."""
     from duckdb_data_eng_proj_spark.queries.extras_r15 import (
+        _MST_BORUVKA_ROUNDS,
         _mst_boruvka_rounds,
     )
 
@@ -259,7 +260,7 @@ def test_mst_forced_rounds_invariance(spark):
             (r.doc_a, r.doc_b, r.w_permille)
             for r in _mst_boruvka_rounds(spark, SF_DIR, k).collect()
         )
-        for k in (0, 2, 8)
+        for k in (0, _MST_BORUVKA_ROUNDS, 8)
     ]
     assert outs[0] == outs[1] == outs[2]
     assert len(outs[0]) > 0
@@ -340,7 +341,9 @@ def test_ptr_contract_sum_collision_regression(spark):
     the merged component, and re-emitted its bridging edge as a
     duplicate MST row. The exact p == p∘p check must drive every
     label to the root."""
-    from duckdb_data_eng_proj_spark.queries.extras_r15 import _ptr_contract
+    from duckdb_data_eng_proj_spark.operators.graph import (
+        ptr_contract as _ptr_contract,
+    )
 
     # Round-1 struct-min picks for edges (5,9,1),(6,7,6),(3,7,6),
     # (7,9,5): comps 5 and 9 choose each other (the 2-cycle), 7

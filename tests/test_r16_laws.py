@@ -26,10 +26,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.queries import REGISTRY
-from duckdb_data_eng_proj_spark.queries.corpus import (
-    _large_star,
-    _small_star,
-    _star_fixpoint,
+from duckdb_data_eng_proj_spark.operators.graph import (
+    large_star as _large_star,
+    small_star as _small_star,
+    star_fixpoint as _star_fixpoint,
 )
 from tests.conftest import SF_DIR
 
@@ -84,9 +84,9 @@ def test_star_fixpoint_raises_on_cap_exhaustion(spark, monkeypatch):
     """A path graph cannot converge in one round; with the cap forced
     to 1 the helper must raise, never return a truncated (under-
     merged) contraction."""
-    import duckdb_data_eng_proj_spark.queries.corpus as corpus
+    import duckdb_data_eng_proj_spark.operators.graph as graph
 
-    monkeypatch.setattr(corpus, "_CC_MAX_ROUNDS", 1)
+    monkeypatch.setattr(graph, "STAR_MAX_ROUNDS", 1)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "u long, v long"
     )

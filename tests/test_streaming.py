@@ -63,7 +63,7 @@ def test_stream_watermark_late_accounting_law(spark):
     assert out, "no finalized windows emitted"
 
     events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    from duckdb_data_eng_proj_spark.streaming.ingest import _event_ts
+    from duckdb_data_eng_proj_spark.io.sources import event_ts as _event_ts
 
     ev = events.select(_event_ts(events).alias("ts"))
     totals = {
