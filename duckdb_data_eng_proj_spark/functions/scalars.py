@@ -52,23 +52,6 @@ def exact_units(c: Column, scale: int = 100) -> Column:
     return (c * scale + F.signum(c) * 0.5).cast("long")
 
 
-def doc_bucket100(doc_id: Column) -> Column:
-    """Leakage-safe 0–99 document bucket: first 4 hex chars of
-    md5(doc_id) mod 100 — INT, matching the oracle fragment
-    ``CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INT)
-    % 100``. md5 is the shared cross-engine hash (engine-native
-    hash() must never gate a split); the bucket is a pure function of
-    the stable id, so assignment survives runs, engines, and
-    repartitions. Shared by ext_split_train, ext_domain_mix, and
-    pipe_corpus_clean_v2 (r16 consolidation of three inline copies).
-    """
-    return (
-        F.conv(F.substring(F.md5(doc_id.cast("string")), 1, 4), 16, 10)
-        .cast("int")
-        % 100
-    )
-
-
 def month_boundary_diff(a: Column, b: Column) -> Column:
     """DuckDB ``date_diff('month', a, b)``: counts month-boundary
     crossings (01-31→02-01 = 1), NOT fractional months_between."""

@@ -7,10 +7,8 @@ Design notes (100 TB path):
   table runs these as a single narrow map stage (no shuffle).
 - MinHash hashes each shingle ONCE (md5) and derives all n hash
   functions arithmetically (Kirsch-Mitzenmacher) — hashing is the
-  dominant near-dup cost at corpus scale. md5 is deterministic and
-  identical across engines, which is what makes the DuckDB oracle
-  parity checks exact; for production throughput ``F.xxhash64`` is
-  ~5× faster but has no DuckDB twin.
+  dominant near-dup cost at corpus scale. The md5-to-integer read is
+  ``operators/sketches.md5_int`` (why md5: see that module).
 
 Reference parity: the reference project has no text operators (its
 scalar census is SURVEY.md §2.7); these implement the north-star
@@ -22,6 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from duckdb_data_eng_proj_spark.operators.sketches import md5_int
 
 # Whitespace tokenization of lower-cased, trimmed text; empty tokens
 # dropped so trailing separators don't produce phantom tokens.
@@ -99,11 +99,8 @@ def minhash_pairs(shingles: Column) -> Column:
     return F.transform(
         shingles,
         lambda s: F.struct(
-            F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long").alias("a"),
-            F.conv(F.substring(F.md5(s), 17, 15), 16, 10)
-            .cast("long")
-            .bitwiseOR(1)
-            .alias("b"),
+            md5_int(s, 1, 15).alias("a"),
+            md5_int(s, 17, 15).bitwiseOR(1).alias("b"),
         ),
     )
 
@@ -142,8 +139,3 @@ def lsh_band_buckets(sig_cols: list[str], rows_per_band: int) -> list[Column]:
 
     n_bands = len(sig_cols) // rows_per_band
     return [F.md5(F.concat(*parts(b))).alias(f"band{b}") for b in range(n_bands)]
-
-
-def hex_nibble(hash_col: Column, pos: int) -> Column:
-    """Value 0-15 of hex digit ``pos`` (0-based) of a hex-string hash."""
-    return F.conv(F.substring(hash_col, pos + 1, 1), 16, 10).cast("int")

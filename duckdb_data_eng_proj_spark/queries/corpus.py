@@ -25,7 +25,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100
 from duckdb_data_eng_proj_spark.operators.graph import (
     EDGES_SQL,
     label_prop_rounds,
@@ -34,6 +33,7 @@ from duckdb_data_eng_proj_spark.operators.graph import (
     undirected,
 )
 from duckdb_data_eng_proj_spark.operators.lsh import BUCKET_COLS, band_table, first_match
+from duckdb_data_eng_proj_spark.operators.sketches import doc_bucket100, doc_bucket100_sql
 from duckdb_data_eng_proj_spark.queries.registry import register
 from duckdb_data_eng_proj_spark.queries.training import (
     _LANG_PRED_SQL,
@@ -419,9 +419,10 @@ def dedup_cluster_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
         .distinct()
     )
+    # _near_dup_pairs emits each doc_a < doc_b pair once: no distinct.
     edges = pairs.select(
         F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).distinct().localCheckpoint()
+    ).localCheckpoint()
     with state_sized_shuffle(spark, edges.count()):
         edges = star_fixpoint(edges)
         # fixpoint edges form stars (root=u → member=v); roots label
@@ -552,10 +553,8 @@ _REP_CTES = (
 )
 
 _SPLIT_SQL = (
-    "CASE WHEN CAST('0x' || substr(md5(CAST(kept.doc_id AS VARCHAR)), 1, 4) "
-    "AS INT) % 100 < 90 THEN 'train' "
-    "WHEN CAST('0x' || substr(md5(CAST(kept.doc_id AS VARCHAR)), 1, 4) "
-    "AS INT) % 100 < 95 THEN 'valid' ELSE 'test' END"
+    f"CASE WHEN {doc_bucket100_sql('kept.doc_id')} < 90 THEN 'train' "
+    f"WHEN {doc_bucket100_sql('kept.doc_id')} < 95 THEN 'valid' ELSE 'test' END"
 )
 
 

@@ -13,8 +13,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100, exact_units
-from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL
+from duckdb_data_eng_proj_spark.functions.scalars import exact_units
+from duckdb_data_eng_proj_spark.operators.sketches import (
+    doc_bucket100,
+    doc_bucket100_sql,
+    md5_int_sql,
+)
+from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens
 from duckdb_data_eng_proj_spark.operators.vectors import sorted_mean
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
@@ -684,8 +689,6 @@ def win_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def fn_array_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.operators.textops import tokens
-
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     tk = tokens(F.col("text"))
     d = d.select("doc_id", tk.alias("tk"))
@@ -780,8 +783,7 @@ def fn_struct_access(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_split_train",
     oracle=(
-        "WITH b AS (SELECT doc_id, "
-        "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INT) % 100 "
+        f"WITH b AS (SELECT doc_id, {doc_bucket100_sql('doc_id')} "
         "AS bucket FROM documents) "
         "SELECT doc_id, bucket, "
         "CASE WHEN bucket < 90 THEN 'train' WHEN bucket < 95 THEN 'valid' "
@@ -941,12 +943,13 @@ _SYNTH_VOCAB_SQL = (
     "src_python_datasource",
     oracle=(
         "WITH ids AS (SELECT unnest(generate_series(0, 999)) AS doc_id), "
-        "w AS (SELECT doc_id, 5 + CAST('0x' || substr(md5(CAST(doc_id AS "
-        "VARCHAR) || ':len'), 1, 4) AS INT) % 20 AS n_words FROM ids), "
+        "w AS (SELECT doc_id, 5 + "
+        + md5_int_sql("CAST(doc_id AS VARCHAR) || ':len'", 1, 4)
+        + " % 20 AS n_words FROM ids), "
         "words AS (SELECT doc_id, n_words, j, "
         f"list_extract({_SYNTH_VOCAB_SQL}, "
-        "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || j), 1, 4) "
-        "AS INT) % 15 + 1) AS wd "
+        + md5_int_sql("CAST(doc_id AS VARCHAR) || ':' || j", 1, 4)
+        + " % 15 + 1) AS wd "
         "FROM w, unnest(generate_series(0, n_words - 1)) AS t(j)) "
         "SELECT doc_id, string_agg(wd, ' ' ORDER BY j) AS text, "
         "CAST(any_value(n_words) AS INT) AS n_words "

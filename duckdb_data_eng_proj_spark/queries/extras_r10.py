@@ -40,7 +40,13 @@ from pyspark.sql import functions as F
 from duckdb_data_eng_proj_spark.io.sources import event_ts, read_raw_events
 from duckdb_data_eng_proj_spark.operators.graph import undirected
 from duckdb_data_eng_proj_spark.operators.lsh import bucket_pairs
-from duckdb_data_eng_proj_spark.operators.textops import tokens
+from duckdb_data_eng_proj_spark.operators.sketches import (
+    md5_int,
+    md5_int_sql,
+    md5_slot,
+    md5_slot_sql,
+)
+from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import _LSH_PRELUDE
 
@@ -59,16 +65,17 @@ from duckdb_data_eng_proj_spark.queries.training import _LSH_PRELUDE
 # 0.709 (Flajolet et al., the published constant for m = 64).
 _HLL_M = 64
 _HLL_ALPHA_NUM = repr(0.709 * 64 * 64 * float(2**55))  # alpha·m²·2^55
+_HLL_SALT = "hll-v1:"
 
 
 @register(
     "agg_sketch_hll",
     oracle=(
-        "WITH toks AS (SELECT list_filter(string_split_regex(lower(trim(text)), "
-        "'\\s+'), x -> x <> '') AS tk FROM documents), "
+        f"WITH toks AS (SELECT {TOK_SQL} AS tk FROM documents), "
         "items AS (SELECT DISTINCT unnest(tk) AS token FROM toks), "
-        "h AS (SELECT token, CAST('0x' || substr(md5('hll-v1:' || token), 1, 15) "
-        "AS BIGINT) AS hv FROM items), "
+        "h AS (SELECT token, "
+        + md5_int_sql(f"'{_HLL_SALT}' || token", 1, 15)
+        + " AS hv FROM items), "
         f"rh AS (SELECT hv % {_HLL_M} AS bucket, "
         f"CASE WHEN hv // {_HLL_M} = 0 THEN 55 "
         f"ELSE 55 - length(bin(hv // {_HLL_M})) END AS rho FROM h), "
@@ -127,11 +134,7 @@ def agg_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    hv = F.conv(
-        F.substring(F.md5(F.concat(F.lit("hll-v1:"), F.col("token"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
+    hv = md5_int(F.concat(F.lit(_HLL_SALT), F.col("token")), 1, 15)
     rh = items.select(hv.alias("hv")).select(
         F.pmod(F.col("hv"), F.lit(_HLL_M)).alias("bucket"),
         F.when(F.expr(f"hv DIV {_HLL_M}") == 0, F.lit(55))
@@ -206,10 +209,7 @@ _BLOOM_K = 3
 
 
 def _bloom_pos_sql(j: int, item: str) -> str:
-    return (
-        f"CAST('0x' || substr(md5('bloom-{j}:' || {item}), 1, 8) AS BIGINT) "
-        f"% {_BLOOM_BITS}"
-    )
+    return md5_slot_sql(f"'bloom-{j}:' || {item}", _BLOOM_BITS)
 
 
 @register(
@@ -281,25 +281,8 @@ def agg_bloom_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # j as a COLUMN inside the hash string ('bloom-0:12' etc.), so one
     # explode replaces K unioned branches re-deriving the build side.
     def pos(item):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("bloom-"),
-                            F.col("j").cast("string"),
-                            F.lit(":"),
-                            item,
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _BLOOM_BITS
-        )
+        salted = F.concat(F.lit("bloom-"), F.col("j").cast("string"), F.lit(":"), item)
+        return md5_slot(salted, _BLOOM_BITS)
 
     cells = (
         pb.select("p_brand", "sz", jcol)
@@ -589,8 +572,7 @@ _ZIPF_LN_U = "CAST(round(ln({x}) * 1000000, 0) AS BIGINT)"
 @register(
     "txt_zipf_fit",
     oracle=(
-        "WITH tt AS (SELECT unnest(list_filter(string_split_regex("
-        "lower(trim(text)), '\\s+'), x -> x <> '')) AS token FROM documents), "
+        f"WITH tt AS (SELECT unnest({TOK_SQL}) AS token FROM documents), "
         "c AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt "
         "FROM tt GROUP BY token), "
         "rk AS (SELECT ROW_NUMBER() OVER (ORDER BY cnt DESC, token) AS rank, "

@@ -55,8 +55,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
-from duckdb_data_eng_proj_spark.operators.textops import tokens
-from duckdb_data_eng_proj_spark.queries.extras_r6b import _TOKS_SQL
+from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
 # ---------------------------------------------------------------------------
@@ -138,7 +137,7 @@ def _bm25_sat_col() -> F.Column:
 @register(
     "txt_bm25_topk",
     oracle=(
-        f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS tk FROM documents), "
+        f"WITH toks AS (SELECT doc_id, {TOK_SQL} AS tk FROM documents), "
         "occ AS (SELECT doc_id, unnest(tk) AS token FROM toks), "
         "dlt AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl "
         "FROM occ GROUP BY doc_id), "

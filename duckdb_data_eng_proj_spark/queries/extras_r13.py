@@ -68,7 +68,7 @@ from duckdb_data_eng_proj_spark.operators.lsh import (
     bucket_pairs,
     shingle_sets,
 )
-from duckdb_data_eng_proj_spark.operators.textops import tokens
+from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens
 from duckdb_data_eng_proj_spark.operators.vectors import (
     assign,
     assign_cte,
@@ -897,9 +897,8 @@ _CUR_BUDGET_DIV = 2 * _CUR_STEPS
 @register(
     "ext_curriculum_mix",
     oracle=(
-        f"WITH toks AS (SELECT doc_id, source, "
-        "CAST(len(list_filter(string_split_regex(lower(trim(text)), "
-        "'\\s+'), x -> x <> '')) AS BIGINT) AS ntok FROM documents), "
+        f"WITH toks AS (SELECT doc_id, source, CAST(len({TOK_SQL}) AS BIGINT) "
+        "AS ntok FROM documents), "
         "avail AS (SELECT source, CAST(SUM(ntok) AS BIGINT) AS "
         "avail_tokens FROM toks GROUP BY source), "
         "tot AS (SELECT CAST(SUM(avail_tokens) AS BIGINT) AS tt "

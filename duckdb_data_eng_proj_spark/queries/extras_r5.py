@@ -19,6 +19,8 @@ from pyspark.sql.types import (
 )
 
 from duckdb_data_eng_proj_spark.io.scratch import scratch_dir
+from duckdb_data_eng_proj_spark.operators.sketches import md5_slot, md5_slot_sql
+from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
 
@@ -358,9 +360,7 @@ def _top_tokens_sql(k: int) -> str:
     "txt_oov_rate",
     oracle=(
         f"WITH vocab AS (SELECT token FROM ({_top_tokens_sql(_OOV_VOCAB_K)})), "
-        "toks AS (SELECT doc_id, "
-        "list_filter(string_split_regex(lower(trim(text)), '\\s+'), "
-        "x -> x <> '') AS tk FROM documents), "
+        f"toks AS (SELECT doc_id, {TOK_SQL} AS tk FROM documents), "
         "occ AS (SELECT doc_id, unnest(tk) AS token FROM toks), "
         "cov AS (SELECT o.doc_id, COUNT(*) AS n_tok, "
         "COUNT(v.token) AS n_in_vocab FROM occ o "
@@ -385,7 +385,6 @@ def _top_tokens_sql(k: int) -> str:
 )
 def txt_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
-    from duckdb_data_eng_proj_spark.operators.textops import tokens
     from duckdb_data_eng_proj_spark.queries.training_extra import top_tokens_df
 
     d = ensure_parallelism(t(spark, sf_dir, "documents"))
@@ -479,9 +478,7 @@ def mm_modality_router(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_dataset_card",
     oracle=(
-        "WITH toks AS (SELECT doc_id, lang, "
-        "list_filter(string_split_regex(lower(trim(text)), '\\s+'), "
-        "x -> x <> '') AS tk FROM documents), "
+        f"WITH toks AS (SELECT doc_id, lang, {TOK_SQL} AS tk FROM documents), "
         f"fp AS ({_fp_sql()}), "
         "lc AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang) "
         "SELECT "
@@ -511,7 +508,6 @@ def mm_modality_router(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ext_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.operators.textops import tokens
     from duckdb_data_eng_proj_spark.queries.training import txt_fingerprint
 
     d = t(spark, sf_dir, "documents")
@@ -659,18 +655,13 @@ _CMS_WIDTH = 256
 
 
 def _cms_slot_sql(j: int, item: str) -> str:
-    return (
-        f"CAST('0x' || substr(md5('{j}:' || {item}), 1, 8) AS BIGINT) "
-        f"% {_CMS_WIDTH}"
-    )
+    return md5_slot_sql(f"'{j}:' || {item}", _CMS_WIDTH)
 
 
 @register(
     "agg_sketch_cms",
     oracle=(
-        "WITH toks AS (SELECT "
-        "list_filter(string_split_regex(lower(trim(text)), '\\s+'), "
-        "x -> x <> '') AS tk FROM documents), "
+        f"WITH toks AS (SELECT {TOK_SQL} AS tk FROM documents), "
         "occ AS (SELECT unnest(tk) AS token FROM toks), "
         "cells AS ("
         + " UNION ALL ".join(
@@ -706,7 +697,6 @@ def _cms_slot_sql(j: int, item: str) -> str:
 )
 def agg_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
-    from duckdb_data_eng_proj_spark.operators.textops import tokens
 
     d = ensure_parallelism(t(spark, sf_dir, "documents"))
     # No checkpoint on the exploded token stream (r16 review): occ is
@@ -716,11 +706,7 @@ def agg_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = d.select(F.explode(tokens(F.col("text"))).alias("token"))
 
     def slot(j: int, item):
-        return (
-            F.conv(F.substring(F.md5(F.concat(F.lit(f"{j}:"), item)), 1, 8), 16, 10)
-            .cast("long")
-            % _CMS_WIDTH
-        )
+        return md5_slot(F.concat(F.lit(f"{j}:"), item), _CMS_WIDTH)
 
     # One corpus-sized shuffle (the token counts); every sketch cell
     # then derives from the vocab-sized count table — the r5 version

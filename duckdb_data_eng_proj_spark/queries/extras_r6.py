@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
+from duckdb_data_eng_proj_spark.operators.sketches import md5_slot, md5_slot_sql
 from duckdb_data_eng_proj_spark.operators.vectors import dot_sql, sorted_mean
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import _hp_sig_cte
@@ -202,8 +203,8 @@ _IS_SALT = "is-v1:"
         "WITH mx AS (SELECT MAX(n_chars) AS mc FROM documents), "
         "w AS (SELECT doc_id, "
         "CAST(floor(n_chars * 10000.0 / mx.mc) AS BIGINT) AS w_bp, "
-        f"CAST('0x' || substr(md5('{_IS_SALT}' || CAST(doc_id AS VARCHAR)), 1, 8) "
-        "AS BIGINT) % 10000 AS u_bp "
+        + md5_slot_sql(f"'{_IS_SALT}' || CAST(doc_id AS VARCHAR)", 10000)
+        + " AS u_bp "
         "FROM documents CROSS JOIN mx) "
         "SELECT doc_id, w_bp, u_bp FROM w WHERE u_bp < w_bp"
     ),
@@ -224,18 +225,7 @@ def ext_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ensure_parallelism(t(spark, sf_dir, "documents"))
     mx = d.agg(F.max("n_chars").alias("mc"))
     w_bp = F.floor(F.col("n_chars") * 10000.0 / F.col("mc")).cast("bigint")
-    u_bp = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(_IS_SALT), F.col("doc_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 10000
-    )
+    u_bp = md5_slot(F.concat(F.lit(_IS_SALT), F.col("doc_id").cast("string")), 10000)
     return (
         d.crossJoin(F.broadcast(mx))
         .select("doc_id", w_bp.alias("w_bp"), u_bp.alias("u_bp"))

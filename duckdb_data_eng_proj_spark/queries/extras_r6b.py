@@ -29,12 +29,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
+from duckdb_data_eng_proj_spark.operators.sketches import (
+    KMV_K,
+    KMV_SCALE,
+    kmv_rank,
+    kmv_rank_sql,
+    kmv_top_k,
+    kmv_top_k_sql,
+    md5_int,
+    md5_int_sql,
+    md5_slot,
+    md5_slot_sql,
+)
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens, word_ngrams
 from duckdb_data_eng_proj_spark.queries.registry import register, t
-
-# Oracle tokenizer fragment — single-sourced from operators/textops
-# (r16: this file previously carried a byte-identical private copy).
-_TOKS_SQL = TOK_SQL
 
 
 # ---------------------------------------------------------------------------
@@ -46,7 +54,7 @@ _SPAN_W = 8  # tokens per window (Lee et al. use 50; sized to testdata docs)
 @register(
     "dedup_span_exact",
     oracle=(
-        f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS tk FROM documents), "
+        f"WITH toks AS (SELECT doc_id, {TOK_SQL} AS tk FROM documents), "
         "spans AS (SELECT doc_id, "
         "array_to_string(list_slice(tk, i + 1, "
         f"i + {_SPAN_W}), ' ') AS span "
@@ -109,10 +117,7 @@ _BLOOM_K = 3  # hash functions
 
 
 def _bloom_pos_sql(j: int, item: str) -> str:
-    return (
-        f"CAST('0x' || substr(md5('{j}:' || CAST({item} AS VARCHAR)), 1, 8) "
-        f"AS BIGINT) % {_BLOOM_M}"
-    )
+    return md5_slot_sql(f"'{j}:' || CAST({item} AS VARCHAR)", _BLOOM_M)
 
 
 @register(
@@ -168,16 +173,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_orderkey")
 
     def pos(j: int, item):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"{j}:"), item.cast("string"))), 1, 8
-                ),
-                16,
-                10,
-            ).cast("long")
-            % _BLOOM_M
-        )
+        return md5_slot(F.concat(F.lit(f"{j}:"), item.cast("string")), _BLOOM_M)
 
     bloom = (
         dim.select(
@@ -359,7 +355,7 @@ _TFIDF_K = 5
 @register(
     "txt_tfidf_topterms",
     oracle=(
-        f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS tk FROM documents), "
+        f"WITH toks AS (SELECT doc_id, {TOK_SQL} AS tk FROM documents), "
         "occ AS (SELECT doc_id, unnest(tk) AS token FROM toks), "
         "tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM occ "
         "GROUP BY doc_id, token), "
@@ -742,20 +738,13 @@ def ext_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # ext_sketch_kmv_intersect
 
-_KMVI_K = 64
-_KMVI_SCALE = "1152921504606846976.0"  # 2^60, exactly representable
-
-
 @register(
     "ext_sketch_kmv_intersect",
     oracle=(
         "WITH pu AS (SELECT DISTINCT event_type, user_id FROM events), "
         "ph AS (SELECT event_type, "
-        "CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) "
-        "AS h FROM pu), "
-        "sk AS (SELECT event_type, h FROM (SELECT event_type, h, "
-        "row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn "
-        f"FROM ph) WHERE rn <= {_KMVI_K}), "
+        f"{md5_int_sql('CAST(user_id AS VARCHAR)', 1, 15)} AS h FROM pu), "
+        f"sk AS ({kmv_top_k_sql('ph', 'event_type')}), "
         "ty AS (SELECT DISTINCT event_type FROM events), "
         "tp AS (SELECT a.event_type AS ta, b.event_type AS tb "
         "FROM ty a JOIN ty b ON a.event_type < b.event_type), "
@@ -763,11 +752,10 @@ _KMVI_SCALE = "1152921504606846976.0"  # 2^60, exactly representable
         "JOIN sk s ON s.event_type IN (tp.ta, tp.tb)), "
         "g AS (SELECT ta, tb, h, COUNT(DISTINCT event_type) AS n_types "
         "FROM u GROUP BY ta, tb, h), "
-        "r AS (SELECT *, row_number() OVER (PARTITION BY ta, tb ORDER BY h) "
-        "AS rn FROM g), "
-        f"th AS (SELECT ta, tb, max(CASE WHEN rn <= {_KMVI_K} THEN h END) "
+        f"r AS (SELECT *, {kmv_rank_sql('ta, tb')} AS rn FROM g), "
+        f"th AS (SELECT ta, tb, max(CASE WHEN rn <= {KMV_K} THEN h END) "
         "AS theta, "
-        f"CAST(SUM(CASE WHEN rn <= {_KMVI_K} THEN 1 ELSE 0 END) AS BIGINT) "
+        f"CAST(SUM(CASE WHEN rn <= {KMV_K} THEN 1 ELSE 0 END) AS BIGINT) "
         "AS k_eff FROM r GROUP BY ta, tb), "
         "c AS (SELECT r.ta, r.tb, CAST(COUNT(*) AS BIGINT) AS n_common "
         "FROM r JOIN th ON th.ta = r.ta AND th.tb = r.tb "
@@ -778,10 +766,10 @@ _KMVI_SCALE = "1152921504606846976.0"  # 2^60, exactly representable
         "GROUP BY tp.ta, tp.tb, p.user_id) x WHERE nt = 2 GROUP BY ta, tb) "
         "SELECT th.ta, th.tb, th.k_eff, "
         "COALESCE(c.n_common, 0) AS n_common, "
-        f"CASE WHEN th.k_eff < {_KMVI_K} "
+        f"CASE WHEN th.k_eff < {KMV_K} "
         "THEN CAST(COALESCE(c.n_common, 0) AS DOUBLE) "
         "ELSE CAST(round(CAST(CAST(COALESCE(c.n_common, 0) "
-        f"* ({_KMVI_K - 1}.0 * {_KMVI_SCALE} / th.theta) / {_KMVI_K}.0 "
+        f"* ({KMV_K - 1}.0 * {KMV_SCALE}.0 / th.theta) / {KMV_K}.0 "
         "AS VARCHAR) AS DECIMAL(38,18)), 2) AS DOUBLE) "
         "END AS est_inter, "
         "COALESCE(tru.true_inter, 0) AS true_inter "
@@ -809,19 +797,9 @@ _KMVI_SCALE = "1152921504606846976.0"  # 2^60, exactly representable
 def ext_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events")
     pu = e.select("event_type", "user_id").distinct()
-    h60 = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h60 = md5_int(F.col("user_id").cast("string"), 1, 15)
     ph = pu.select("event_type", h60.alias("h"))
-    # h = md5 of a nullable-source key — asc_nulls_last keeps a NULL
-    # hash out of the top-K on both engines (r17 sweep)
-    w = Window.partitionBy("event_type").orderBy(F.asc_nulls_last("h"))
-    sk = (
-        ph.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _KMVI_K)
-        .select("event_type", "h")
-        .localCheckpoint(eager=False)
-    )
+    sk = kmv_top_k(ph, "event_type").localCheckpoint(eager=False)
     ty = e.select("event_type").distinct()
     tp = (
         ty.alias("a")
@@ -838,11 +816,10 @@ def ext_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = u.groupBy("ta", "tb", "h").agg(
         F.countDistinct("event_type").alias("n_types")
     )
-    wp = Window.partitionBy("ta", "tb").orderBy(F.asc_nulls_last("h"))
-    r = g.withColumn("rn", F.row_number().over(wp)).localCheckpoint(eager=False)
+    r = g.withColumn("rn", kmv_rank("ta", "tb")).localCheckpoint(eager=False)
     th = r.groupBy("ta", "tb").agg(
-        F.max(F.when(F.col("rn") <= _KMVI_K, F.col("h"))).alias("theta"),
-        F.sum(F.when(F.col("rn") <= _KMVI_K, 1).otherwise(0))
+        F.max(F.when(F.col("rn") <= KMV_K, F.col("h"))).alias("theta"),
+        F.sum(F.when(F.col("rn") <= KMV_K, 1).otherwise(0))
         .cast("bigint")
         .alias("k_eff"),
     )
@@ -875,11 +852,11 @@ def ext_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     est_full = F.round(
         F.coalesce("n_common", F.lit(0))
         * (
-            F.lit(float(_KMVI_K - 1))
-            * F.lit(float(1 << 60))
+            F.lit(float(KMV_K - 1))
+            * F.lit(float(KMV_SCALE))
             / F.col("theta")
         )
-        / F.lit(float(_KMVI_K)),
+        / F.lit(float(KMV_K)),
         2,
     )
     return (
@@ -891,7 +868,7 @@ def ext_sketch_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
             "k_eff",
             F.coalesce("n_common", F.lit(0)).cast("bigint").alias("n_common"),
             F.when(
-                F.col("k_eff") < _KMVI_K,
+                F.col("k_eff") < KMV_K,
                 F.coalesce("n_common", F.lit(0)).cast("double"),
             )
             .otherwise(est_full)
@@ -913,7 +890,7 @@ _COLL_TOPK = 50
 @register(
     "ext_ngram_collocations",
     oracle=(
-        f"WITH toks AS (SELECT doc_id, {_TOKS_SQL} AS tk FROM documents), "
+        f"WITH toks AS (SELECT doc_id, {TOK_SQL} AS tk FROM documents), "
         "big AS (SELECT tk[i+1] || ' ' || tk[i+2] AS bg, "
         "tk[i+1] AS w1, tk[i+2] AS w2 "
         "FROM toks, LATERAL unnest(range(len(tk) - 1)) t(i) "

@@ -40,6 +40,7 @@ from duckdb_data_eng_proj_spark.operators.graph import (
     state_sized_shuffle,
     undirected,
 )
+from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens
 from duckdb_data_eng_proj_spark.queries.corpus import _PAIRS_SQL, _near_dup_pairs
 from duckdb_data_eng_proj_spark.queries.registry import register
 from duckdb_data_eng_proj_spark.queries.training import _LSH_PRELUDE
@@ -303,15 +304,10 @@ def agg_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # were compared at hash precision).
 _L_U = "CAST(round(ln({x}) * 1000000, 0) AS BIGINT)"
 
-_NB_TOK = "list_filter(string_split_regex(lower(trim(text)), '\\s+'), x -> x <> '')"
-
-
 @register(
     "ml_naive_bayes",
     oracle=(
-        "WITH tt AS (SELECT doc_id, lang, unnest("
-        + _NB_TOK
-        + ") AS token FROM documents), "
+        f"WITH tt AS (SELECT doc_id, lang, unnest({TOK_SQL}) AS token FROM documents), "
         "tr AS (SELECT * FROM tt WHERE doc_id % 5 <> 0), "
         "te AS (SELECT doc_id, token FROM tt WHERE doc_id % 5 = 0), "
         "c AS (SELECT lang, token, CAST(COUNT(*) AS BIGINT) AS c FROM tr "
@@ -376,7 +372,6 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deriving the token stream (BASELINE §Round 17: 2.46 s vs 2.87 s
     recomputed at sf0.1). At 100 TB the checkpoint is a persisted token
     table — the standard train-once shape."""
-    from duckdb_data_eng_proj_spark.operators.textops import tokens
     from duckdb_data_eng_proj_spark.queries.registry import t
 
     def L(col):
@@ -470,9 +465,7 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "txt_entropy",
     oracle=(
-        "WITH tt AS (SELECT doc_id, unnest("
-        + _NB_TOK
-        + ") AS token FROM documents), "
+        f"WITH tt AS (SELECT doc_id, unnest({TOK_SQL}) AS token FROM documents), "
         "c AS (SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS c "
         "FROM tt GROUP BY 1, 2), "
         "d AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens, "
@@ -499,7 +492,6 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def txt_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from duckdb_data_eng_proj_spark.operators.textops import tokens
     from duckdb_data_eng_proj_spark.queries.registry import t
 
     def L(col):

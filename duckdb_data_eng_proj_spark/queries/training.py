@@ -32,12 +32,10 @@ from duckdb_data_eng_proj_spark.operators.textops import (
     EN_STOPWORDS,
     LANG_MARKERS,
     MINHASH_P,
-    hex_nibble,
     TOK_SQL,
     tokens,
     word_ngrams,
 )
-from duckdb_data_eng_proj_spark.functions.scalars import doc_bucket100
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.operators.lsh import (
     BUCKET_COLS,
@@ -47,6 +45,18 @@ from duckdb_data_eng_proj_spark.operators.lsh import (
     bucket_pairs,
     first_match,
     shingle_sets,
+)
+from duckdb_data_eng_proj_spark.operators.sketches import (
+    KMV_K,
+    KMV_SCALE,
+    doc_bucket100,
+    doc_bucket100_sql,
+    hex_int,
+    hex_int_sql,
+    kmv_top_k,
+    kmv_top_k_sql,
+    md5_int,
+    md5_int_sql,
 )
 from duckdb_data_eng_proj_spark.operators.vectors import (
     assign,
@@ -137,8 +147,8 @@ _HS_CTE = "hs AS (SELECT doc_id, list_transform(bg, s -> md5(s)) AS hs FROM bg)"
 
 _PAIRS_CTE = (
     "pairs AS (SELECT doc_id, list_transform(hs, h -> {"
-    "'a': CAST('0x' || substr(h, 1, 15) AS BIGINT), "
-    "'b': CAST('0x' || substr(h, 17, 15) AS BIGINT) | 1"
+    f"'a': {hex_int_sql('h', 1, 15)}, "
+    f"'b': {hex_int_sql('h', 17, 15)} | 1"
     "}) AS ps FROM hs)"
 )
 
@@ -604,7 +614,7 @@ def _simhash_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     md5c = F.md5(F.col("tkn"))
     pre = tkd.select(
-        "doc_id", *[hex_nibble(md5c, p).alias(f"n{p}") for p in range(16)]
+        "doc_id", *[hex_int(md5c, p + 1, 1).alias(f"n{p}") for p in range(16)]
     )
     aggs = [
         F.sum(
@@ -629,8 +639,9 @@ def _simhash_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _simhash_oracle() -> str:
-    nib = "CAST('0x' || substr(md5(tkn), {p}, 1) AS INT)"
-    pre_cols = ", ".join(nib.format(p=p + 1) + f" AS n{p}" for p in range(16))
+    pre_cols = ", ".join(
+        f"{md5_int_sql('tkn', p + 1, 1)} AS n{p}" for p in range(16)
+    )
     agg_cols = ", ".join(
         f"SUM(CASE WHEN (n{p} & {1 << b}) <> 0 THEN 1 ELSE -1 END) AS s{p}_{b}"
         for p in range(16)
@@ -1016,9 +1027,12 @@ def sim_ann_ivf_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _simhash_chunk(col: str, c: int):
-    """16-bit chunk c (0-3) of a 16-hex-char simhash, as int."""
-    return F.conv(F.substring(F.col(col), 4 * c + 1, 4), 16, 10).cast("int")
+# popcount of a XOR b over the four 16-bit chunks of two simhashes
+_HAMMING_SQL = " + ".join(
+    f"bit_count(xor({hex_int_sql('a.simhash', 4 * c + 1, 4)}, "
+    f"{hex_int_sql('b.simhash', 4 * c + 1, 4)}))"
+    for c in range(4)
+)
 
 
 @register(
@@ -1030,22 +1044,10 @@ def _simhash_chunk(col: str, c: int):
         "cand AS (SELECT DISTINCT x.doc_id AS doc_a, y.doc_id AS doc_b "
         "FROM ch x JOIN ch y ON x.c = y.c AND x.v = y.v "
         "AND x.doc_id < y.doc_id) "
-        "SELECT c.doc_a, c.doc_b, "
-        + " + ".join(
-            f"bit_count(xor(CAST('0x' || substr(a.simhash, {4 * c + 1}, 4) AS BIGINT), "
-            f"CAST('0x' || substr(b.simhash, {4 * c + 1}, 4) AS BIGINT)))"
-            for c in range(4)
-        )
-        + " AS hamming_dist "
+        f"SELECT c.doc_a, c.doc_b, {_HAMMING_SQL} AS hamming_dist "
         "FROM cand c JOIN sh a ON a.doc_id = c.doc_a "
         "JOIN sh b ON b.doc_id = c.doc_b "
-        "WHERE "
-        + " + ".join(
-            f"bit_count(xor(CAST('0x' || substr(a.simhash, {4 * c + 1}, 4) AS BIGINT), "
-            f"CAST('0x' || substr(b.simhash, {4 * c + 1}, 4) AS BIGINT)))"
-            for c in range(4)
-        )
-        + " <= 3"
+        f"WHERE {_HAMMING_SQL} <= 3"
     ),
     doc=(
         "SimHash near-dup pairs within Hamming distance 3 via pigeonhole "
@@ -1086,7 +1088,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = sum(
         [
             F.bit_count(
-                _simhash_chunk("sh_a", c).bitwiseXOR(_simhash_chunk("sh_b", c))
+                hex_int(F.col("sh_a"), 4 * c + 1, 4).bitwiseXOR(
+                    hex_int(F.col("sh_b"), 4 * c + 1, 4)
+                )
             )
             for c in range(4)
         ],
@@ -1303,8 +1307,7 @@ def ext_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ext_domain_mix",
     oracle=(
         "WITH b AS (SELECT doc_id, source, "
-        "CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) AS INT) % 100 "
-        "AS bucket, "
+        f"{doc_bucket100_sql('doc_id')} AS bucket, "
         "CASE TRY_CAST(substr(source, 4) AS INT) % 3 "
         "WHEN 0 THEN 100 WHEN 1 THEN 50 ELSE 25 END AS rate "
         "FROM documents) "
@@ -1366,25 +1369,17 @@ def ext_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KMV_K = 64
-_KMV_SCALE = float(1 << 60)  # h is a uniform 60-bit hash → h/2^60 ~ U(0,1)
-
-
 @register(
     "ext_sketch_kmv",
     oracle=(
         "WITH pairs AS (SELECT DISTINCT event_type, "
-        "CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15) AS BIGINT) "
-        "AS h FROM events), "
-        "topk AS (SELECT event_type, h FROM ("
-        "SELECT event_type, h, row_number() OVER ("
-        "PARTITION BY event_type ORDER BY h) AS rn FROM pairs) "
-        f"WHERE rn <= {_KMV_K}), "
+        f"{md5_int_sql('CAST(user_id AS VARCHAR)', 1, 15)} AS h FROM events), "
+        f"topk AS ({kmv_top_k_sql('pairs', 'event_type')}), "
         "agg AS (SELECT event_type, MAX(h) AS h_k, COUNT(*) AS k_eff "
         "FROM topk GROUP BY event_type) "
         "SELECT event_type, CAST(k_eff AS INT) AS k_eff, "
-        f"CAST(round(CAST(CAST(CASE WHEN k_eff < {_KMV_K} THEN CAST(k_eff AS DOUBLE) "
-        f"ELSE {_KMV_K - 1}.0 * {_KMV_SCALE!r} / h_k END "
+        f"CAST(round(CAST(CAST(CASE WHEN k_eff < {KMV_K} THEN CAST(k_eff AS DOUBLE) "
+        f"ELSE {KMV_K - 1}.0 * {float(KMV_SCALE)!r} / h_k END "
         "AS VARCHAR) AS DECIMAL(38,18)), 2) AS DOUBLE) AS est_distinct "
         "FROM agg"
     ),
@@ -1406,21 +1401,15 @@ _KMV_SCALE = float(1 << 60)  # h is a uniform 60-bit hash → h/2^60 ~ U(0,1)
 )
 def ext_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events")
-    h60 = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h60 = md5_int(F.col("user_id").cast("string"), 1, 15)
     pairs = e.select("event_type", h60.alias("h")).distinct()
-    w = Window.partitionBy("event_type").orderBy("h")
-    topk = pairs.withColumn("rn", F.row_number().over(w)).filter(
-        F.col("rn") <= _KMV_K
-    )
-    agg = topk.groupBy("event_type").agg(
+    agg = kmv_top_k(pairs, "event_type").groupBy("event_type").agg(
         F.max("h").alias("h_k"), F.count("*").alias("k_eff")
     )
     est = F.when(
-        F.col("k_eff") < _KMV_K, F.col("k_eff").cast("double")
+        F.col("k_eff") < KMV_K, F.col("k_eff").cast("double")
     ).otherwise(
-        F.lit(float(_KMV_K - 1)) * F.lit(_KMV_SCALE) / F.col("h_k")
+        F.lit(float(KMV_K - 1)) * F.lit(float(KMV_SCALE)) / F.col("h_k")
     )
     return agg.select(
         "event_type",

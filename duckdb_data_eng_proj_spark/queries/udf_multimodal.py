@@ -17,6 +17,8 @@ from duckdb_data_eng_proj_spark.operators.multimodal import (
     attach_payload,
     extract_features,
 )
+from duckdb_data_eng_proj_spark.operators.sketches import hex_int_sql
+from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL
 from duckdb_data_eng_proj_spark.operators.udfs import grouped_zscore, ws_token_count
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
@@ -74,9 +76,8 @@ def ext_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ext_udtf_lateral",
     oracle=(
-        "WITH toks AS (SELECT doc_id, "
-        "list_filter(string_split_regex(lower(trim(text)), '\\s+'), "
-        "x -> x <> '') AS tk FROM documents WHERE doc_id < 50) "
+        f"WITH toks AS (SELECT doc_id, {TOK_SQL} AS tk FROM documents "
+        "WHERE doc_id < 50) "
         # parallel unnests zip in DuckDB: positions with their tokens
         "SELECT doc_id, CAST(unnest(range(len(tk))) AS INT) AS pos, "
         "unnest(tk) AS token FROM toks"
@@ -158,8 +159,8 @@ _MD5 = "md5(text)"
         "SELECT doc_id, 'image/fake' AS media_type, "
         "CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, "
         f"{_MD5} AS content_md5, "
-        f"CAST(CAST('0x' || substr({_MD5}, 1, 4) AS INT) % 1920 + 1 AS INT) AS width, "
-        f"CAST(CAST('0x' || substr({_MD5}, 5, 4) AS INT) % 1080 + 1 AS INT) AS height "
+        f"CAST({hex_int_sql(_MD5, 1, 4)} % 1920 + 1 AS INT) AS width, "
+        f"CAST({hex_int_sql(_MD5, 5, 4)} % 1080 + 1 AS INT) AS height "
         "FROM documents"
     ),
     doc=(

@@ -5,8 +5,9 @@ Per id, the query is built with ``DataFrame.localCheckpoint`` wrapped so
 that the optimized plan of every checkpointed frame is recorded, then the
 returned frame's optimized plan is recorded too. Each plan is normalized
 (expression ids, lambda-variable ids, RDD ids and temp paths carry no
-meaning across sessions) and hashed. Two trees whose fingerprints match
-build the same plans, so a refactor that claims "no plan moved" can be
+meaning across sessions) and hashed, and so is the id's DuckDB oracle
+string. Two trees whose fingerprints match build the same plans and
+the same oracles, so a refactor that claims "no plan moved" can be
 checked with one command instead of re-verifying every id.
 
 Usage:
@@ -17,8 +18,9 @@ With no ids, every registered id except the ETL and streaming ones
 (``etl_*``, ``ext_stream_*``) is fingerprinted, in registry order, in
 one session. ``--sf`` defaults to the test suite's sf0.001 directory
 ($SPARK_GRAFT_TEST_SF_DIR, as in tests/conftest.py). ``--diff`` prints
-"N of M ids changed" and the ids whose hashes differ (or that exist in
-only one file).
+"N of M ids changed" and the ids whose plan hashes differ (or that
+exist in only one file), then "N of M oracle strings changed" and
+those ids.
 """
 
 from __future__ import annotations
@@ -57,8 +59,12 @@ def _plan_text(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+def _sha(text: str) -> str:
+    return hashlib.sha256(text.encode()).hexdigest()[:16]
+
+
 def _digest(df) -> str:
-    return hashlib.sha256(normalize(_plan_text(df)).encode()).hexdigest()[:16]
+    return _sha(normalize(_plan_text(df)))
 
 
 def fingerprint(spark, sf_dir: str, qids: list[str]) -> dict:
@@ -85,14 +91,28 @@ def fingerprint(spark, sf_dir: str, qids: list[str]) -> dict:
                 out[qid] = {"checkpoints": list(seen), "result": result}
             except Exception as e:  # noqa: BLE001 - recorded, not raised
                 out[qid] = {"error": f"{type(e).__name__}: {str(e)[:200]}"}
+            oracle = REGISTRY[qid].oracle
+            out[qid]["oracle"] = oracle and _sha(oracle)
             print(f"{qid}: {out[qid].get('result', out[qid].get('error'))}", flush=True)
     finally:
         DataFrame.localCheckpoint = original
     return out
 
 
-def diff(a: dict, b: dict) -> list[str]:
-    return sorted(q for q in set(a) | set(b) if a.get(q) != b.get(q))
+def diff(a: dict, b: dict, oracle: bool = False) -> list[str]:
+    """Ids whose plan hashes (or, with ``oracle``, oracle-string hashes)
+    differ between two fingerprint files, or that exist in only one."""
+
+    def part(fp: dict | None) -> dict | None:
+        if fp is None:
+            return None
+        if oracle:
+            return {"oracle": fp.get("oracle")}
+        return {k: v for k, v in fp.items() if k != "oracle"}
+
+    return sorted(
+        q for q in set(a) | set(b) if part(a.get(q)) != part(b.get(q))
+    )
 
 
 def main() -> None:
@@ -107,10 +127,12 @@ def main() -> None:
     if args.diff:
         with open(args.diff[0]) as fa, open(args.diff[1]) as fb:
             a, b = json.load(fa), json.load(fb)
-        changed = diff(a, b)
-        print(f"{len(changed)} of {len(set(a) | set(b))} ids changed")
-        for q in changed:
-            print(f"  {q}")
+        n = len(set(a) | set(b))
+        for label, oracle in (("ids", False), ("oracle strings", True)):
+            changed = diff(a, b, oracle)
+            print(f"{len(changed)} of {n} {label} changed")
+            for q in changed:
+                print(f"  {q}")
         return
 
     from duckdb_data_eng_proj_spark.queries import REGISTRY

@@ -587,6 +587,27 @@ def test_graph_pagerank_edges_have_no_distinct(spark, monkeypatch):
     assert count_exchanges(edges) <= 8
 
 
+def test_cluster_cc_star_edges_have_no_distinct(spark, monkeypatch):
+    """dedup_cluster_cc_star's edge table is _near_dup_pairs renamed:
+    those pairs are already distinct doc_a < doc_b, so no aggregate
+    (an exchange plus a hash aggregate over the verified pair graph)
+    sits on it. Read off its eager checkpoint call, the first frame
+    with (u, v) columns; star_fixpoint's own rounds follow it."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames = []
+    original = DataFrame.localCheckpoint
+
+    def recording(self, eager=True):
+        frames.append(self)
+        return original(self, eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    REGISTRY["dedup_cluster_cc_star"].fn(spark, SF_DIR)
+    edges = next(f for f in frames if f.columns == ["u", "v"])
+    assert edges._jdf.queryExecution().optimizedPlan().nodeName() != "Aggregate"
+
+
 def test_gbdt_round_fact_scan_bounded(spark):
     """ml_gbdt_round touches the fact table exactly once: the (q, cls)
     count is eagerly localCheckpointed, so the physical plan must not

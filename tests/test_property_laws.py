@@ -57,13 +57,15 @@ def test_month_boundary_diff_matches_duckdb(a, b):
 @given(st.integers(min_value=0, max_value=10**12))
 def test_split_bucket_is_engine_identical(doc_id):
     """The md5 split bucket (first 4 hex chars mod 100) computed in
-    Python == DuckDB — the property ext_split_train's stability
-    depends on (Spark's conv(substr(md5)) path is oracle-checked
-    separately at sf0.01)."""
+    Python == DuckDB through the shipped sketches.md5_int_sql — the
+    property ext_split_train's stability depends on (the Spark twin
+    is oracle-checked separately at sf0.01)."""
     import hashlib
+
+    from duckdb_data_eng_proj_spark.operators.sketches import md5_int_sql
 
     got = int(hashlib.md5(str(doc_id).encode()).hexdigest()[:4], 16) % 100
     (want,) = duckdb.sql(
-        f"SELECT CAST('0x' || substr(md5('{doc_id}'), 1, 4) AS INT) % 100"
+        f"SELECT {md5_int_sql(repr(str(doc_id)), 1, 4)} % 100"
     ).fetchone()
     assert got == want, (doc_id, got, want)

@@ -27,8 +27,11 @@ import random
 import statistics
 from collections import Counter, defaultdict
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType
 
+from duckdb_data_eng_proj_spark.operators.sketches import hex_int, hex_int_sql
 from duckdb_data_eng_proj_spark.queries import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -277,31 +280,48 @@ def test_week_trunc_and_interval_agree_across_engines(spark, oracle_con):
         assert row[0].weekday() == 0  # Monday alignment on both
 
 
+_HEX_WINDOWS = [(1, 1), (1, 4), (5, 4), (1, 8), (1, 15), (17, 15)]
+
+
 def test_hex_parse_agrees_across_engines(spark, oracle_con):
-    # agg_sketch_hll / agg_bloom_filter parse md5 prefixes as integers
-    # via CAST('0x'||hex AS BIGINT) (DuckDB) and conv(hex, 16, 10)
-    # (Spark). Sweep random 8- and 15-digit hex strings, including
-    # all-f extremes (15 hex digits = 60 bits, no sign risk).
+    # Every md5-derived integer (sketch slots, HLL registers, MinHash
+    # pairs, simhash nibbles and chunks, split buckets) reads a hex
+    # window through operators/sketches.hex_int / hex_int_sql. Sweep
+    # 32-digit hex strings (an md5 digest's shape) through each window
+    # width and offset in use, including all-f and all-0 extremes (15
+    # hex digits = 60 bits, no sign risk), on both engines; the type
+    # is INT up to 7 digits, BIGINT from 8, and 16+ is refused.
     rng = random.Random(13)
-    hexes = ["f" * 15, "f" * 8, "0" * 15, "8" + "0" * 14]
-    hexes += ["%015x" % rng.randrange(0, 2**60) for _ in range(200)]
-    hexes += ["%08x" % rng.randrange(0, 2**32) for _ in range(200)]
-    expect = [int(h, 16) for h in hexes]
-    duck = [
-        r[0]
-        for r in oracle_con.execute(
-            "SELECT CAST('0x' || h AS BIGINT) FROM (SELECT unnest(?) AS h)",
-            [hexes],
-        ).fetchall()
+    hexes = ["f" * 32, "0" * 32, "8" + "0" * 31, "7" + "f" * 31]
+    hexes += ["%032x" % rng.randrange(0, 2**128) for _ in range(200)]
+    expect = [
+        tuple(int(h[s - 1 : s - 1 + n], 16) for s, n in _HEX_WINDOWS) for h in hexes
     ]
-    got = [
-        r[0]
-        for r in spark.createDataFrame([(h,) for h in hexes], "h string")
-        .select(F.conv("h", 16, 10).cast("long"))
-        .collect()
-    ]
-    assert duck == expect
-    assert got == expect
+    cols = ", ".join(hex_int_sql("h", s, n) for s, n in _HEX_WINDOWS)
+    cur = oracle_con.execute(
+        f"SELECT h, {cols} FROM (SELECT unnest(?) AS h)", [hexes]
+    )
+    duck = {r[0]: tuple(r[1:]) for r in cur.fetchall()}
+    sdf = spark.createDataFrame([(h,) for h in hexes], "h string").select(
+        "h", *[hex_int(F.col("h"), s, n) for s, n in _HEX_WINDOWS]
+    )
+    got = {r[0]: tuple(r[1:]) for r in sdf.collect()}
+    assert [duck[h] for h in hexes] == expect
+    assert [got[h] for h in hexes] == expect
+    want_int = [n <= 7 for _, n in _HEX_WINDOWS]
+    duck_types = oracle_con.execute(
+        "SELECT "
+        + ", ".join(f"typeof({hex_int_sql('h', s, n)})" for s, n in _HEX_WINDOWS)
+        + f" FROM (SELECT '{hexes[0]}' AS h)"
+    ).fetchone()
+    assert list(duck_types) == ["INTEGER" if w else "BIGINT" for w in want_int]
+    spark_types = [f.dataType for f in sdf.schema.fields[1:]]
+    assert spark_types == [IntegerType() if w else LongType() for w in want_int]
+    for n in (0, 16):
+        with pytest.raises(ValueError):
+            hex_int_sql("h", 1, n)
+        with pytest.raises(ValueError):
+            hex_int(F.col("h"), 1, n)
 
 
 # ---------------------------------------------------------------------------

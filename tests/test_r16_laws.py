@@ -527,16 +527,21 @@ def null_vintage_dir(tmp_path_factory):
     ],
 )
 def test_null_vintage_cross_engine(spark, null_vintage_dir, qid):
+    tables = ("documents", "events", "orders")
+    _assert_cross_engine(spark, null_vintage_dir, tables, qid)
+
+
+def _assert_cross_engine(spark, data_dir, tables, qid):
     spec = REGISTRY[qid]
-    sdf = spec.fn(spark, null_vintage_dir)
+    sdf = spec.fn(spark, data_dir)
     got = _norm_rows(
         tuple(r[c] for c in sorted(sdf.columns)) for r in sdf.collect()
     )
     con = duckdb.connect()
-    for tbl in ("documents", "events", "orders"):
+    for tbl in tables:
         con.execute(
             f"CREATE VIEW {tbl} AS SELECT * FROM "
-            f"read_parquet('{null_vintage_dir}/{tbl}.parquet')"
+            f"read_parquet('{data_dir}/{tbl}.parquet')"
         )
     cur = con.execute(spec.oracle)
     cols = [dd[0] for dd in cur.description]
@@ -544,6 +549,36 @@ def test_null_vintage_cross_engine(spark, null_vintage_dir, qid):
     want = _norm_rows(tuple(r[i] for i in order) for r in cur.fetchall())
     con.close()
     assert got == want, f"{qid}: {got[:5]} vs {want[:5]}"
+
+
+@pytest.fixture(scope="module")
+def kmv_null_user_dir(tmp_path_factory):
+    """sf0.01 events plus one NULL-user_id row per event type. Every
+    type keeps its 150 users, so each KMV sketch fills all K slots and
+    the NULL hash (md5 of a NULL key) competes for the top-K: it must
+    rank last on both engines, never take a slot."""
+    d = tmp_path_factory.mktemp("kmvnull")
+    src = os.path.join(os.path.dirname(SF_DIR), "sf0.01", "events.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW src AS SELECT * FROM read_parquet('{src}')")
+    (fewest,) = con.execute(
+        "SELECT min(n) FROM (SELECT COUNT(DISTINCT user_id) AS n "
+        "FROM src GROUP BY event_type)"
+    ).fetchone()
+    assert fewest >= 64, fewest
+    con.execute(
+        "COPY (SELECT * FROM src UNION ALL "
+        "SELECT (SELECT max(event_id) FROM src) + row_number() OVER "
+        "(ORDER BY event_type), min(ts), NULL, event_type, NULL, NULL "
+        f"FROM src GROUP BY event_type) TO '{d}/events.parquet' (FORMAT PARQUET)"
+    )
+    con.close()
+    return str(d)
+
+
+@pytest.mark.parametrize("qid", ["ext_sketch_kmv", "ext_sketch_kmv_intersect"])
+def test_kmv_null_user_cross_engine(spark, kmv_null_user_dir, qid):
+    _assert_cross_engine(spark, kmv_null_user_dir, ("events",), qid)
 
 
 # ---------------------------------------------------------------------------
