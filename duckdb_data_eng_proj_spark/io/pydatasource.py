@@ -17,11 +17,12 @@ normal Catalyst pipeline (the source is NOT a driver-side collect).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
+
+from duckdb_data_eng_proj_spark.operators.sketches import md5_int_py
 
 _VOCAB = (
     "loan rate credit risk score branch region term amount balance "
@@ -30,13 +31,12 @@ _VOCAB = (
 
 
 def _word(doc_id: int, j: int) -> str:
-    h = hashlib.md5(f"{doc_id}:{j}".encode()).hexdigest()
-    return _VOCAB[int(h[:4], 16) % len(_VOCAB)]
+    return _VOCAB[md5_int_py(f"{doc_id}:{j}", 1, 4) % len(_VOCAB)]
 
 
 def synth_row(doc_id: int) -> tuple[int, str, int]:
     """One synthetic document: id, seeded text, token count."""
-    n_words = 5 + int(hashlib.md5(f"{doc_id}:len".encode()).hexdigest()[:4], 16) % 20
+    n_words = 5 + md5_int_py(f"{doc_id}:len", 1, 4) % 20
     text = " ".join(_word(doc_id, j) for j in range(n_words))
     return doc_id, text, n_words
 

@@ -49,6 +49,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from duckdb_data_eng_proj_spark.operators.sketches import md5_int_py
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("doc_id", LongType(), True),
@@ -128,8 +130,8 @@ def fake_decode_features(payload: bytes) -> tuple[str, int, int]:
     """Deterministic stand-in for decode: md5 + pseudo dimensions
     derived from the digest (mirrors the oracle SQL exactly)."""
     digest = hashlib.md5(payload).hexdigest()
-    width = int(digest[0:4], 16) % 1920 + 1
-    height = int(digest[4:8], 16) % 1080 + 1
+    width = md5_int_py(payload, 1, 4) % 1920 + 1
+    height = md5_int_py(payload, 5, 4) % 1080 + 1
     return digest, width, height
 
 

@@ -5,8 +5,8 @@ oracle-SQL twin (as in ``lsh.py``, ``vectors.py`` and ``graph.py``).
 A hash is hex digits [start, start + n) of md5(x) read as INT for
 n <= 7 or BIGINT for 8 <= n <= 15; 16 digits would overflow a signed
 BIGINT. No other Spark or SQL code in the package parses hex into an
-integer (the pure-Python generators behind src_python_datasource and
-mm_decode_stub read the same digits with ``int(h, 16)``).
+integer; the pure-Python generators behind src_python_datasource and
+mm_decode_stub read the same digits through ``md5_int_py``.
 Callers pass the salted input as they build it, so each sketch keeps
 its own salt. md5 is deterministic and identical across engines, which
 is what makes the DuckDB oracle parity checks exact; for production
@@ -14,6 +14,8 @@ throughput ``F.xxhash64`` is ~5× faster but has no DuckDB twin.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -47,6 +49,14 @@ def md5_int(x: Column, start: int, n: int) -> Column:
 def md5_int_sql(x: str, start: int, n: int) -> str:
     """DuckDB twin of ``md5_int``."""
     return hex_int_sql(f"md5({x})", start, n)
+
+
+def md5_int_py(data: bytes | str, start: int, n: int) -> int:
+    """Pure-Python twin of ``md5_int`` (a str is hashed as UTF-8)."""
+    _types(n)
+    if isinstance(data, str):
+        data = data.encode()
+    return int(hashlib.md5(data).hexdigest()[start - 1 : start - 1 + n], 16)
 
 
 def md5_slot(salted: Column, width: int) -> Column:

@@ -34,10 +34,9 @@ truncate toward zero — the r8 sign-parity law).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from duckdb_data_eng_proj_spark.io.sources import event_ts, read_raw_events
 from duckdb_data_eng_proj_spark.operators.graph import undirected
 from duckdb_data_eng_proj_spark.operators.lsh import bucket_pairs
 from duckdb_data_eng_proj_spark.operators.sketches import (
@@ -47,6 +46,7 @@ from duckdb_data_eng_proj_spark.operators.sketches import (
     md5_slot_sql,
 )
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens
+from duckdb_data_eng_proj_spark.operators.timeseries import HOURLY_CENTS_SQL, hourly_cents
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import _LSH_PRELUDE
 
@@ -443,33 +443,46 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DOUBLE and would not hash-match.
 
 
+def _with_twice_median(df: DataFrame, v: str, name: str) -> DataFrame:
+    """``df`` plus ``name`` = 2·median of ``v`` per user, as a window
+    sum over the user partitioning (no groupBy + join back): every
+    pass after the bucket aggregate re-uses the one user-keyed
+    exchange (2 exchanges total vs 7; same-session A/B at sf0.1:
+    0.58 s vs 0.85 s for the join shape)."""
+    wn = Window.partitionBy("user_id")
+    rk = df.select(
+        "*",
+        F.row_number().over(wn.orderBy(v, "bucket_ts")).alias("rn"),
+        F.count("*").over(wn).alias("n"),
+    )
+
+    def mid(k: int) -> Column:
+        return F.when(F.col("rn") == F.expr(f"(n + {k}) DIV 2"), F.col(v)).otherwise(0)
+
+    return rk.withColumn(name, F.sum(mid(1) + mid(2)).over(wn)).drop("rn", "n")
+
+
+def _twice_median_sql(src: str, v: str, name: str) -> str:
+    """DuckDB twin of ``_with_twice_median`` over the relation ``src``."""
+    mid = [f"CASE WHEN rn = (n + {k}) // 2 THEN {v} ELSE 0 END" for k in (1, 2)]
+    return (
+        f"SELECT * EXCLUDE (rn, n), CAST(SUM({mid[0]} + {mid[1]}) "
+        f"OVER (PARTITION BY user_id) AS BIGINT) AS {name} FROM ("
+        f"SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY {v}, bucket_ts) "
+        f"AS rn, COUNT(*) OVER (PARTITION BY user_id) AS n FROM {src})"
+    )
+
+
 @register(
     "ts_anomaly_mad",
     oracle=(
-        "WITH b AS (SELECT user_id, date_trunc('hour', ts) AS bucket_ts, "
-        "CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS v_c100 "
-        "FROM events GROUP BY 1, 2), "
-        "rk AS (SELECT user_id, bucket_ts, v_c100, "
-        "ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY v_c100, bucket_ts) "
-        "AS rn, COUNT(*) OVER (PARTITION BY user_id) AS n FROM b), "
-        "med AS (SELECT user_id, CAST(SUM("
-        "CASE WHEN rn = (n + 1) // 2 THEN v_c100 ELSE 0 END + "
-        "CASE WHEN rn = (n + 2) // 2 THEN v_c100 ELSE 0 END) AS BIGINT) "
-        "AS med2 FROM rk GROUP BY user_id), "
-        "dev AS (SELECT rk.user_id, rk.bucket_ts, rk.v_c100, med.med2, "
-        "abs(2 * rk.v_c100 - med.med2) AS dev2 "
-        "FROM rk JOIN med ON med.user_id = rk.user_id), "
-        "drk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id "
-        "ORDER BY dev2, bucket_ts) AS rn, "
-        "COUNT(*) OVER (PARTITION BY user_id) AS n FROM dev), "
-        "mad AS (SELECT user_id, CAST(SUM("
-        "CASE WHEN rn = (n + 1) // 2 THEN dev2 ELSE 0 END + "
-        "CASE WHEN rn = (n + 2) // 2 THEN dev2 ELSE 0 END) AS BIGINT) "
-        "AS mad4 FROM drk GROUP BY user_id) "
-        "SELECT dev.user_id, CAST(dev.bucket_ts AS TIMESTAMP) AS bucket_ts, "
-        "dev.v_c100, dev.med2, mad.mad4, "
-        "CAST(2 * dev.dev2 > 3 * mad.mad4 AS BIGINT) AS is_anomaly "
-        "FROM dev JOIN mad ON mad.user_id = dev.user_id"
+        f"WITH b AS ({HOURLY_CENTS_SQL}), "
+        f"m AS ({_twice_median_sql('b', 'v_c100', 'med2')}), "
+        "dev AS (SELECT user_id, bucket_ts, v_c100, med2, "
+        "abs(2 * v_c100 - med2) AS dev2 FROM m), "
+        f"mad AS ({_twice_median_sql('dev', 'dev2', 'mad4')}) "
+        "SELECT user_id, bucket_ts, v_c100, med2, mad4, "
+        "CAST(2 * dev2 > 3 * mad4 AS BIGINT) AS is_anomaly FROM mad"
     ),
     doc=(
         "Median/MAD anomaly flags over per-user hourly cent-unit "
@@ -490,68 +503,17 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ts_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = read_raw_events(spark, sf_dir)
-    b = (
-        raw.select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", event_ts(raw)).alias("bucket_ts"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("v"),
-        )
-        .groupBy("user_id", "bucket_ts")
-        .agg(F.sum("v").alias("v_c100"))
+    b = hourly_cents(t(spark, sf_dir, "events"))
+    dev = _with_twice_median(b, "v_c100", "med2").withColumn(
+        "dev2", F.abs(2 * F.col("v_c100") - F.col("med2"))
     )
-    # Both medians as WINDOW sums over the same user partitioning (no
-    # groupBy + join back): every pass after the bucket aggregate
-    # re-uses the single user-keyed exchange (2 exchanges total vs 7).
-    # Same-session A/B at sf0.1: 0.58 s vs 0.85 s for the join shape.
-    # asc_nulls_last on both keys: v_c100/bucket_ts derive from nullable
-    # value/ts — DuckDB ranks NULLs last (r17 sweep)
-    wv = Window.partitionBy("user_id").orderBy(
-        F.asc_nulls_last("v_c100"), F.asc_nulls_last("bucket_ts")
-    )
-    wn = Window.partitionBy("user_id")
-    rk = b.select(
-        "user_id",
-        "bucket_ts",
-        "v_c100",
-        F.row_number().over(wv).alias("rn"),
-        F.count("*").over(wn).alias("n"),
-    )
-    med_term = F.when(
-        F.col("rn") == F.expr("(n + 1) DIV 2"), F.col("v_c100")
-    ).otherwise(0) + F.when(
-        F.col("rn") == F.expr("(n + 2) DIV 2"), F.col("v_c100")
-    ).otherwise(0)
-    dev = rk.withColumn("med2", F.sum(med_term).over(wn)).select(
+    return _with_twice_median(dev, "dev2", "mad4").select(
         "user_id",
         "bucket_ts",
         "v_c100",
         "med2",
-        F.abs(2 * F.col("v_c100") - F.col("med2")).alias("dev2"),
-    )
-    wd = Window.partitionBy("user_id").orderBy(
-        F.asc_nulls_last("dev2"), F.asc_nulls_last("bucket_ts")
-    )
-    drk = dev.select(
-        "*",
-        F.row_number().over(wd).alias("rn"),
-        F.count("*").over(wn).alias("n"),
-    )
-    mad_term = F.when(
-        F.col("rn") == F.expr("(n + 1) DIV 2"), F.col("dev2")
-    ).otherwise(0) + F.when(
-        F.col("rn") == F.expr("(n + 2) DIV 2"), F.col("dev2")
-    ).otherwise(0)
-    return (
-        drk.withColumn("mad4", F.sum(mad_term).over(wn))
-        .select(
-            "user_id",
-            "bucket_ts",
-            "v_c100",
-            "med2",
-            "mad4",
-            (2 * F.col("dev2") > 3 * F.col("mad4")).cast("long").alias("is_anomaly"),
-        )
+        "mad4",
+        (2 * F.col("dev2") > 3 * F.col("mad4")).cast("long").alias("is_anomaly"),
     )
 
 
@@ -719,9 +681,7 @@ def txt_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ts_changepoint_cusum",
     oracle=(
-        "WITH b AS (SELECT user_id, date_trunc('hour', ts) AS bucket_ts, "
-        "CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS v_c100 "
-        "FROM events GROUP BY 1, 2), "
+        f"WITH b AS ({HOURLY_CENTS_SQL}), "
         "m AS (SELECT user_id, CAST(SUM(v_c100) AS BIGINT) AS sv, "
         "CAST(COUNT(*) AS BIGINT) AS n FROM b GROUP BY user_id), "
         "p AS (SELECT b.user_id, b.bucket_ts, b.v_c100, "
@@ -737,7 +697,7 @@ def txt_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "GREATEST(0, MAX(cneg) OVER w) - cneg AS s_neg "
         "FROM c WINDOW w AS (PARTITION BY user_id ORDER BY bucket_ts "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) "
-        "SELECT user_id, CAST(bucket_ts AS TIMESTAMP) AS bucket_ts, "
+        "SELECT user_id, bucket_ts, "
         "v_c100, CAST(s_pos AS BIGINT) AS s_pos, "
         "CAST(s_neg AS BIGINT) AS s_neg, "
         "CAST(s_pos > 5 * k OR s_neg > 5 * k AS BIGINT) AS drift_flag "
@@ -762,16 +722,7 @@ def txt_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def ts_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = read_raw_events(spark, sf_dir)
-    b = (
-        raw.select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", event_ts(raw)).alias("bucket_ts"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("v"),
-        )
-        .groupBy("user_id", "bucket_ts")
-        .agg(F.sum("v").alias("v_c100"))
-    )
+    b = hourly_cents(t(spark, sf_dir, "events"))
     m = b.groupBy("user_id").agg(
         F.sum("v_c100").alias("sv"), F.count("*").alias("n")
     )

@@ -43,6 +43,12 @@ from duckdb_data_eng_proj_spark.operators.graph import (
     state_sized_shuffle,
     undirected,
 )
+from duckdb_data_eng_proj_spark.operators.timeseries import (
+    HOURLY_COUNTS_SQL,
+    dense_hours,
+    dense_hours_sql,
+    hourly_counts,
+)
 from duckdb_data_eng_proj_spark.queries.corpus import _near_dup_pairs, _PAIRS_SQL
 from duckdb_data_eng_proj_spark.queries.extras_r6 import _PRETOK_RE
 from duckdb_data_eng_proj_spark.queries.registry import register, t
@@ -71,26 +77,19 @@ _ACF_SCALARS_SQL = (
 def _acf_pair_sql(k: int) -> str:
     return (
         f"SELECT event_type, CAST({k} AS BIGINT) AS lag, "
-        f"cnt AS y, x{k} AS x FROM lagged WHERE x{k} IS NOT NULL"
+        f"n AS y, x{k} AS x FROM lagged WHERE x{k} IS NOT NULL"
     )
 
 
 @register(
     "ts_autocorr",
     oracle=(
-        "WITH hourly AS (SELECT event_type, date_trunc('hour', ts) AS b, "
-        "CAST(COUNT(*) AS BIGINT) AS cnt FROM events "
-        "WHERE ts IS NOT NULL GROUP BY 1, 2), "
-        "span AS (SELECT event_type, MIN(b) AS mn, MAX(b) AS mx "
-        "FROM hourly GROUP BY 1), "
-        "grid AS (SELECT event_type, "
-        "unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS b FROM span), "
-        "dense AS (SELECT g.event_type, g.b, COALESCE(h.cnt, 0) AS cnt "
-        "FROM grid g LEFT JOIN hourly h "
-        "ON h.event_type = g.event_type AND h.b = g.b), "
-        "lagged AS (SELECT event_type, b, cnt, "
-        + ", ".join(f"LAG(cnt, {k}) OVER w AS x{k}" for k in _ACF_LAGS)
-        + " FROM dense WINDOW w AS (PARTITION BY event_type ORDER BY b)), "
+        f"WITH hourly AS ({HOURLY_COUNTS_SQL}), "
+        "dense AS (SELECT event_type, bucket_ts, COALESCE(n, 0) AS n "
+        f"FROM ({dense_hours_sql('hourly', 'event_type')})), "
+        "lagged AS (SELECT event_type, bucket_ts, n, "
+        + ", ".join(f"LAG(n, {k}) OVER w AS x{k}" for k in _ACF_LAGS)
+        + " FROM dense WINDOW w AS (PARTITION BY event_type ORDER BY bucket_ts)), "
         "pairs AS ("
         + " UNION ALL ".join(_acf_pair_sql(k) for k in _ACF_LAGS)
         + "), "
@@ -121,8 +120,8 @@ def _acf_pair_sql(k: int) -> str:
         "|hours| rows. Densification is JOIN-FREE: the oracle spells "
         "the textbook span-grid LEFT JOIN, but that plan instantiates "
         "the hourly subplan twice (two corpus scans), so the Spark "
-        "side lags the previous present bucket and explodes each row "
-        "into [gap zero-hours] ++ [(b, cnt)] — one scan, and the "
+        "side explodes each bucket into the hours since the previous "
+        "one (operators/timeseries.dense_hours) — one scan, and the "
         "single repartition(event_type) serves the gap window, the "
         "lag windows, and the final (type, lag) agg (subset rule; 3 "
         "exchanges total, plan-pinned). The 6× lag-stack blowup is "
@@ -131,50 +130,16 @@ def _acf_pair_sql(k: int) -> str:
     tags=("timeseries",),
 )
 def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
-    # NULL-ts events have no place on the lag axis — excluded on
-    # BOTH engines (r17 hostile vintage; the series-family rule)
-    hourly = ev.filter(F.col("ts").isNotNull()).groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("b")
-    ).agg(F.count("*").cast("long").alias("cnt"))
-    # Densify WITHOUT a grid join: the textbook span-join form (see
-    # the oracle) instantiates the hourly subplan twice — two full
-    # corpus scans. Instead, lag the previous present bucket and
-    # explode each row into [zero-fill hours of the gap] ++ [(b,
-    # cnt)] — ONE hourly instance, one corpus scan, zero joins; the
-    # single repartition(event_type) then serves the gap-lag window,
-    # the lag windows, AND the (type, lag) agg below (subset rule).
-    wb = Window.partitionBy("event_type").orderBy("b")
-    dense = (
-        hourly.repartition("event_type")
-        .withColumn("prev", F.lag("b").over(wb))
-        .select(
-            "event_type",
-            F.explode(
-                F.concat(
-                    F.when(
-                        F.col("prev").isNotNull()
-                        & (F.col("prev") + F.expr("INTERVAL 1 HOUR") < F.col("b")),
-                        F.expr(
-                            "transform("
-                            "sequence(prev + INTERVAL 1 HOUR, b - INTERVAL 1 HOUR, "
-                            "INTERVAL 1 HOUR), "
-                            "t -> struct(t AS b, CAST(0 AS BIGINT) AS cnt))"
-                        ),
-                    ).otherwise(F.expr("CAST(array() AS ARRAY<STRUCT<b: TIMESTAMP, cnt: BIGINT>>)")),
-                    F.array(F.struct(F.col("b"), F.col("cnt"))),
-                )
-            ).alias("s"),
-        )
-        .select("event_type", F.col("s.b").alias("b"), F.col("s.cnt").alias("cnt"))
-    )
-    w = Window.partitionBy("event_type").orderBy("b")
-    # Window lags land in their own projection first — Spark rejects a
-    # window expression nested under a generator in one operator.
+    # Zero-count hours are real observations of a count series; the
+    # densify's one repartition(event_type) also serves the lag windows
+    # AND the (type, lag) agg below (subset rule).
+    dense = dense_hours(hourly_counts(t(spark, sf_dir, "events")), "event_type")
+    w = Window.partitionBy("event_type").orderBy("bucket_ts")
+    n = F.coalesce("n", F.lit(0).cast("long"))
     lagged = dense.select(
         "event_type",
-        "cnt",
-        *[F.lag("cnt", k).over(w).alias(f"x{k}") for k in _ACF_LAGS],
+        n.alias("n"),
+        *[F.lag(n, k).over(w).alias(f"x{k}") for k in _ACF_LAGS],
     )
     lag_structs = F.array(
         *[
@@ -186,11 +151,11 @@ def ts_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     stacked = (
-        lagged.select("event_type", "cnt", F.explode(lag_structs).alias("s"))
+        lagged.select("event_type", "n", F.explode(lag_structs).alias("s"))
         .select(
             "event_type",
             F.col("s.lag").alias("lag"),
-            F.col("cnt").alias("y"),
+            F.col("n").alias("y"),
             F.col("s.x").alias("x"),
         )
         .filter(F.col("x").isNotNull())

@@ -99,20 +99,25 @@ def evt_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbered = sess.withColumn("rn", F.row_number().over(wn)).filter(
         F.col("rn") <= _PATH_DEPTH
     )
+    # array_join skips NULL types as string_agg does; a session with no
+    # typed event has no path (NULL, as string_agg's), not ''
     paths = numbered.groupBy("user_id", "session_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("rn", "event_type"))),
-                lambda s: s["event_type"],
+        F.when(
+            F.count("event_type") > 0,
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("rn", "event_type"))),
+                    lambda s: s["event_type"],
+                ),
+                ">",
             ),
-            ">",
         ).alias("path")
     )
     pc = paths.groupBy("path").agg(
         F.count("*").cast("bigint").alias("n_sessions"),
         F.countDistinct("user_id").cast("bigint").alias("n_users"),
     )
-    wr = Window.orderBy(F.desc("n_sessions"), F.asc("path"))
+    wr = Window.orderBy(F.desc("n_sessions"), F.asc_nulls_last("path"))
     return (
         pc.withColumn("rank", F.row_number().over(wr).cast("bigint"))
         .filter(F.col("rank") <= _PATH_TOPK)

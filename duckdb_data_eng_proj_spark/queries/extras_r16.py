@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from duckdb_data_eng_proj_spark.operators.timeseries import per_user
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
 # ---------------------------------------------------------------------------
@@ -279,9 +280,4 @@ def ts_downsample_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ts").cast("long").alias("tl"),
         F.floor(F.col("value") * 100).cast("long").alias("y"),
     )
-    width = spark.sparkContext.defaultParallelism
-    return (
-        pts.repartition(width, "user_id")
-        .groupBy("user_id")
-        .applyInPandas(_lttb_pdf, _LTTB_SCHEMA)
-    )
+    return per_user(pts, _lttb_pdf, _LTTB_SCHEMA)

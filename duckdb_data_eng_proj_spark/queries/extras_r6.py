@@ -30,6 +30,12 @@ from pyspark.sql import functions as F
 
 from duckdb_data_eng_proj_spark.io.sources import ensure_parallelism
 from duckdb_data_eng_proj_spark.operators.sketches import md5_slot, md5_slot_sql
+from duckdb_data_eng_proj_spark.operators.timeseries import (
+    HOURLY_CENTS_SQL,
+    dense_hours,
+    dense_hours_sql,
+    hourly_cents,
+)
 from duckdb_data_eng_proj_spark.operators.vectors import dot_sql, sorted_mean
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import _hp_sig_cte
@@ -242,25 +248,14 @@ _GAP_FILL_USERS = 30  # bounded eval slice; the plan is per-user generic
 @register(
     "ts_gap_fill",
     oracle=(
-        "WITH ev AS (SELECT user_id, "
-        "CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket_ts, "
-        "CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) "
-        "AS sum_cents, "
-        "CAST(COUNT(*) AS BIGINT) AS n_events "
-        f"FROM events WHERE user_id < {_GAP_FILL_USERS} "
-        "GROUP BY user_id, bucket_ts), "
-        "span AS (SELECT user_id, MIN(bucket_ts) AS mn, MAX(bucket_ts) AS mx "
-        "FROM ev GROUP BY user_id), "
-        "grid AS (SELECT user_id, unnest(generate_series(mn, mx, "
-        "INTERVAL 1 HOUR)) AS bucket_ts FROM span), "
-        "joined AS (SELECT g.user_id, g.bucket_ts, ev.sum_cents, ev.n_events "
-        "FROM grid g LEFT JOIN ev ON ev.user_id = g.user_id "
-        "AND ev.bucket_ts = g.bucket_ts) "
+        f"WITH ev AS (SELECT * FROM ({HOURLY_CENTS_SQL}) "
+        f"WHERE user_id < {_GAP_FILL_USERS}), "
+        f"joined AS ({dense_hours_sql('ev', 'user_id')}) "
         "SELECT user_id, "
         "CAST(epoch(bucket_ts) AS BIGINT) AS bucket_epoch_s, "
-        "last_value(sum_cents IGNORE NULLS) OVER w AS sum_cents_filled, "
+        "last_value(v_c100 IGNORE NULLS) OVER w AS sum_cents_filled, "
         "last_value(n_events IGNORE NULLS) OVER w AS n_events_filled, "
-        "(sum_cents IS NULL) AS is_gap "
+        "(v_c100 IS NULL) AS is_gap "
         "FROM joined "
         "WINDOW w AS (PARTITION BY user_id ORDER BY bucket_ts "
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
@@ -268,7 +263,7 @@ _GAP_FILL_USERS = 30  # bounded eval slice; the plan is per-user generic
     doc=(
         "TIME-SERIES GAP FILL (resample + forward-fill): hourly "
         "buckets per user, a generated dense bucket grid between each "
-        "user's first and last activity (sequence + explode — no "
+        "user's first and last bucket (sequence + explode — no "
         "driver loop), then last-observation-carried-forward via "
         "last_value IGNORE NULLS over an unbounded-preceding row "
         "frame. Integer-cents sums for cross-engine exactness, and "
@@ -280,37 +275,18 @@ _GAP_FILL_USERS = 30  # bounded eval slice; the plan is per-user generic
         "SUM(BIGINT) to HUGEINT, whose driver-side serialization "
         "differs from Spark's bigint (the round-1 hasher lesson — "
         "scripts/type_sweep.py flags exactly this). Scale "
-        "shape: one shuffle keyed by user_id for the bucket "
-        "aggregate; the span aggregate, grid explode, fill window, "
-        "and left join all reuse that same user_id partitioning — no "
-        "further corpus shuffle. The eval slice bounds users, not the "
-        "per-user logic."
+        "shape: the (user, hour) bucket aggregate's shuffle, then ONE "
+        "user_id shuffle of the bucket table that serves the join-free "
+        "densify (operators/timeseries.dense_hours) and the fill "
+        "window — no further corpus shuffle. The eval slice bounds "
+        "users, not the per-user logic."
     ),
 )
 def ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "events").filter(F.col("user_id") < _GAP_FILL_USERS)
-    ev = (
-        e.select(
-            "user_id",
-            F.date_trunc("hour", F.col("ts")).alias("bucket_ts"),
-            F.round(F.col("value") * 100, 0).cast("bigint").alias("cents"),
-        )
-        .groupBy("user_id", "bucket_ts")
-        .agg(
-            F.sum("cents").alias("sum_cents"),
-            F.count("*").cast("bigint").alias("n_events"),
-        )
+    ev = hourly_cents(t(spark, sf_dir, "events")).filter(
+        F.col("user_id") < _GAP_FILL_USERS
     )
-    span = ev.groupBy("user_id").agg(
-        F.min("bucket_ts").alias("mn"), F.max("bucket_ts").alias("mx")
-    )
-    grid = span.select(
-        "user_id",
-        F.explode(
-            F.sequence(F.col("mn"), F.col("mx"), F.expr("INTERVAL 1 HOUR"))
-        ).alias("bucket_ts"),
-    )
-    joined = grid.join(ev, ["user_id", "bucket_ts"], "left")
+    joined = dense_hours(ev, "user_id")
     w = (
         Window.partitionBy("user_id")
         .orderBy("bucket_ts")
@@ -319,9 +295,9 @@ def ts_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.select(
         "user_id",
         F.unix_timestamp("bucket_ts").alias("bucket_epoch_s"),
-        F.last("sum_cents", ignorenulls=True).over(w).alias("sum_cents_filled"),
+        F.last("v_c100", ignorenulls=True).over(w).alias("sum_cents_filled"),
         F.last("n_events", ignorenulls=True).over(w).alias("n_events_filled"),
-        F.col("sum_cents").isNull().alias("is_gap"),
+        F.col("v_c100").isNull().alias("is_gap"),
     )
 
 

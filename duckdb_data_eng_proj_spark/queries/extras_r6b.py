@@ -42,6 +42,7 @@ from duckdb_data_eng_proj_spark.operators.sketches import (
     md5_slot_sql,
 )
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens, word_ngrams
+from duckdb_data_eng_proj_spark.operators.timeseries import HOURLY_COUNTS_SQL, hourly_counts
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
 
@@ -1331,13 +1332,11 @@ def txt_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "evt_anomaly_zscore",
     oracle=(
-        "WITH b AS (SELECT event_type, date_trunc('hour', ts) AS bucket, "
-        "CAST(COUNT(*) AS BIGINT) AS n FROM events "
-        "GROUP BY event_type, bucket), "
+        f"WITH b AS ({HOURLY_COUNTS_SQL}), "
         "m AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS nb, "
         "CAST(SUM(n) AS BIGINT) AS s1, CAST(SUM(n * n) AS BIGINT) AS s2 "
         "FROM b GROUP BY event_type), "
-        "z AS (SELECT b.event_type, CAST(b.bucket AS TIMESTAMP) AS bucket, "
+        "z AS (SELECT b.event_type, b.bucket_ts AS bucket, "
         "b.n, "
         "(CAST(b.n AS DOUBLE) - CAST(m.s1 AS DOUBLE) / CAST(m.nb AS DOUBLE)) "
         "/ sqrt((CAST(m.nb AS DOUBLE) * CAST(m.s2 AS DOUBLE) "
@@ -1367,10 +1366,7 @@ def txt_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def evt_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "events")
-    b = e.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("bucket")
-    ).agg(F.count("*").cast("bigint").alias("n"))
+    b = hourly_counts(t(spark, sf_dir, "events"))
     m = b.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("nb"),
         F.sum("n").cast("bigint").alias("s1"),
@@ -1394,7 +1390,7 @@ def evt_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         j.select(
             "event_type",
-            "bucket",
+            F.col("bucket_ts").alias("bucket"),
             "n",
             zval.alias("zval"),
         )

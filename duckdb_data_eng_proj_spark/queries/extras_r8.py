@@ -41,8 +41,13 @@ from duckdb_data_eng_proj_spark.operators.graph import (
     undirected,
 )
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens
+from duckdb_data_eng_proj_spark.operators.timeseries import (
+    HOURLY_CENTS_SQL,
+    hourly_cents,
+    per_user,
+)
 from duckdb_data_eng_proj_spark.queries.corpus import _PAIRS_SQL, _near_dup_pairs
-from duckdb_data_eng_proj_spark.queries.registry import register
+from duckdb_data_eng_proj_spark.queries.registry import register, t
 from duckdb_data_eng_proj_spark.queries.training import _LSH_PRELUDE
 
 # ---------------------------------------------------------------------------
@@ -156,25 +161,26 @@ def _ewma_pdf(pdf):
     return pdf
 
 
+# The recursive oracles' input: each user's hourly cent buckets numbered
+# in time order (ts_ewma and ts_holt_linear).
+_RANKED_BUCKETS_SQL = (
+    "WITH RECURSIVE b AS (SELECT user_id, bucket_ts, v_c100, "
+    "ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY bucket_ts) AS rn "
+    f"FROM ({HOURLY_CENTS_SQL})), "
+)
+
+
 @register(
     "ts_ewma",
     oracle=(
-        "WITH RECURSIVE b AS ("
-        "SELECT user_id, date_trunc('hour', ts) AS bucket_ts, "
-        "CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS v_c100, "
-        "ROW_NUMBER() OVER (PARTITION BY user_id "
-        "ORDER BY date_trunc('hour', ts)) AS rn "
-        "FROM events WHERE ts IS NOT NULL AND value IS NOT NULL "
-        "GROUP BY 1, 2), "
-        "e AS ("
+        _RANKED_BUCKETS_SQL + "e AS ("
         "SELECT user_id, bucket_ts, rn, v_c100, v_c100 AS y "
         "FROM b WHERE rn = 1 "
         "UNION ALL "
         "SELECT b.user_id, b.bucket_ts, b.rn, b.v_c100, "
         "(3 * b.v_c100 + 7 * e.y) // 10 "
         "FROM b JOIN e ON b.user_id = e.user_id AND b.rn = e.rn + 1) "
-        "SELECT user_id, CAST(bucket_ts AS TIMESTAMP) AS bucket_ts, "
-        "CAST(v_c100 AS BIGINT) AS v_c100, "
+        "SELECT user_id, bucket_ts, v_c100, "
         "CAST(y AS BIGINT) AS ewma_c100 FROM e"
     ),
     doc=(
@@ -193,35 +199,8 @@ def _ewma_pdf(pdf):
     ),
 )
 def ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = read_raw_events(spark, sf_dir)
-    # NULL ts/value rows are not plottable points — excluded on BOTH
-    # engines (r17 hostile vintage: a NULL bucket key NaT-poisons the
-    # pandas sort and int(None) aborts the recursion; the LTTB rule)
-    raw = raw.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
-    buckets = (
-        raw.select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", event_ts(raw)).alias("bucket_ts"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("v"),
-        )
-        .groupBy("user_id", "bucket_ts")
-        .agg(F.sum("v").alias("v_c100"))
-    )
-    # Explicit-width repartition on the grouping key: the bucket agg's
-    # output is BYTE-small but the per-user Arrow recursion is
-    # COMPUTE-heavy, and AQE coalesces shuffle reads on bytes — under
-    # the default profile it fed the entire applyInPandas stage to ONE
-    # Python worker (measured 6.52 s vs 1.02 s pinned at sf0.1, a
-    # 6.4× serialization penalty; BASELINE §round-14). Same trap
-    # class as the dedup_lsh_tune output-explosive join, compute-cost
-    # flavor. The repartition satisfies applyInPandas' hash
-    # requirement, so it replaces (not adds to) the exchange.
-    width = spark.sparkContext.defaultParallelism
-    return (
-        buckets.repartition(width, "user_id")
-        .groupBy("user_id")
-        .applyInPandas(_ewma_pdf, _EWMA_SCHEMA)
-    )
+    b = hourly_cents(t(spark, sf_dir, "events"))
+    return per_user(b.select("user_id", "bucket_ts", "v_c100"), _ewma_pdf, _EWMA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -784,14 +763,7 @@ def _holt_pdf(pdf):
 @register(
     "ts_holt_linear",
     oracle=(
-        "WITH RECURSIVE b AS ("
-        "SELECT user_id, date_trunc('hour', ts) AS bucket_ts, "
-        "CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS v_c100, "
-        "ROW_NUMBER() OVER (PARTITION BY user_id "
-        "ORDER BY date_trunc('hour', ts)) AS rn "
-        "FROM events WHERE ts IS NOT NULL AND value IS NOT NULL "
-        "GROUP BY 1, 2), "
-        "h AS ("
+        _RANKED_BUCKETS_SQL + "h AS ("
         "SELECT user_id, bucket_ts, rn, v_c100, "
         "v_c100 AS l, CAST(0 AS BIGINT) AS t "
         "FROM b WHERE rn = 1 "
@@ -800,8 +772,7 @@ def _holt_pdf(pdf):
         "(3 * b.v_c100 + 7 * (h.l + h.t)) // 10, "
         "(2 * ((3 * b.v_c100 + 7 * (h.l + h.t)) // 10 - h.l) + 8 * h.t) // 10 "
         "FROM b JOIN h ON b.user_id = h.user_id AND b.rn = h.rn + 1) "
-        "SELECT user_id, CAST(bucket_ts AS TIMESTAMP) AS bucket_ts, "
-        "CAST(v_c100 AS BIGINT) AS v_c100, CAST(l AS BIGINT) AS level_c100, "
+        "SELECT user_id, bucket_ts, v_c100, CAST(l AS BIGINT) AS level_c100, "
         "CAST(t AS BIGINT) AS trend_c100 FROM h"
     ),
     doc=(
@@ -821,29 +792,8 @@ def _holt_pdf(pdf):
     ),
 )
 def ts_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
-    raw = read_raw_events(spark, sf_dir)
-    # NULL ts/value rows are not plottable points — excluded on BOTH
-    # engines (r17 hostile vintage: a NULL bucket key NaT-poisons the
-    # pandas sort and int(None) aborts the recursion; the LTTB rule)
-    raw = raw.filter(F.col("ts").isNotNull() & F.col("value").isNotNull())
-    buckets = (
-        raw.select(
-            F.col("user_id").cast("long").alias("user_id"),
-            F.date_trunc("hour", event_ts(raw)).alias("bucket_ts"),
-            F.round(F.col("value") * 100, 0).cast("long").alias("v"),
-        )
-        .groupBy("user_id", "bucket_ts")
-        .agg(F.sum("v").cast("long").alias("v_c100"))
-    )
-    # Same AQE byte-based-coalesce pin as ts_ewma above: the Python
-    # recursion's cost is per-row compute, not bytes — keep it at
-    # full width on every profile.
-    width = spark.sparkContext.defaultParallelism
-    return (
-        buckets.repartition(width, "user_id")
-        .groupBy("user_id")
-        .applyInPandas(_holt_pdf, _HOLT_SCHEMA)
-    )
+    b = hourly_cents(t(spark, sf_dir, "events"))
+    return per_user(b.select("user_id", "bucket_ts", "v_c100"), _holt_pdf, _HOLT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -918,15 +868,17 @@ def evt_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         "f_cnt",
         "m_c100",
     )
+    uid = F.asc_nulls_last("user_id")
     return r.select(
         "user_id",
         "r_days",
         "f_cnt",
         "m_c100",
-        F.ntile(5).over(Window.orderBy(F.col("r_days").desc(), "user_id")).cast("long").alias("r_score"),
-        F.ntile(5).over(Window.orderBy("f_cnt", "user_id")).cast("long").alias("f_score"),
+        # a NULL user_id is one more user, tie-broken last as in DuckDB;
         # m_c100 is a SUM over nullable value cents — asc_nulls_last (r17 sweep)
-        F.ntile(5).over(Window.orderBy(F.asc_nulls_last("m_c100"), "user_id")).cast("long").alias("m_score"),
+        F.ntile(5).over(Window.orderBy(F.col("r_days").desc(), uid)).cast("long").alias("r_score"),
+        F.ntile(5).over(Window.orderBy("f_cnt", uid)).cast("long").alias("f_score"),
+        F.ntile(5).over(Window.orderBy(F.asc_nulls_last("m_c100"), uid)).cast("long").alias("m_score"),
     ).withColumn(
         "rfm_segment",
         (F.col("r_score") * 100 + F.col("f_score") * 10 + F.col("m_score")).cast("long"),

@@ -6,9 +6,11 @@ that the optimized plan of every checkpointed frame is recorded, then the
 returned frame's optimized plan is recorded too. Each plan is normalized
 (expression ids, lambda-variable ids, RDD ids and temp paths carry no
 meaning across sessions) and hashed, and so is the id's DuckDB oracle
-string. Two trees whose fingerprints match build the same plans and
-the same oracles, so a refactor that claims "no plan moved" can be
-checked with one command instead of re-verifying every id.
+string; the normalized plan texts are kept next to their hashes. Two
+trees whose fingerprints match build the same plans and the same
+oracles, so a refactor that claims "no plan moved" can be checked with
+one command instead of re-verifying every id, and a changed plan shows
+where it changed.
 
 Usage:
   python scripts/plan_fingerprint.py [--sf DIR] [--out FILE] [qid ...]
@@ -19,7 +21,8 @@ With no ids, every registered id except the ETL and streaming ones
 one session. ``--sf`` defaults to the test suite's sf0.001 directory
 ($SPARK_GRAFT_TEST_SF_DIR, as in tests/conftest.py). ``--diff`` prints
 "N of M ids changed" and the ids whose plan hashes differ (or that
-exist in only one file), then "N of M oracle strings changed" and
+exist in only one file), each followed by the first differing line of
+its first differing plan, then "N of M oracle strings changed" and
 those ids.
 """
 
@@ -32,6 +35,7 @@ import os
 import re
 import sys
 import tempfile
+from itertools import zip_longest
 
 _HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _HERE)
@@ -63,20 +67,16 @@ def _sha(text: str) -> str:
     return hashlib.sha256(text.encode()).hexdigest()[:16]
 
 
-def _digest(df) -> str:
-    return _sha(normalize(_plan_text(df)))
-
-
 def fingerprint(spark, sf_dir: str, qids: list[str]) -> dict:
     from pyspark.sql.classic.dataframe import DataFrame
 
     from duckdb_data_eng_proj_spark.queries import REGISTRY
 
-    seen: list[str] = []
+    seen: list[str] = []  # normalized plan of each checkpointed frame
     original = DataFrame.localCheckpoint
 
     def recording(self, *args, **kwargs):
-        seen.append(_digest(self))
+        seen.append(normalize(_plan_text(self)))
         return original(self, *args, **kwargs)
 
     # print every field of a node (the default truncates at 25)
@@ -87,8 +87,12 @@ def fingerprint(spark, sf_dir: str, qids: list[str]) -> dict:
         for qid in qids:
             seen.clear()
             try:
-                result = _digest(REGISTRY[qid].fn(spark, sf_dir))
-                out[qid] = {"checkpoints": list(seen), "result": result}
+                result = normalize(_plan_text(REGISTRY[qid].fn(spark, sf_dir)))
+                out[qid] = {
+                    "checkpoints": [_sha(p) for p in seen],
+                    "result": _sha(result),
+                    "plans": [*seen, result],
+                }
             except Exception as e:  # noqa: BLE001 - recorded, not raised
                 out[qid] = {"error": f"{type(e).__name__}: {str(e)[:200]}"}
             oracle = REGISTRY[qid].oracle
@@ -108,11 +112,31 @@ def diff(a: dict, b: dict, oracle: bool = False) -> list[str]:
             return None
         if oracle:
             return {"oracle": fp.get("oracle")}
-        return {k: v for k, v in fp.items() if k != "oracle"}
+        return {k: v for k, v in fp.items() if k not in ("oracle", "plans")}
 
     return sorted(
         q for q in set(a) | set(b) if part(a.get(q)) != part(b.get(q))
     )
+
+
+def first_change(a: dict | None, b: dict | None) -> str:
+    """Where one id's plans first differ: the plan's position (its
+    checkpoints in call order, then the result) and the first differing
+    line of each side, cut to the stretch around the first differing
+    character."""
+    if a is None or b is None:
+        return "only in " + ("B" if a is None else "A")
+    if "error" in a or "error" in b:
+        return f"A: {a.get('error', 'ok')} | B: {b.get('error', 'ok')}"
+    pa, pb = a.get("plans", []), b.get("plans", [])
+    for i, (x, y) in enumerate(zip_longest(pa, pb, fillvalue="")):
+        for la, lb in zip_longest(x.splitlines(), y.splitlines(), fillvalue=""):
+            if la != lb:
+                k = len(os.path.commonprefix([la, lb]))
+                lo = max(0, k - 60)
+                where = "result" if i == max(len(pa), len(pb)) - 1 else f"checkpoint {i}"
+                return f"{where}:\n      A: {la[lo:k + 100]}\n      B: {lb[lo:k + 100]}"
+    return "no plan text kept"
 
 
 def main() -> None:
@@ -132,7 +156,7 @@ def main() -> None:
             changed = diff(a, b, oracle)
             print(f"{len(changed)} of {n} {label} changed")
             for q in changed:
-                print(f"  {q}")
+                print(f"  {q}" + ("" if oracle else f"  {first_change(a.get(q), b.get(q))}"))
         return
 
     from duckdb_data_eng_proj_spark.queries import REGISTRY

@@ -872,7 +872,7 @@ def test_stream_admit_reads_checkpointed_index(spark):
 
 
 @pytest.mark.parametrize(
-    "qid", ["ts_ewma", "ts_holt_linear"]
+    "qid", ["ts_ewma", "ts_holt_linear", "ts_downsample_lttb"]
 )
 def test_pandas_stage_width_pinned(spark, qid):
     """The per-user Arrow recursion must keep explicit shuffle width:

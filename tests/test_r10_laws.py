@@ -31,7 +31,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType
 
-from duckdb_data_eng_proj_spark.operators.sketches import hex_int, hex_int_sql
+from duckdb_data_eng_proj_spark.operators.sketches import hex_int, hex_int_sql, md5_int_py
 from duckdb_data_eng_proj_spark.queries import REGISTRY
 from tests.conftest import SF_DIR
 
@@ -290,10 +290,14 @@ def test_hex_parse_agrees_across_engines(spark, oracle_con):
     # 32-digit hex strings (an md5 digest's shape) through each window
     # width and offset in use, including all-f and all-0 extremes (15
     # hex digits = 60 bits, no sign risk), on both engines; the type
-    # is INT up to 7 digits, BIGINT from 8, and 16+ is refused.
+    # is INT up to 7 digits, BIGINT from 8, and 16+ is refused. The
+    # pure-Python twin md5_int_py reads the same windows of the md5
+    # digests in the sweep.
     rng = random.Random(13)
     hexes = ["f" * 32, "0" * 32, "8" + "0" * 31, "7" + "f" * 31]
     hexes += ["%032x" % rng.randrange(0, 2**128) for _ in range(200)]
+    words = [f"doc{i}" for i in range(100)]
+    hexes += [hashlib.md5(w.encode()).hexdigest() for w in words]
     expect = [
         tuple(int(h[s - 1 : s - 1 + n], 16) for s, n in _HEX_WINDOWS) for h in hexes
     ]
@@ -308,6 +312,8 @@ def test_hex_parse_agrees_across_engines(spark, oracle_con):
     got = {r[0]: tuple(r[1:]) for r in sdf.collect()}
     assert [duck[h] for h in hexes] == expect
     assert [got[h] for h in hexes] == expect
+    py = [tuple(md5_int_py(w, s, n) for s, n in _HEX_WINDOWS) for w in words]
+    assert py == expect[-len(words):]
     want_int = [n <= 7 for _, n in _HEX_WINDOWS]
     duck_types = oracle_con.execute(
         "SELECT "
@@ -322,6 +328,8 @@ def test_hex_parse_agrees_across_engines(spark, oracle_con):
             hex_int_sql("h", 1, n)
         with pytest.raises(ValueError):
             hex_int(F.col("h"), 1, n)
+        with pytest.raises(ValueError):
+            md5_int_py("x", 1, n)
 
 
 # ---------------------------------------------------------------------------

@@ -424,9 +424,10 @@ def test_r16_op_exchange_budget(spark, qid, budget):
 def null_vintage_dir(tmp_path_factory):
     """A data vintage the generator never produces: NULL text (an
     unfingerprintable doc in the incoming batch), NULL event ts (a
-    user whose first-stage rows all lack timestamps), and a NULL lang
-    group that TIES the top named language on count — each previously
-    made Spark and DuckDB diverge (r16 extras_r5 review)."""
+    user whose first-stage rows all lack timestamps), a NULL lang
+    group that TIES the top named language on count, and NULL
+    user_id / event_type series keys — each previously made Spark and
+    DuckDB diverge."""
     d = tmp_path_factory.mktemp("nullvintage")
     con = duckdb.connect()
     con.execute(
@@ -477,6 +478,19 @@ def null_vintage_dir(tmp_path_factory):
         (200, None, 4, "view", 5.0, "{}"),
         (201, "2024-02-01 10:30:00", 4, "view", None, "{}"),
     ]
+    # a NULL-user_id series over 5 hours, and user 5's NULL-event_type
+    # series of 5 rows with uneven hourly counts (2, 1, 0, 1, 1) whose
+    # last hour holds only a NULL value: a NULL series key is no point
+    # of any hourly series, and a bucket with no value has no cent sum,
+    # on both engines
+    ev += [
+        (300 + k, f"2024-03-01 {8 + k:02d}:15:00", None, "click", float(2 + k), "{}")
+        for k in range(5)
+    ]
+    ev += [
+        (400 + k, f"2024-03-02 {hm}:00", 5, None, 3.0 * k if k < 4 else None, "{}")
+        for k, hm in enumerate(["08:05", "08:45", "09:45", "11:45", "12:45"])
+    ]
     con.executemany("INSERT INTO events VALUES (?, ?, ?, ?, ?, ?)", ev)
     con.execute(f"COPY events TO '{d}/events.parquet' (FORMAT PARQUET)")
     # orders with a NULL o_totalprice, a NULL o_orderstatus and a NULL
@@ -507,6 +521,12 @@ def null_vintage_dir(tmp_path_factory):
         "ext_funnel_steps",
         "ext_dataset_card",
         "ts_downsample_lttb",
+        # the hourly-series family: a NULL series key is not a point
+        "ts_ewma",
+        "ts_holt_linear",
+        "ts_autocorr",
+        "ts_gap_fill",
+        "evt_anomaly_zscore",
         # r17 NULLS-LAST sweep: every pinned id driven on the NULL
         # vintage through BOTH engines
         "win_lead_lag_frames",
