@@ -71,11 +71,12 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
 
 def read_raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``events.parquet`` with its on-disk ``ts`` type: an INT64
-    TIMESTAMP(NANOS) column reads as raw bigint nanos (``nanosAsLong``
-    is set on the session — the Spark reader rejects that type
-    otherwise). Streaming sources take this schema; pair it with
-    ``event_ts`` for the normalized event time."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    TIMESTAMP(NANOS) column reads as raw bigint nanos under
+    ``spark.sql.legacy.parquet.nanosAsLong``, which ``get_spark`` sets
+    (the Spark reader rejects that type otherwise; a session built
+    elsewhere sets it itself to read that vintage). Streaming sources
+    take this schema; pair it with ``event_ts`` for the normalized
+    event time."""
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 

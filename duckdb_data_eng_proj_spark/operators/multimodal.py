@@ -2,24 +2,35 @@
 
 Design (north-star requirement, BASELINE.json): image/audio/video
 content rides in the relational model as an opaque ``binary`` column
-plus typed metadata columns. All heavy per-item work (decode, feature
-extraction, resize, frame sampling) runs as ``mapInPandas`` over
-Arrow batches — the Spark-side plumbing (schema, batch shape,
-partition-preserving narrow execution) is real and tested here.
+plus typed metadata columns. Every per-item stage goes through one of
+two primitives, the package's only ``mapInPandas`` call sites:
+
+- ``synthesize(docs, media_type, encode)``: one payload per document,
+  ``encode(doc_id) -> bytes``, out as ``MEDIA_SCHEMA``.
+- ``decode(media, fn, schema)``: ``fn(payload)`` returns one output
+  row as a dict, or a list of dicts for 0..n rows. ``doc_id`` and
+  ``media_type`` carry over from the input row when ``schema`` names
+  them; every other column takes the pandas dtype its ``StructField``
+  type names, integers nullable, so a ``None`` is a Spark NULL.
+
+Both are narrow Arrow stages (no shuffle). Each caller passes a short
+adapter around a codec; the codecs are pure Python functions, tested
+without Spark (tests/test_codecs.py).
 
 Codec status (round 3, video added round 15): UNCOMPRESSED formats
 are decoded for real with pure stdlib — ``decode_image`` parses
-24-bpp BMP (struct) and binary PPM, ``decode_audio`` parses RIFF/WAV
-(wave module), ``decode_y4m`` parses YUV4MPEG2 video (text header +
-raw planar 4:2:0 frames) — and the matching encoders let the pipeline
-synthesize genuine fixture bytes, so the mm_decode_bmp /
-mm_audio_wav / mm_frame_sample paths are end-to-end real: encode →
-binary column → mapInPandas parse → features. COMPRESSED formats
-(JPEG/PNG/MP3/H.264) still need external libraries this container
-lacks; ``fake_decode_features`` remains the deterministic stand-in
-for that path (mm_decode_stub), documented as such.
+24-bpp BMP (struct, through ``bmp_geometry``) and binary PPM,
+``decode_audio`` parses RIFF/WAV (wave module), ``decode_y4m`` parses
+YUV4MPEG2 video (text header + raw planar 4:2:0 frames) — and the
+matching encoders let the pipeline synthesize genuine fixture bytes,
+so the mm_decode_bmp / mm_audio_wav / mm_frame_sample paths are
+end-to-end real: encode → binary column → parse → features.
+COMPRESSED formats (JPEG/PNG/MP3/H.264) still need external libraries
+this container lacks; ``fake_decode_features`` remains the
+deterministic stand-in for that path (mm_decode_stub), documented as
+such.
 
-Scale notes: mapInPandas is narrow (no shuffle); batch size is
+Scale notes: both stages are narrow (no shuffle); batch size is
 governed by spark.sql.execution.arrow.maxRecordsPerBatch — for
 multi-MB payloads set it low (e.g. 64) so a batch fits in memory.
 Binary payloads at 100 TB should live in parquet with a small
@@ -34,7 +45,7 @@ import io
 import math
 import struct
 import wave
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -70,6 +81,78 @@ FEATURE_SCHEMA = StructType(
     ]
 )
 
+# Pandas dtype per Spark column type; any other type (string, binary)
+# stays an object column. Integers are the nullable extension dtypes,
+# so a None is a NULL instead of a float NaN that fails the cast.
+_PANDAS_DTYPE = {
+    IntegerType(): "Int32",
+    LongType(): "Int64",
+    DoubleType(): "float64",
+}
+
+_CARRIED = ("doc_id", "media_type")
+
+
+def _frame(columns: dict[str, list], schema: StructType) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            f.name: pd.Series(columns[f.name], dtype=_PANDAS_DTYPE.get(f.dataType, object))
+            for f in schema.fields
+        }
+    )
+
+
+def synthesize(docs: DataFrame, media_type: str, encode: Callable[[int], bytes]) -> DataFrame:
+    """One ``media_type`` payload per document, ``encode(doc_id)``,
+    as ``MEDIA_SCHEMA``: the fixture generator of every real-codec
+    path. One narrow Arrow stage over ``docs.doc_id``."""
+
+    def synthesize_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            ids = pdf["doc_id"].tolist()
+            cols = {
+                "doc_id": ids,
+                "media_type": [media_type] * len(ids),
+                "payload": [encode(i) for i in ids],
+            }
+            yield _frame(cols, MEDIA_SCHEMA)
+
+    return docs.select("doc_id").mapInPandas(synthesize_batches, schema=MEDIA_SCHEMA)
+
+
+def decode(
+    media: DataFrame,
+    fn: Callable[[bytes], dict | list[dict]],
+    schema: StructType | str,
+) -> DataFrame:
+    """``fn`` over every payload of ``media`` in one narrow Arrow
+    stage, out as ``schema`` (a StructType or DDL string).
+
+    ``fn(payload)`` returns one output row as a dict, or a list of
+    dicts for 0..n rows; keys outside ``schema`` are ignored. The
+    ``doc_id`` / ``media_type`` columns that ``schema`` names carry
+    over from the input row into each of its output rows."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    carried = [c for c in _CARRIED if c in names]
+    own = [c for c in names if c not in carried]
+
+    def decode_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            cols = {c: [] for c in names}
+            keys = {c: pdf[c].tolist() for c in carried}
+            for i, payload in enumerate(pdf["payload"]):
+                out = fn(payload)
+                for row in out if isinstance(out, list) else [out]:
+                    for c in carried:
+                        cols[c].append(keys[c][i])
+                    for c in own:
+                        cols[c].append(row[c])
+            yield _frame(cols, schema)
+
+    return media.mapInPandas(decode_batches, schema=schema)
+
 
 _BMP_HEADER_SIZE = 54  # BITMAPFILEHEADER (14) + BITMAPINFOHEADER (40)
 
@@ -79,18 +162,51 @@ def bmp_stride(width: int) -> int:
     return (3 * width + 3) // 4 * 4
 
 
-def encode_bmp(width: int, height: int, fill: int) -> bytes:
-    """Minimal real 24-bpp bottom-up BMP writer (pure struct): every
-    pixel's B/G/R bytes are ``fill``, row padding is zero."""
-    stride = bmp_stride(width)
-    image_size = stride * height
-    header = struct.pack(
+def _bmp_header(width: int, height: int) -> bytes:
+    """The 54-byte header of an uncompressed 24-bpp bottom-up BMP."""
+    image_size = bmp_stride(width) * height
+    return struct.pack(
         "<2sIHHIIiiHHIIiiII",
         b"BM", _BMP_HEADER_SIZE + image_size, 0, 0, _BMP_HEADER_SIZE,
         40, width, height, 1, 24, 0, image_size, 2835, 2835, 0, 0,
     )
-    row = bytes([fill]) * (3 * width) + b"\x00" * (stride - 3 * width)
-    return header + row * height
+
+
+def _write_bmp(width: int, height: int, pixel: Callable[[int, int], bytes]) -> bytes:
+    """A real 24-bpp BMP whose image pixel (x, y) holds the 3 B/G/R
+    bytes ``pixel(x, y)``: rows stored bottom-up per the BMP spec,
+    each zero-padded to ``bmp_stride``."""
+    pad = b"\x00" * (bmp_stride(width) - 3 * width)
+    rows = (
+        b"".join(pixel(x, y) for x in range(width)) + pad
+        for y in range(height - 1, -1, -1)
+    )
+    return _bmp_header(width, height) + b"".join(rows)
+
+
+def bmp_geometry(payload: bytes) -> tuple[int, int, int, int]:
+    """``(offset, width, height, stride)`` of a BMP payload: raster
+    offset, image width and (unsigned) height, and padded row bytes.
+    Raises ValueError on anything but a whole uncompressed 24-bpp
+    BMP, so no caller reads a raster it cannot interpret."""
+    if payload[:2] != b"BM" or len(payload) < _BMP_HEADER_SIZE:
+        raise ValueError("not a BMP payload")
+    offset = struct.unpack_from("<I", payload, 10)[0]
+    _, width, height, _, bpp, compression = struct.unpack_from("<IiiHHI", payload, 14)
+    if bpp != 24 or compression != 0 or width < 0:
+        raise ValueError("only uncompressed 24-bpp BMP is supported")
+    height = abs(height)
+    stride = bmp_stride(width)
+    if len(payload) < offset + stride * height:
+        raise ValueError("truncated BMP raster")
+    return offset, width, height, stride
+
+
+def encode_bmp(width: int, height: int, fill: int) -> bytes:
+    """Minimal real 24-bpp bottom-up BMP writer (pure struct): every
+    pixel's B/G/R bytes are ``fill``, row padding is zero."""
+    px = bytes([fill]) * 3
+    return _write_bmp(width, height, lambda x, y: px)
 
 
 def decode_image(payload: bytes) -> dict:
@@ -100,14 +216,7 @@ def decode_image(payload: bytes) -> dict:
     libraries this container lacks and raise ValueError — route those
     through fake_decode_features until a codec is installed."""
     if payload[:2] == b"BM":
-        offset = struct.unpack_from("<I", payload, 10)[0]
-        _, width, height, _, bpp, compression = struct.unpack_from(
-            "<IiiHHI", payload, 14
-        )
-        if bpp != 24 or compression != 0:
-            raise ValueError("only uncompressed 24-bpp BMP is supported")
-        h = abs(height)
-        stride = bmp_stride(width)
+        offset, width, h, stride = bmp_geometry(payload)
         pix_sum = 0
         for y in range(h):
             start = offset + y * stride
@@ -126,13 +235,14 @@ def decode_image(payload: bytes) -> dict:
     raise ValueError("unsupported image format (uncompressed BMP/PPM only)")
 
 
-def fake_decode_features(payload: bytes) -> tuple[str, int, int]:
+def fake_decode_features(payload: bytes) -> dict:
     """Deterministic stand-in for decode: md5 + pseudo dimensions
     derived from the digest (mirrors the oracle SQL exactly)."""
-    digest = hashlib.md5(payload).hexdigest()
-    width = md5_int_py(payload, 1, 4) % 1920 + 1
-    height = md5_int_py(payload, 5, 4) % 1080 + 1
-    return digest, width, height
+    return {
+        "content_md5": hashlib.md5(payload).hexdigest(),
+        "width": md5_int_py(payload, 1, 4) % 1920 + 1,
+        "height": md5_int_py(payload, 5, 4) % 1080 + 1,
+    }
 
 
 def attach_payload(documents: DataFrame) -> DataFrame:
@@ -146,23 +256,10 @@ def attach_payload(documents: DataFrame) -> DataFrame:
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over Arrow batches of payloads."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [fake_decode_features(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "content_md5": [f[0] for f in feats],
-                    "width": pd.Series([f[1] for f in feats], dtype="int32"),
-                    "height": pd.Series([f[2] for f in feats], dtype="int32"),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
+    """Stand-in feature extraction over Arrow batches of payloads."""
+    return decode(
+        media, lambda p: {**fake_decode_features(p), "n_bytes": len(p)}, FEATURE_SCHEMA
+    )
 
 
 def _write_wav16(samples, rate: int) -> bytes:
@@ -309,22 +406,9 @@ def resample_wav_linear(payload: bytes, dst_rate: int) -> dict:
 def synthesize_wav_wave_media(docs: DataFrame) -> DataFrame:
     """Synthesize REAL varying-waveform RIFF/WAV payloads (doc_id-keyed
     length and waveform seed) into the binary media column."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "audio/wav",
-                    "payload": [
-                        encode_wav_wave(int(i) % 400 + 16, (int(i) * 131) % 65536)
-                        for i in ids
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return synthesize(
+        docs, "audio/wav", lambda i: encode_wav_wave(i % 400 + 16, (i * 131) % 65536)
+    )
 
 
 AUDIO_DSP_SCHEMA = StructType(
@@ -345,38 +429,10 @@ AUDIO_DSP_SCHEMA = StructType(
 def extract_audio_dsp(media: DataFrame) -> DataFrame:
     """REAL audio DSP per payload (wave-parse + full PCM unpack +
     exact-integer feature math incl. a true 2:1 decimation resample).
-    Narrow mapInPandas stage, no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_wav_dsp(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(pdf["doc_id"], dtype="int64"),
-                    "sample_rate": pd.Series(
-                        [f["sample_rate"] for f in feats], dtype="int32"
-                    ),
-                    "n_samples": pd.Series(
-                        [f["n_samples"] for f in feats], dtype="int64"
-                    ),
-                    "duration_ms": pd.Series(
-                        [f["duration_ms"] for f in feats], dtype="int64"
-                    ),
-                    "sum_abs": pd.Series(
-                        [f["sum_abs"] for f in feats], dtype="int64"
-                    ),
-                    "n_zero_cross": pd.Series(
-                        [f["n_zero_cross"] for f in feats], dtype="int64"
-                    ),
-                    "rs_n": pd.Series([f["rs_n"] for f in feats], dtype="int64"),
-                    "rs_sum_abs": pd.Series(
-                        [f["rs_sum_abs"] for f in feats], dtype="int64"
-                    ),
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_DSP_SCHEMA)
+    Narrow Arrow stage, no shuffle."""
+    return decode(
+        media, lambda p: {**decode_wav_dsp(p), "n_bytes": len(p)}, AUDIO_DSP_SCHEMA
+    )
 
 
 AUDIO_RESAMPLE_SCHEMA = StructType(
@@ -395,56 +451,30 @@ AUDIO_RESAMPLE_SCHEMA = StructType(
 def extract_audio_resample(media: DataFrame, dst_rate: int) -> DataFrame:
     """REAL linear PCM resample per payload (wave-parse → exact-integer
     lerp to ``dst_rate`` → re-encode → re-decode, resample_wav_linear).
-    Narrow mapInPandas stage, no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [resample_wav_linear(p, dst_rate) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(pdf["doc_id"], dtype="int64"),
-                    "src_rate": pd.Series(
-                        [f["src_rate"] for f in feats], dtype="int32"
-                    ),
-                    "dst_rate": pd.Series(
-                        [f["dst_rate"] for f in feats], dtype="int32"
-                    ),
-                    "n_in": pd.Series([f["n_in"] for f in feats], dtype="int64"),
-                    "n_out": pd.Series(
-                        [f["n_out"] for f in feats], dtype="int64"
-                    ),
-                    "sum_u_out": pd.Series(
-                        [f["sum_u_out"] for f in feats], dtype="int64"
-                    ),
-                    "rs_bytes": pd.Series(
-                        [f["rs_bytes"] for f in feats], dtype="int64"
-                    ),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_RESAMPLE_SCHEMA)
+    Narrow Arrow stage, no shuffle."""
+    return decode(
+        media, lambda p: resample_wav_linear(p, dst_rate), AUDIO_RESAMPLE_SCHEMA
+    )
 
 
 def synthesize_bmp_media(docs: DataFrame) -> DataFrame:
     """Synthesize REAL 24-bpp BMP payloads (doc_id-keyed dimensions and
     fill byte) into the binary media column — the fixture generator for
-    the end-to-end decode path. Narrow mapInPandas, no shuffle."""
+    the end-to-end decode path."""
+    return synthesize(
+        docs, "image/bmp", lambda i: encode_bmp(i % 31 + 1, i % 17 + 1, i % 251)
+    )
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "image/bmp",
-                    "payload": [
-                        encode_bmp(int(i) % 31 + 1, int(i) % 17 + 1, int(i) % 251)
-                        for i in ids
-                    ],
-                }
-            )
 
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+BMP_FEATURE_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType(), True),
+        StructField("width", IntegerType(), True),
+        StructField("height", IntegerType(), True),
+        StructField("n_bytes", LongType(), True),
+        StructField("mean_pixel", DoubleType(), True),
+    ]
+)
 
 
 def extract_bmp_features(media: DataFrame) -> DataFrame:
@@ -452,32 +482,9 @@ def extract_bmp_features(media: DataFrame) -> DataFrame:
     pixel scan excluding row padding). The features are closed-form in
     doc_id, so a SQL oracle can verify that the encoder→decoder
     round-trip preserved them — the proof the codec actually ran."""
-    schema = StructType(
-        [
-            StructField("doc_id", LongType(), True),
-            StructField("width", IntegerType(), True),
-            StructField("height", IntegerType(), True),
-            StructField("n_bytes", LongType(), True),
-            StructField("mean_pixel", DoubleType(), True),
-        ]
+    return decode(
+        media, lambda p: {**decode_image(p), "n_bytes": len(p)}, BMP_FEATURE_SCHEMA
     )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_image(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": pd.Series([f["width"] for f in feats], dtype="int32"),
-                    "height": pd.Series([f["height"] for f in feats], dtype="int32"),
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "mean_pixel": pd.Series(
-                        [f["mean_pixel"] for f in feats], dtype="float64"
-                    ),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=schema)
 
 
 WAV_FEATURE_SCHEMA = StructType(
@@ -495,51 +502,17 @@ WAV_FEATURE_SCHEMA = StructType(
 def synthesize_wav_media(docs: DataFrame) -> DataFrame:
     """Synthesize REAL RIFF/WAV payloads (16-bit mono 8 kHz, doc_id-
     keyed length and amplitude) into the binary media column."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "audio/wav",
-                    "payload": [
-                        encode_wav(int(i) % 400 + 16, (int(i) * 37) % 32767)
-                        for i in ids
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    return synthesize(
+        docs, "audio/wav", lambda i: encode_wav(i % 400 + 16, (i * 37) % 32767)
+    )
 
 
 def extract_wav_features(media: DataFrame) -> DataFrame:
     """REAL WAV decode per payload (wave-module header parse + full PCM
     peak scan); features closed-form in doc_id for oracle checking."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = [decode_audio(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": pd.Series(
-                        [f["sample_rate"] for f in feats], dtype="int32"
-                    ),
-                    "n_samples": pd.Series(
-                        [f["n_samples"] for f in feats], dtype="int64"
-                    ),
-                    "duration_ms": pd.Series(
-                        [f["duration_ms"] for f in feats], dtype="int64"
-                    ),
-                    "peak_amp": pd.Series(
-                        [f["peak_amp"] for f in feats], dtype="int32"
-                    ),
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=WAV_FEATURE_SCHEMA)
+    return decode(
+        media, lambda p: {**decode_audio(p), "n_bytes": len(p)}, WAV_FEATURE_SCHEMA
+    )
 
 
 def encode_y4m(width: int, height: int, n_frames: int, seed: int) -> bytes:
@@ -628,29 +601,12 @@ def decode_y4m(payload: bytes, every_n: int = 1) -> dict:
 
 def synthesize_y4m_media(docs: DataFrame) -> DataFrame:
     """Synthesize REAL Y4M video payloads (doc_id-keyed even dimensions,
-    1–90 frames, per-frame luma ramp) into the binary media column.
-    Narrow mapInPandas, no shuffle."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "video/y4m",
-                    "payload": [
-                        encode_y4m(
-                            2 * (int(i) % 8 + 1),
-                            2 * (int(i) % 6 + 1),
-                            int(i) % 90 + 1,
-                            (int(i) * 7) % 256,
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, schema=MEDIA_SCHEMA)
+    1–90 frames, per-frame luma ramp) into the binary media column."""
+    return synthesize(
+        docs,
+        "video/y4m",
+        lambda i: encode_y4m(2 * (i % 8 + 1), 2 * (i % 6 + 1), i % 90 + 1, (i * 7) % 256),
+    )
 
 
 Y4M_FRAME_SCHEMA = StructType(
@@ -671,32 +627,14 @@ def sample_y4m_frames(media: DataFrame, every_n: int = 30) -> DataFrame:
     every ``every_n``-th frame with that frame's full-scan mean luma.
     One narrow Arrow stage after the synthesis stage — no shuffle."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = {c: [] for c in Y4M_FRAME_SCHEMA.fieldNames()}
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_y4m(p, every_n=every_n)
-                for k, mean in d["frame_means"].items():
-                    rows["doc_id"].append(int(i))
-                    rows["width"].append(d["width"])
-                    rows["height"].append(d["height"])
-                    rows["n_frames"].append(d["n_frames"])
-                    rows["frame_idx"].append(k)
-                    rows["mean_y"].append(mean)
-                    rows["n_bytes"].append(len(p))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                    "width": pd.Series(rows["width"], dtype="int32"),
-                    "height": pd.Series(rows["height"], dtype="int32"),
-                    "n_frames": pd.Series(rows["n_frames"], dtype="int64"),
-                    "frame_idx": pd.Series(rows["frame_idx"], dtype="int64"),
-                    "mean_y": pd.Series(rows["mean_y"], dtype="float64"),
-                    "n_bytes": pd.Series(rows["n_bytes"], dtype="int64"),
-                }
-            )
+    def frames(p: bytes) -> list[dict]:
+        d = decode_y4m(p, every_n=every_n)
+        return [
+            {**d, "frame_idx": k, "mean_y": mean, "n_bytes": len(p)}
+            for k, mean in d["frame_means"].items()
+        ]
 
-    return media.mapInPandas(batches, schema=Y4M_FRAME_SCHEMA)
+    return decode(media, frames, Y4M_FRAME_SCHEMA)
 
 
 def encode_bmp_pattern(width: int, height: int, seed: int) -> bytes:
@@ -705,22 +643,20 @@ def encode_bmp_pattern(width: int, height: int, seed: int) -> bytes:
     three channels, rows stored bottom-up per the BMP spec. Unlike
     ``encode_bmp``'s constant fill, the gradient gives perceptual
     hashes (``dhash_bmp``) real structure to bite on."""
-    stride = bmp_stride(width)
-    image_size = stride * height
-    header = struct.pack(
-        "<2sIHHIIiiHHIIiiII",
-        b"BM", _BMP_HEADER_SIZE + image_size, 0, 0, _BMP_HEADER_SIZE,
-        40, width, height, 1, 24, 0, image_size, 2835, 2835, 0, 0,
-    )
-    rows = []
-    for y in range(height - 1, -1, -1):  # bottom-up storage
-        row = bytearray()
-        for x in range(width):
-            v = (seed * 31 + x * 97 + y * 13) % 251
-            row += bytes((v, v, v))
-        row += b"\x00" * (stride - 3 * width)
-        rows.append(bytes(row))
-    return header + b"".join(rows)
+
+    def pixel(x: int, y: int) -> bytes:
+        return bytes([(seed * 31 + x * 97 + y * 13) % 251]) * 3
+
+    return _write_bmp(width, height, pixel)
+
+
+def gradient_bmp(doc_id: int) -> bytes:
+    """The doc_id-keyed gradient fixture of mm_image_resize and
+    mm_image_dhash_dedup: seed ``doc_id % 16``, a square of side
+    ``seed % 4 + 8``. Both oracles replay exactly this formula."""
+    seed = doc_id % 16
+    side = seed % 4 + 8
+    return encode_bmp_pattern(side, side, seed)
 
 
 def resize_bmp_nearest(payload: bytes, dst_w: int, dst_h: int) -> bytes:
@@ -730,33 +666,14 @@ def resize_bmp_nearest(payload: bytes, dst_w: int, dst_h: int) -> bytes:
     and re-encode a REAL BMP of the new dimensions. Integer-only
     sampling, so the resized raster is expressible closed-form in SQL
     for synthetic gradients (the mm_image_resize oracle)."""
-    offset = struct.unpack_from("<I", payload, 10)[0]
-    _, sw, sh, _, bpp, compression = struct.unpack_from("<IiiHHI", payload, 14)
-    if bpp != 24 or compression != 0:
-        raise ValueError("only uncompressed 24-bpp BMP is supported")
-    sh = abs(sh)
-    src_stride = bmp_stride(sw)
+    offset, sw, sh, stride = bmp_geometry(payload)
 
-    def src_px(x: int, y: int) -> bytes:
+    def pixel(x: int, y: int) -> bytes:
         # bottom-up storage: image row y sits at file row (sh-1-y)
-        start = offset + (sh - 1 - y) * src_stride + 3 * x
+        start = offset + (sh - 1 - (y * sh) // dst_h) * stride + 3 * ((x * sw) // dst_w)
         return payload[start : start + 3]
 
-    dst_stride = bmp_stride(dst_w)
-    image_size = dst_stride * dst_h
-    header = struct.pack(
-        "<2sIHHIIiiHHIIiiII",
-        b"BM", _BMP_HEADER_SIZE + image_size, 0, 0, _BMP_HEADER_SIZE,
-        40, dst_w, dst_h, 1, 24, 0, image_size, 2835, 2835, 0, 0,
-    )
-    rows = []
-    for y in range(dst_h - 1, -1, -1):  # bottom-up storage
-        row = bytearray()
-        for x in range(dst_w):
-            row += src_px((x * sw) // dst_w, (y * sh) // dst_h)
-        row += b"\x00" * (dst_stride - 3 * dst_w)
-        rows.append(bytes(row))
-    return header + b"".join(rows)
+    return _write_bmp(dst_w, dst_h, pixel)
 
 
 def dhash_bmp(payload: bytes) -> int:
@@ -765,14 +682,7 @@ def dhash_bmp(payload: bytes) -> int:
     (j*8+i) = 1 when grid[j][i] > grid[j][i+1]. Integer-only, so the
     same definition is expressible closed-form in SQL for synthetic
     gradients."""
-    offset = struct.unpack_from("<I", payload, 10)[0]
-    _, width, height, _, bpp, compression = struct.unpack_from(
-        "<IiiHHI", payload, 14
-    )
-    if bpp != 24 or compression != 0:
-        raise ValueError("only uncompressed 24-bpp BMP is supported")
-    h = abs(height)
-    stride = bmp_stride(width)
+    offset, width, h, stride = bmp_geometry(payload)
 
     def px(x: int, y: int) -> int:
         # bottom-up storage: image row y sits at file row (h-1-y)

@@ -18,6 +18,8 @@ DuckDB join or recursion on that key). Bucket times are
   ``hourly_counts`` | ``HOURLY_COUNTS_SQL``.
 - every hour of a series between its key's first and last bucket:
   ``dense_hours`` | ``dense_hours_sql``.
+- the NULL rule itself, for an op that reads raw points:
+  ``points`` | ``points_sql``.
 - the per-user Arrow stage a sequential recursion runs in:
   ``per_user``.
 """
@@ -29,24 +31,31 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+
+def points(events: DataFrame, key: str) -> DataFrame:
+    """The events that are points of a series keyed on ``key``."""
+    return events.filter(F.col(key).isNotNull() & F.col("ts").isNotNull())
+
+
+def points_sql(key: str) -> str:
+    """DuckDB twin of ``points``: its WHERE predicate."""
+    return f"{key} IS NOT NULL AND ts IS NOT NULL"
+
+
 HOURLY_CENTS_SQL = (
     "SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket_ts, "
     "CAST(SUM(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS v_c100, "
     "CAST(COUNT(*) AS BIGINT) AS n_events "
-    "FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL "
+    f"FROM events WHERE {points_sql('user_id')} "
     "GROUP BY 1, 2 HAVING COUNT(value) > 0"
 )
 
 HOURLY_COUNTS_SQL = (
     "SELECT event_type, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket_ts, "
     "CAST(COUNT(*) AS BIGINT) AS n "
-    "FROM events WHERE event_type IS NOT NULL AND ts IS NOT NULL "
+    f"FROM events WHERE {points_sql('event_type')} "
     "GROUP BY 1, 2"
 )
-
-
-def _points(events: DataFrame, key: str) -> DataFrame:
-    return events.filter(F.col(key).isNotNull() & F.col("ts").isNotNull())
 
 
 def hourly_cents(events: DataFrame) -> DataFrame:
@@ -54,7 +63,7 @@ def hourly_cents(events: DataFrame) -> DataFrame:
     with a cent sum. One map-side-combinable aggregate; callers that
     drop ``n_events`` get it pruned from the aggregate."""
     return (
-        _points(events, "user_id")
+        points(events, "user_id")
         .groupBy("user_id", F.date_trunc("hour", "ts").alias("bucket_ts"))
         .agg(
             F.sum(F.round(F.col("value") * 100, 0).cast("long")).alias("v_c100"),
@@ -67,7 +76,7 @@ def hourly_cents(events: DataFrame) -> DataFrame:
 def hourly_counts(events: DataFrame) -> DataFrame:
     """(event_type, bucket_ts, n): event count per type-hour."""
     return (
-        _points(events, "event_type")
+        points(events, "event_type")
         .groupBy("event_type", F.date_trunc("hour", "ts").alias("bucket_ts"))
         .agg(F.count("*").alias("n"))
     )

@@ -210,80 +210,38 @@ def _resize_oracle() -> str:
     tags=("multimodal",),
 )
 def mm_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import struct as _struct
-    from typing import Iterator
-
-    import pandas as pd
-
     from duckdb_data_eng_proj_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        bmp_stride,
+        bmp_geometry,
+        decode,
         dhash_bmp,
-        encode_bmp_pattern,
+        gradient_bmp,
         resize_bmp_nearest,
+        synthesize,
     )
 
-    docs = t(spark, sf_dir, "documents").select("doc_id")
+    n = _RS_SIDE
 
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                seed = int(i) % 16
-                side = seed % 4 + 8
-                payloads.append(encode_bmp_pattern(side, side, seed))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "image/bmp",
-                    "payload": payloads,
-                }
-            )
+    def resize_feats(payload: bytes) -> dict:
+        # header-only source read: decode_image would full-scan every
+        # source pixel for a mean this op never uses
+        _, src_w, src_h, _ = bmp_geometry(payload)
+        rs = resize_bmp_nearest(payload, n, n)
+        offset, _, _, stride = bmp_geometry(rs)
+        pix_sum = sum(
+            rs[offset + r * stride + 3 * x] for r in range(n) for x in range(n)
+        )
+        return {
+            "src_w": src_w, "src_h": src_h, "dst_w": n, "dst_h": n,
+            "dst_bytes": len(rs), "pix_sum": pix_sum, "dhash_rs": dhash_bmp(rs),
+        }
 
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-
-    out_schema = (
+    media = synthesize(t(spark, sf_dir, "documents"), "image/bmp", gradient_bmp)
+    return decode(
+        media,
+        resize_feats,
         "doc_id long, src_w long, src_h long, dst_w long, dst_h long, "
-        "dst_bytes long, pix_sum long, dhash_rs long"
+        "dst_bytes long, pix_sum long, dhash_rs long",
     )
-
-    def resize_feats(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n = _RS_SIDE
-        stride = bmp_stride(n)
-        for pdf in it:
-            rows = {k: [] for k in (
-                "doc_id", "src_w", "src_h", "dst_w", "dst_h",
-                "dst_bytes", "pix_sum", "dhash_rs",
-            )}
-            for i, payload in zip(
-                pdf["doc_id"].astype("int64"), pdf["payload"]
-            ):
-                pb = bytes(payload)
-                # Header-only dimension read (O(1)) — decode_image
-                # would full-scan every source pixel for a mean this
-                # op never uses (round-15 review).
-                _, src_w, src_h, _, _, _ = _struct.unpack_from(
-                    "<IiiHHI", pb, 14
-                )
-                rs = resize_bmp_nearest(pb, n, n)
-                offset = _struct.unpack_from("<I", rs, 10)[0]
-                pix_sum = sum(
-                    rs[offset + r * stride + 3 * x]
-                    for r in range(n)
-                    for x in range(n)
-                )
-                rows["doc_id"].append(int(i))
-                rows["src_w"].append(src_w)
-                rows["src_h"].append(src_h)
-                rows["dst_w"].append(n)
-                rows["dst_h"].append(n)
-                rows["dst_bytes"].append(len(rs))
-                rows["pix_sum"].append(pix_sum)
-                rows["dhash_rs"].append(dhash_bmp(rs))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(resize_feats, schema=out_schema)
 
 
 # ---------------------------------------------------------------------------

@@ -11,10 +11,11 @@ re-derived by this round's grep and REJECTED as already implemented
   bits) and int8 (scalar) — compression by truncation, no codebook to
   train, and the coarse scan reads 16/64 of the bytes.
 - mm_scene_cut — temporal video segmentation over the REAL
-  YUV4MPEG2 codec path (operators/multimodal.py:543): per-frame
-  full-plane mean luma, scene cut where the consecutive-frame jump
-  exceeds a threshold. The first TEMPORAL analysis in the multimodal
-  family (mm_frame_sample samples frames; this one relates them).
+  YUV4MPEG2 codec path (operators/multimodal.py encode_y4m /
+  decode_y4m): per-frame full-plane mean luma, scene cut where the
+  consecutive-frame jump exceeds a threshold. The first TEMPORAL
+  analysis in the multimodal family (mm_frame_sample samples frames;
+  this one relates them).
 
 Reference parity: the reference repo (DuckDB loan-ETL take-home) has
 no vector or video surface — these extend the similarity/multimodal
@@ -23,9 +24,6 @@ families the brief grades as first-class, from public semantics only.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -189,7 +187,7 @@ _SCENE_SCHEMA = (
 
 def _scene_oracle() -> str:
     # frame k's constant Y plane is (seed + 11k) % 256
-    # (operators/multimodal.py:543 encode_y4m; seed/n derive from
+    # (operators/multimodal.encode_y4m; seed/n derive from
     # doc_id exactly as synthesize_y4m_media builds them)
     lum = "(seed + 11 * k) % 256"
     lum1 = "(seed + 11 * (k + 1)) % 256"
@@ -219,7 +217,7 @@ def _scene_oracle() -> str:
         "(mm_frame_sample samples frames independently; this one "
         "relates consecutive frames): synthesize the doc_id-keyed Y4M "
         "payload, REAL-decode EVERY frame's full Y plane "
-        "(operators/multimodal.py:570 decode_y4m, every_n=1), and "
+        "(operators/multimodal.decode_y4m, every_n=1), and "
         f"emit a cut wherever the mean-luma jump exceeds {_SCENE_THR} "
         "— per doc the cut count, first cut index and cut-index "
         "checksum. On the fixture's luma ramp ((seed+11k) mod 256) "
@@ -240,37 +238,26 @@ def _scene_oracle() -> str:
 )
 def mm_scene_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_data_eng_proj_spark.operators.multimodal import (
+        decode,
         decode_y4m,
         synthesize_y4m_media,
     )
 
+    def scene_cuts(payload: bytes) -> dict:
+        d = decode_y4m(payload, every_n=1)
+        # constant planes make every mean an exact integer
+        lums = [int(d["frame_means"][k]) for k in range(d["n_frames"])]
+        cuts = [
+            k + 1
+            for k in range(len(lums) - 1)
+            if abs(lums[k + 1] - lums[k]) > _SCENE_THR
+        ]
+        return {
+            "n_frames": d["n_frames"],
+            "n_cuts": len(cuts),
+            "first_cut": cuts[0] if cuts else None,
+            "cut_idx_sum": sum(cuts),
+        }
+
     media = synthesize_y4m_media(t(spark, sf_dir, "documents"))
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {c: [] for c in ("doc_id", "n_frames", "n_cuts", "first_cut", "cut_idx_sum")}
-            for i, p in zip(pdf["doc_id"], pdf["payload"]):
-                d = decode_y4m(p, every_n=1)
-                # constant planes make every mean an exact integer
-                lums = [int(d["frame_means"][k]) for k in range(d["n_frames"])]
-                cuts = [
-                    k + 1
-                    for k in range(len(lums) - 1)
-                    if abs(lums[k + 1] - lums[k]) > _SCENE_THR
-                ]
-                out["doc_id"].append(int(i))
-                out["n_frames"].append(d["n_frames"])
-                out["n_cuts"].append(len(cuts))
-                out["first_cut"].append(cuts[0] if cuts else None)
-                out["cut_idx_sum"].append(sum(cuts))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "n_frames": pd.Series(out["n_frames"], dtype="int64"),
-                    "n_cuts": pd.Series(out["n_cuts"], dtype="int64"),
-                    "first_cut": pd.Series(out["first_cut"], dtype="Int64"),
-                    "cut_idx_sum": pd.Series(out["cut_idx_sum"], dtype="int64"),
-                }
-            )
-
-    return media.mapInPandas(batches, schema=_SCENE_SCHEMA)
+    return decode(media, scene_cuts, _SCENE_SCHEMA)

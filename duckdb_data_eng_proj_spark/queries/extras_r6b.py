@@ -42,7 +42,12 @@ from duckdb_data_eng_proj_spark.operators.sketches import (
     md5_slot_sql,
 )
 from duckdb_data_eng_proj_spark.operators.textops import TOK_SQL, tokens, word_ngrams
-from duckdb_data_eng_proj_spark.operators.timeseries import HOURLY_COUNTS_SQL, hourly_counts
+from duckdb_data_eng_proj_spark.operators.timeseries import (
+    HOURLY_COUNTS_SQL,
+    hourly_counts,
+    points,
+    points_sql,
+)
 from duckdb_data_eng_proj_spark.queries.registry import register, t
 
 
@@ -619,7 +624,7 @@ def evt_sequence_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ORDER BY ts, event_id) AS rn_a, "
         "row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts) "
         "ORDER BY ts DESC, event_id DESC) AS rn_d "
-        "FROM events WHERE value IS NOT NULL) "
+        f"FROM events WHERE {points_sql('user_id')} AND value IS NOT NULL) "
         "SELECT user_id, bucket, CAST(COUNT(*) AS BIGINT) AS n, "
         "max(CASE WHEN rn_a = 1 THEN value END) AS open, "
         "max(value) AS high, min(value) AS low, "
@@ -633,14 +638,16 @@ def evt_sequence_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         "first/last observation by the deterministic (ts, event_id) "
         "order, high/low plain min/max. No double is ever summed — "
         "every output is an individual stored value, so cross-engine "
-        "hashing is exact without fixed-point machinery. Plan: both "
+        "hashing is exact without fixed-point machinery. An event "
+        "with a NULL user_id or ts is not a point (the time-series "
+        "NULL rule), on both engines. Plan: both "
         "row_number windows and the final aggregate share the "
         "(user_id, bucket) clustering — ONE shuffle, two in-partition "
         "sorts, then a map-side-combinable agg."
     ),
 )
 def ts_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = t(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    e = points(t(spark, sf_dir, "events"), "user_id").filter(F.col("value").isNotNull())
     bucket = F.date_trunc("hour", F.col("ts"))
     wa = Window.partitionBy("user_id", "bucket").orderBy("ts", "event_id")
     wd = Window.partitionBy("user_id", "bucket").orderBy(
@@ -1639,48 +1646,15 @@ def _dhash_oracle() -> str:
     ),
 )
 def mm_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from typing import Iterator
-
-    import pandas as pd
-
     from duckdb_data_eng_proj_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
+        decode,
         dhash_bmp,
-        encode_bmp_pattern,
+        gradient_bmp,
+        synthesize,
     )
 
-    docs = t(spark, sf_dir, "documents").select("doc_id")
-
-    def synth(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids = pdf["doc_id"].astype("int64")
-            payloads = []
-            for i in ids:
-                seed = int(i) % 16
-                side = seed % 4 + 8
-                payloads.append(encode_bmp_pattern(side, side, seed))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "media_type": "image/bmp",
-                    "payload": payloads,
-                }
-            )
-
-    media = docs.mapInPandas(synth, schema=MEDIA_SCHEMA)
-
-    def hash_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "dhash": pd.Series(
-                        [dhash_bmp(p) for p in pdf["payload"]], dtype="int64"
-                    ),
-                }
-            )
-
-    hashed = media.mapInPandas(hash_batch, schema="doc_id long, dhash long")
+    media = synthesize(t(spark, sf_dir, "documents"), "image/bmp", gradient_bmp)
+    hashed = decode(media, lambda p: {"dhash": dhash_bmp(p)}, "doc_id long, dhash long")
     return hashed.groupBy("dhash").agg(
         F.count("*").cast("bigint").alias("n_images"),
         F.min("doc_id").cast("bigint").alias("canonical_doc"),

@@ -86,6 +86,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # events.ts is INT64 TIMESTAMP(NANOS) in the r1-r3 data vintage,
+        # which the parquet reader rejects unless it reads as raw bigint
+        # nanos (io/sources.event_ts converts). Set here, once, so no
+        # query build changes a session conf.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # InferFiltersFromGenerate turns explode(expr) into a pre-filter
         # `size(expr)>0 AND isnotnull(expr)`; predicate pushdown then
         # inlines the FULL generator expression into that filter below

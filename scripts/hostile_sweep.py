@@ -23,17 +23,12 @@ window over a derived-NULL partition key read NONDETERMINISTIC sums
 exclusion, dedup_exact's NULLS-LAST keep-first sentinel, and the
 stateful stream fn mirroring SQL SUM on NULL values.
 
-Shared-session conf hygiene (added r20): the sweep reuses ONE
-SparkSession across all ops, and a few ops whose fn() runs Spark
-jobs mutate session conf (ts_ewma sets
-spark.sql.legacy.parquet.nanosAsLong) that used to leak into later ops' reads — r17 chased two false positives
-(ts_resample_ohlc, sim_knn_bucket_join post-fix) and the r19 final
-sweep re-surfaced the ts_resample_ohlc artifact when a snapshot
-rebless reordered the enumeration. The sweep now snapshots the
-session's SQL confs (`SET`) once at start and restores the delta
-after EVERY op, making results enumeration-order-invariant; a
-remaining split is therefore real. `--reverse` / `--seed N` reorder
-the enumeration to prove exactly that invariance.
+Shared session: the sweep reuses ONE SparkSession across all ops. No
+op's build changes a session conf (the events reader's
+``nanosAsLong`` is a ``get_spark`` builder config, and
+tests/test_oracle_parity.py asserts the conf per id), so results do
+not depend on enumeration order; `--reverse` / `--seed N` reorder the
+enumeration to show exactly that.
 
 Usage: python scripts/hostile_sweep.py [--reverse | --seed N] [qid ...]
 Writes /tmp/hostile_results.json and prints a summary.
@@ -124,35 +119,6 @@ def _norm(rows):
     return sorted(out)
 
 
-def _conf_snapshot(spark) -> dict:
-    """Session SQL confs as {key: value} (`SET` lists every conf that
-    is session-set or differs from the build default)."""
-    return {r["key"]: r["value"] for r in spark.sql("SET").collect()}
-
-
-def _conf_restore(spark, base: dict) -> list:
-    """Undo any conf delta an op left behind; return the touched keys."""
-    cur = _conf_snapshot(spark)
-    touched = []
-    for k, v in cur.items():
-        if base.get(k) != v:
-            touched.append(k)
-            try:
-                if k in base:
-                    spark.conf.set(k, base[k])
-                else:
-                    spark.conf.unset(k)
-            except Exception:  # noqa: BLE001 — static confs can't mutate
-                pass
-    for k in base.keys() - cur.keys():
-        touched.append(k)
-        try:
-            spark.conf.set(k, base[k])
-        except Exception:  # noqa: BLE001
-            pass
-    return touched
-
-
 def main() -> None:
     build_vintage()
     argv = sys.argv[1:]
@@ -167,7 +133,6 @@ def main() -> None:
         app_name="hostile", input_bytes=10**6, latency_profile=True
     )
     spark.sparkContext.setLogLevel("ERROR")
-    base_conf = _conf_snapshot(spark)
     order = list(REGISTRY.items())
     if reverse:
         order.reverse()
@@ -176,7 +141,6 @@ def main() -> None:
 
         random.Random(seed).shuffle(order)
     results = {}
-    leaks = {}
     for qid, spec in order:
         if only and qid not in only:
             continue
@@ -188,10 +152,6 @@ def main() -> None:
             serr = None
         except Exception as ex:  # noqa: BLE001 — sweep must survive
             got, serr = None, f"{type(ex).__name__}: {str(ex)[:110]}"
-        finally:
-            touched = _conf_restore(spark, base_conf)
-            if touched:
-                leaks[qid] = touched
         con = duckdb.connect()
         for t in TABLES:
             con.execute(
@@ -222,14 +182,10 @@ def main() -> None:
         print(".", end="", flush=True)
     print()
     with open("/tmp/hostile_results.json", "w") as fh:
-        json.dump({"results": results, "conf_leaks": leaks}, fh, indent=1)
+        json.dump({"results": results}, fh, indent=1)
     print(f"{len(results)} non-matching -> /tmp/hostile_results.json")
     for qid, (status, info) in sorted(results.items()):
         print(f"{qid:32s} {status:10s} {info[:110]}")
-    if leaks:
-        print(f"conf leaks restored after {len(leaks)} ops:")
-        for qid, keys in sorted(leaks.items()):
-            print(f"  {qid:32s} {','.join(keys)}")
 
 
 if __name__ == "__main__":

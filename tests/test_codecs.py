@@ -7,16 +7,26 @@ row-padding edge cases that make BMP parsing non-trivial.
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import struct
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+import duckdb_data_eng_proj_spark
 from duckdb_data_eng_proj_spark.operators.multimodal import (
     bmp_stride,
     decode_audio,
     decode_image,
+    dhash_bmp,
     encode_bmp,
+    encode_bmp_pattern,
     encode_wav,
+    encode_wav_wave,
+    resample_wav_linear,
+    resize_bmp_nearest,
 )
 
 
@@ -40,6 +50,43 @@ def test_bmp_padding_is_excluded():
     # whole-row mean would be 255*3/4, not 255
     f = decode_image(encode_bmp(1, 4, 255))
     assert f["mean_pixel"] == 255.0
+
+
+@given(width=st.integers(1, 40), height=st.integers(1, 24), seed=st.integers(0, 300))
+@settings(max_examples=60, deadline=None)
+def test_bmp_pattern_roundtrip(width, height, seed):
+    payload = encode_bmp_pattern(width, height, seed)
+    f = decode_image(payload)
+    assert (f["format"], f["width"], f["height"]) == ("bmp", width, height)
+    total = sum(
+        (seed * 31 + x * 97 + y * 13) % 251 for x in range(width) for y in range(height)
+    )
+    assert f["mean_pixel"] == total / (width * height)
+    # same-size nearest-neighbor resize is the identity on the bytes
+    assert resize_bmp_nearest(payload, width, height) == payload
+
+
+def _with_header_field(payload: bytes, fmt: str, offset: int, value: int) -> bytes:
+    return payload[:offset] + struct.pack(fmt, value) + payload[offset + struct.calcsize(fmt) :]
+
+
+@pytest.mark.parametrize(
+    "read",
+    [decode_image, dhash_bmp, lambda p: resize_bmp_nearest(p, 4, 4)],
+    ids=["decode_image", "dhash_bmp", "resize_bmp_nearest"],
+)
+def test_bmp_readers_reject_unsupported_layouts(read):
+    """Every BMP reader goes through one header check: anything but a
+    whole uncompressed 24-bpp raster raises ValueError."""
+    good = encode_bmp_pattern(9, 9, 3)
+    for bad in (
+        _with_header_field(good, "<H", 28, 32),  # 32 bpp
+        _with_header_field(good, "<I", 30, 1),  # BI_RLE8 compression
+        good[:-1],  # truncated raster
+        good[:20],  # truncated header
+    ):
+        with pytest.raises(ValueError):
+            read(bad)
 
 
 def test_ppm_roundtrip():
@@ -230,3 +277,34 @@ def test_wav_dsp_rejects_truncated_payload():
     good = encode_wav_wave(100, 7)
     with pytest.raises(ValueError):  # data chunk shorter than header n
         decode_wav_dsp(good[:-10])
+
+
+@given(n_samples=st.integers(2, 300), seed=st.integers(0, 65535))
+@settings(max_examples=40, deadline=None)
+def test_resample_at_source_rate_is_identity(n_samples, seed):
+    f = resample_wav_linear(encode_wav_wave(n_samples, seed), 8000)
+    assert (f["src_rate"], f["dst_rate"]) == (8000, 8000)
+    assert f["n_out"] == f["n_in"] == n_samples
+    assert f["sum_u_out"] == sum((seed + 97 * k) % 65536 for k in range(n_samples))
+    assert f["rs_bytes"] == 44 + 2 * n_samples
+
+
+def test_map_in_pandas_only_in_the_two_stage_primitives():
+    """The Arrow batch-to-frame contract lives in
+    ``operators/multimodal.synthesize`` and ``decode``; any other
+    ``mapInPandas`` call is a second copy of it."""
+    root = pathlib.Path(duckdb_data_eng_proj_spark.__file__).parent
+    sites = set()
+    for path in sorted(root.rglob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "mapInPandas"
+                ):
+                    sites.add((path.relative_to(root).as_posix(), getattr(top, "name", None)))
+    assert sites == {
+        ("operators/multimodal.py", "synthesize"),
+        ("operators/multimodal.py", "decode"),
+    }

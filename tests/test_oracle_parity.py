@@ -47,9 +47,12 @@ def _normalize_rows(rows, colnames):
 
 def _assert_matches_oracle(qid, spark, oracle_con):
     spec = REGISTRY[qid]
+    conf = spark.conf.getAll
     df = spec.fn(spark, SF_DIR)
     spark_rows = df.collect()
     spark_cols = df.columns
+    # a build that changes a session conf leaks it into every later id
+    assert spark.conf.getAll == conf, f"{qid}: session conf changed"
 
     if spec.oracle is None:
         assert len(spark_rows) >= 0  # rows-only smoke

@@ -491,6 +491,14 @@ def null_vintage_dir(tmp_path_factory):
         (400 + k, f"2024-03-02 {hm}:00", 5, None, 3.0 * k if k < 4 else None, "{}")
         for k, hm in enumerate(["08:05", "08:45", "09:45", "11:45", "12:45"])
     ]
+    # user 6: NULL-ts events of distinct values — a NULL-ts event is no
+    # point of an hourly bucket (DuckDB's row_number windows over the
+    # NULL derived bucket key pick another open/close than Spark's, and
+    # not the same ones from run to run)
+    ev += [
+        (500 + k, None, 6, "view", v, "{}")
+        for k, v in enumerate([23.9, 82.62, 41.5, 7.25, 60.1, 15.3])
+    ]
     con.executemany("INSERT INTO events VALUES (?, ?, ?, ?, ?, ?)", ev)
     con.execute(f"COPY events TO '{d}/events.parquet' (FORMAT PARQUET)")
     # orders with a NULL o_totalprice, a NULL o_orderstatus and a NULL
@@ -544,6 +552,8 @@ def null_vintage_dir(tmp_path_factory):
         # r17 sessionize rule: NULL-ts events excluded on both engines
         "ext_sessionize",
         "evt_session_paths",
+        # the hourly-series NULL rule on raw points
+        "ts_resample_ohlc",
     ],
 )
 def test_null_vintage_cross_engine(spark, null_vintage_dir, qid):
