@@ -106,14 +106,18 @@ def hyperplane_sig(emb: Column, planes: list[list[float]]) -> Column:
     sim_ann_recall_eval) still indexed embedding[0..63] per dimension,
     which ABORTS under ANSI on any embedding shorter than the planes
     (confirmed live, r16 review) — exactly the propagate-by-hand
-    failure this helper removes."""
+    failure this helper removes.
+
+    Each plane is one SQL array literal, 3 py4j round trips: ``F.array`` over
+    64 ``F.lit``s cost about 260 py4j round trips per plane for the same
+    optimized plan (Catalyst folds the array either way)."""
     return sum(
         [
             F.when(
                 dot(
                     emb,
                     F.slice(
-                        F.array(*[F.lit(v) for v in plane]),
+                        F.expr("array(" + ", ".join(f"{float(v)!r}D" for v in plane) + ")"),
                         1,
                         F.size(emb),
                     ),

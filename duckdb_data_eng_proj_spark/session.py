@@ -17,6 +17,15 @@ Scale posture (100 TB design point, tested on local[N]):
   see functions.clock).
 - Arrow enabled: every Python-boundary exchange (pandas UDFs,
   toPandas) is columnar-batched.
+- DataFrame origin capture off
+  (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+  PySpark wraps every ``functions``/Column call in py4j round trips
+  that read the active session and a conf and set, then clear, a
+  JVM call-site origin: ``F.col("x")`` costs 13 round trips instead of
+  3, and plan building is the largest layer at small inputs. The cost:
+  an analysis or runtime error's ``== DataFrame ==`` fragment names the
+  JVM frame (``NativeMethodAccessorImpl``) instead of the Python file
+  and line; the error class and message are unchanged.
 """
 
 from __future__ import annotations
@@ -68,6 +77,15 @@ def get_spark(
     pays off when runtime stats change the plan — for sub-GB inputs it
     can't, so the profile trades it (and tiny-shuffle compression) for
     latency. Default posture keeps AQE on (the 100 TB configuration).
+
+    Origin capture is switched off here, as a builder config, because
+    PySpark reads ``spark.python.sql.dataFrameDebugging.enabled`` once
+    per process (``pyspark.errors.utils.is_debugging_enabled``, at the
+    first ``functions``/Column call; off if no session is active then)
+    and caches it, so a later ``spark.conf.set`` does nothing. A
+    process whose first session was built elsewhere (a vanilla
+    ``SparkSession.builder``, as in ``scripts/drive_all.py``) keeps
+    origin capture on even if it later calls ``get_spark``.
     """
     if cpus is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -86,6 +104,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # no per-call JVM origin capture: ~10 py4j round trips saved per
+        # Column call (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # events.ts is INT64 TIMESTAMP(NANOS) in the r1-r3 data vintage,
         # which the parquet reader rejects unless it reads as raw bigint
         # nanos (io/sources.event_ts converts). Set here, once, so no

@@ -1,6 +1,7 @@
 """Full driver mimic: every queries() entry vs oracle at sf0.01, timed."""
-import sys, time
-sys.path.insert(0, "/root/repo")
+import os, sys, time
+# the tree this script sits in, not an installed or fixed-path copy
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 spark = (SparkSession.builder.master("local[8]")

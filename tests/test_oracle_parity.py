@@ -98,7 +98,12 @@ def latency_profile(spark, request):
             spark.conf.set(k, v)
 
 
-@pytest.mark.parametrize("qid", LSH_DEDUP_OPS)
+# the hyperplane-sketch family beside the benchmarked sim_knn_bucket_join:
+# all four build their signature with operators/vectors.hyperplane_sig
+_HYPERPLANE_OPS = ("sim_lsh_hyperplane", "sim_range_search", "sim_ann_recall_eval")
+
+
+@pytest.mark.parametrize("qid", LSH_DEDUP_OPS + _HYPERPLANE_OPS)
 def test_lsh_dedup_op_matches_oracle_under_latency_profile(qid, latency_profile, oracle_con):
     """The benchmark runs these ops under the latency profile; the test
     above only checks the default (AQE) profile."""
